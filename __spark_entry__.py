@@ -245,9 +245,9 @@ def q_cdc_changefeed_sync(spark, sf_dir):
     (streaming/changefeed.ChangeFeedSync — Delta-CDF-as-a-source; reference
     analog: downstream post-processing consuming the date-windowed incremental
     re-read, TaskConfiguration.java:225-247): a source table is built in-query
-    (two merges), and a TARGET table is fed ONLY by the source's snapshot-step
-    diffs (manifest-pruned changes_between, ledgered exactly-once apply,
-    durable position blob). The target's final live state must equal the LWW
+    (two merges), and a TARGET table is fed ONLY by the source's covering
+    snapshot diffs (manifest-pruned changes_between, ledgered exactly-once
+    apply, durable position blob). The target's final live state must equal the LWW
     oracle computed directly from the feed — convergence through the diff
     channel, verified independently in DuckDB."""
     import tempfile
@@ -300,7 +300,7 @@ def q_cdc_changefeed_agg(spark, sf_dir):
     sync = AggFeedSync(src, tgt, f"{root}/state", group_cols=["conv_id"],
                        sum_cols={"sum_turn": "turn_idx"})
     src.merge(feed.filter(F.col("lsn") <= mid), epoch_id="a")
-    sync.sync_once()  # deltas fold per snapshot, in order
+    sync.sync_once()  # each sync folds ONE covering diff (position, head]
     src.merge(feed.filter(F.col("lsn") > mid), epoch_id="b")
     sync.sync_once()
     return (
@@ -313,7 +313,7 @@ def q_cdc_changefeed_minmax(spark, sf_dir):
     """Delta-maintained MIN/MAX view over the change feed (streaming/changefeed
     AggFeedSync min_cols/max_cols — the IVM case monoid folding cannot do:
     extremes are not retractable, so groups hit by a delete or an LWW
-    replacement are re-aggregated from the source at that step's snapshot,
+    replacement are re-aggregated from the source at the diff's TO snapshot,
     bucket-pruned + semi-joined, under the cdf-<n>/mm maintenance marker;
     insert-only groups still fold O(diff)). The per-conversation
     COUNT/SUM/MIN/MAX view maintained only from snapshot diffs across two

@@ -71,8 +71,9 @@ def _family_index(epoch_id: str) -> tuple[str | None, int | None]:
     if base.startswith("stream-") and base[len("stream-"):].isdigit():
         return "stream", int(base[len("stream-"):])
     if base.startswith("cdf-") and base[len("cdf-"):].isdigit():
-        # change-feed consumer epochs: one per source snapshot id, contiguous
-        # by construction (streaming/changefeed.py)
+        # change-feed consumer epochs: cdf-<to> per covering diff, increasing
+        # but not contiguous (streaming/changefeed.py); the watermark still
+        # settles them — every id <= the recorded position is applied
         return "cdf", int(base[len("cdf-"):])
     return None, None
 

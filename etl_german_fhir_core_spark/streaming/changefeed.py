@@ -1,25 +1,35 @@
 """Streaming change-feed consumer: tail a SnapshotTable's commits and apply
-each snapshot-step diff downstream, in order, exactly once — the Delta CDF /
-Iceberg incremental-read pattern as a SOURCE, not just a point query
-(VERDICT r04 next #8: changes_between existed, but consumers had to poll
-snapshots by hand).
+them downstream exactly once — the Delta CDF / Iceberg incremental-read
+pattern as a SOURCE, not just a point query (VERDICT r04 next #8:
+changes_between existed, but consumers had to poll snapshots by hand).
 
 Reference analog: the date-windowed incremental re-read that downstream OMOP
-post-processing consumes (TaskConfiguration.java:225-247) — here the "window"
-is the snapshot chain itself, so a consumer never re-reads the table.
+post-processing consumes (TaskConfiguration.java:225-247) — a whole
+``[beginDate, endDate]`` window applied in one pass; here the window is
+``(position, head]`` of the snapshot chain, so a consumer never re-reads the
+table.
 
-Scale shape: each step is one manifest-pruned diff (only buckets whose file
-lists changed are scanned — changes_between) plus one keyed LWW merge on the
-target; a consumer lagging N commits does N such steps, never O(table) work.
+Scale shape: each sync is ONE covering diff — a net, manifest-pruned
+changes_between(position, head) (only buckets whose file lists changed are
+scanned, each at two snapshots) plus one keyed LWW merge on the target. A
+consumer lagging N commits pays one diff and one target commit, not N: the
+catch-up cost follows the changed buckets, never the lag or the table size.
 Position and application are decoupled crash-safely:
 
-- the applied diff commits under epoch ``cdf-<to_snapshot>`` in the TARGET's
-  own ledger → re-applying after a crash is the idempotent skip;
-- the position blob advances only AFTER the merge → a crash between the two
-  re-derives the same (from, to) diff and hits the skip;
-- consumer epochs are a contiguous ledger family (one per source snapshot),
-  so the bounded-ledger watermark settles them — a year of tailing does not
-  grow the target manifest.
+- the applied diff commits under epoch ``cdf-<to>`` in the TARGET's own
+  ledger → re-applying after a crash is the idempotent skip;
+- the position blob advances only AFTER the commit;
+- crash-replay pin: a crash between the two leaves ``cdf-<h>`` (h > position)
+  in the target ledger; the next sync re-derives exactly ``(position, h]``
+  under that id — hitting the skip — before it diffs on to the head, so a
+  source that advanced meanwhile can never get a window applied twice;
+- ``cdf-<to>`` ids are increasing covering ids, settled by the bounded-ledger
+  watermark once the position is durable — a year of tailing does not grow
+  the target manifest.
+
+A net diff never delivers a key born and deleted inside one window: such a
+key leaves no replica tombstone and no pure-delta ``n_rows = 0`` view row.
+Live rows are identical to step-by-step tailing either way.
 """
 
 from __future__ import annotations
@@ -34,6 +44,7 @@ from etl_german_fhir_core_spark.lake.table import (
     LSN_COL,
     SnapshotTable,
     SnapshotExpiredError,
+    _family_index,
 )
 
 
@@ -92,13 +103,20 @@ class ChangeFeedSync:
     # ------------------------------------------------------------------ sync
 
     def sync_once(self) -> list[int]:
-        """Apply every source snapshot committed past the recorded position;
-        return the applied snapshot ids. Safe to call from any cadence driver
-        (a scheduler, foreachBatch — see :meth:`stream`); every step is
-        individually crash-safe."""
+        """Bring the target up to the source head with ONE covering diff
+        ``changes_between(position, head)`` applied under ``cdf-<head>``;
+        return the covered source snapshot ids ``position+1 .. head``. Safe to
+        call from any cadence driver (a scheduler, foreachBatch — see
+        :meth:`stream`).
+
+        Crash-replay pin: when the target ledger already holds ``cdf-<h>``
+        with h > position (a crash hit between that commit and the position
+        write), the window is ``(position, h]`` instead — its replay hits the
+        ledger skips — and the same call then continues from h to the head.
+        Without the pin a source that advanced meanwhile would re-derive a
+        wider window under a fresh id and apply ``(position, h]`` twice."""
         head = self.source.current_snapshot_id()
         pos = self.position()
-        applied: list[int] = []
         self._sync_renames()
         oldest = self.source.oldest_readable_snapshot()
         if pos < oldest:
@@ -113,20 +131,32 @@ class ChangeFeedSync:
             self._bootstrap(head)
             self._record(head)
             return [head]
+        covered = list(range(pos + 1, head + 1))
         while pos < head:
-            nxt = pos + 1  # snapshot ids are contiguous (commit = parent + 1)
+            to = self._pinned(pos) or head
             diff = self.source.changes_between(
-                pos, nxt, emit_preimage=self._preimage
+                pos, to, emit_preimage=self._preimage
             )
-            self._apply(diff, f"cdf-{nxt}")
-            self._record(nxt)  # position only advances AFTER the applied merge
-            self.target.mark_settled(f"cdf-{nxt}")  # folds at the next commit
-            applied.append(nxt)
-            pos = nxt
-        return applied
+            self._apply(diff, f"cdf-{to}")
+            self._record(to)  # position only advances AFTER the applied commit
+            self.target.mark_settled(f"cdf-{to}")  # folds at the next commit
+            pos = to
+        return covered
+
+    def _pinned(self, pos: int) -> int | None:
+        """Highest ``cdf-<h>`` the target ledger holds — tail entries
+        (``/mm`` markers included) or the settled watermark — when h is past
+        ``pos``: the window a crashed sync committed but never recorded."""
+        m = self.target.manifest()
+        h = m.get("epochs_through", {}).get("cdf", 0)
+        for e in m["committed_epochs"]:
+            fam, idx = _family_index(e)
+            if fam == "cdf":
+                h = max(h, idx)
+        return h if h > pos else None
 
     def _apply(self, diff, epoch_id: str) -> None:
-        """Apply one snapshot-step change batch to the target — a keyed LWW
+        """Apply one covering change batch to the target — a keyed LWW
         merge for the replica default; subclasses reinterpret the batch (e.g.
         AggFeedSync folds signed deltas). Must be idempotent per epoch_id."""
         self.target.merge(diff, epoch_id=epoch_id)
@@ -189,7 +219,7 @@ class ChangeFeedSync:
 class AggFeedSync(ChangeFeedSync):
     """Delta-maintained AGGREGATE view over the change feed — incremental view
     maintenance (the Delta-CDF IVM pattern): the target table holds per-group
-    COUNT/SUM monoid aggregates updated by SIGNED deltas from each snapshot
+    COUNT/SUM monoid aggregates updated by SIGNED deltas from each covering
     diff. Postimage rows (op I/U) add their contribution; preimage/delete rows
     (U_pre/D — requested via ``emit_preimage``) RETRACT the replaced one.
 
@@ -222,7 +252,7 @@ class AggFeedSync(ChangeFeedSync):
     under retraction — deleting the current max says nothing about the next
     one — so the sync splits each diff the way classic IVM does:
 
-    - **insert-only groups** (no ``D``/``U_pre`` row in this step's diff)
+    - **insert-only groups** (no ``D``/``U_pre`` row in this sync's diff)
       fold monoid-style — extremes only widen under inserts, so
       ``max(stored, incoming)`` is exact, still O(diff);
     - **dirty groups** (any retraction) are RE-AGGREGATED authoritatively
@@ -230,14 +260,15 @@ class AggFeedSync(ChangeFeedSync):
       (when ``group_cols[0]`` is the source's leading key) semi-joined to
       the dirty keys, O(rows of touched groups), never O(table) — and
       committed via ``merge_replace_keys`` under the ``cdf-<n>/mm``
-      maintenance marker (orders at its base epoch's index, so the settling
-      ledger family stays contiguous). Replace semantics also mean a fully-
+      maintenance marker (orders at its base epoch's index, so the watermark
+      settles it with its base epoch). Replace semantics also mean a fully-
       deleted group is REMOVED rather than left as the ``n_rows = 0``
       artifact of the pure-delta mode.
 
     Crash-safety: both commits are pure functions of (diff, source@to) —
     clean fold under ``cdf-<n>``, dirty replace under ``cdf-<n>/mm``, keys
-    disjoint by construction — so a crash between them replays to the
+    disjoint by construction — and the crash-replay pin re-derives the same
+    ``(position, to]`` window, so a crash between them replays to the
     identical state via each commit's own ledger skip; the position blob
     advances only after both."""
 
@@ -270,8 +301,8 @@ class AggFeedSync(ChangeFeedSync):
     def _resolve(self, df, col: str) -> str:
         """Current name of a configured source column inside a change batch
         (tracks source rename_column without reconfiguring the consumer).
-        The rename map is cached per applied step (_apply resets it) — one
-        manifest read per step at most, not one per configured column."""
+        The rename map is cached per applied diff (_apply resets it) — one
+        manifest read per diff at most, not one per configured column."""
         if col in df.columns:
             return col
         if self._rmap is None:
@@ -284,7 +315,7 @@ class AggFeedSync(ChangeFeedSync):
         )
 
     def _apply(self, diff, epoch_id: str) -> None:
-        self._rmap = None  # re-read the rename map at most once per step
+        self._rmap = None  # re-read the rename map at most once per diff
         if not self.min_cols and not self.max_cols:
             self._fold(diff, epoch_id)
             return
@@ -298,7 +329,7 @@ class AggFeedSync(ChangeFeedSync):
         if ren:
             diff = diff.withColumnsRenamed(ren)
         # IVM split (docstring): insert-only groups fold, retracted groups
-        # re-aggregate from the source at this step's `to` snapshot. The dirty
+        # re-aggregate from the source at this diff's `to` snapshot. The dirty
         # key set is diff-sized and consumed by four jobs (emptiness check,
         # anti-join, bucket-id collect, replace scope) — persist + eager count
         # so the diff's join plan isn't re-derived per consumer.
@@ -389,7 +420,7 @@ class AggFeedSync(ChangeFeedSync):
 
         r06 (VERDICT r05 wrong #2): the semi-join side is NOT hinted to
         broadcast — the dirty-group key set is unbounded (a bulk retraction
-        step can dirty millions of groups, exactly when re-aggregation does
+        diff can dirty millions of groups, exactly when re-aggregation does
         the most work), and a forced broadcast of it is a driver/executor
         OOM. AQE still picks a broadcast at runtime whenever the key set is
         actually small, so the common path's plan is unchanged."""

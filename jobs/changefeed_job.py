@@ -1,8 +1,8 @@
 """spark-submit entry point: tail a SnapshotTable's change feed downstream.
 
 Two consumer modes over the same exactly-once machinery
-(streaming/changefeed.py — snapshot-step diffs, ledgered cdf-<n> epochs,
-durable store-blob position):
+(streaming/changefeed.py — one covering snapshot diff per sync, ledgered
+cdf-<n> epochs, durable store-blob position):
 
   replica  apply each diff to a same-schema target table (Delta-CDF replica)
   agg      maintain a delta-folded aggregate view (COUNT always; SUM via
@@ -20,7 +20,8 @@ Usage:
 rate-clock streaming query drives sync_once per trigger for --ticks triggers.
 Restartable: position lives in the state blob, application in the target's
 ledger — re-submitting after a kill resumes exactly once. Prints one JSON
-line with the applied snapshot ids and final position.
+line with the applied snapshot ids, the target commits they cost and the
+final position.
 """
 
 from __future__ import annotations
@@ -110,6 +111,7 @@ def main() -> None:
             max_cols=dict(args.max),
         )
 
+    tgt_sid0 = tgt.current_snapshot_id()
     t0 = time.time()
     if args.once:
         applied = sync.sync_once()
@@ -125,6 +127,9 @@ def main() -> None:
     print(json.dumps({
         "mode": args.mode,
         "applied": applied,
+        # target snapshots this run committed: 1 per sync (2 with a /mm
+        # re-aggregation), whatever the number of source commits applied
+        "target_commits": tgt.current_snapshot_id() - tgt_sid0,
         "position": sync.position(),
         "source_head": src.current_snapshot_id(),
         "target_rows": tgt.read().count(),

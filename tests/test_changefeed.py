@@ -100,8 +100,8 @@ def test_diff_stream_converges_exactly_once_across_crash(spark, tmp_path):
     pd.testing.assert_frame_equal(_live(src), _live(tgt))
     assert _live(tgt).loc[lambda d: d.conv_id == "c1", "text"].iloc[0] == "v1-new"
     assert "c2" not in set(_live(tgt).conv_id)
-    # exactly-once: one target snapshot per applied diff, none for the replay
-    assert tgt.current_snapshot_id() == 3
+    # exactly-once: one target snapshot per sync, none for the replay
+    assert tgt.current_snapshot_id() == 2
     # consumer epochs are a settling ledger family — tail stays bounded
     assert len(tgt.committed_epochs()) <= 2
 
@@ -302,7 +302,7 @@ def test_agg_feed_delta_maintained_view(spark, tmp_path):
 def test_agg_feed_minmax_dirty_group_reaggregation(spark, tmp_path):
     """MIN/MAX view maintenance: extremes are not retractable from deltas, so
     groups with a retraction (D/U_pre) in a step's diff are re-aggregated from
-    the source at that step's snapshot (bucket-pruned + semi-join), committed
+    the source at the diff's TO snapshot (bucket-pruned + semi-join), committed
     under the cdf-<n>/mm maintenance marker; insert-only groups still fold
     monoid-style. Covers: max shrinks when its row is deleted, max shrinks
     when its row is updated DOWN, fully-deleted group is REMOVED, crash
@@ -614,3 +614,191 @@ def test_agg_feed_bulk_retraction_large_dirty_set(spark, tmp_path):
            for r in src.read().groupBy("conv_id")
            .agg(F.count("*").alias("n"), F.max("score").alias("hi")).collect()}
     assert len(got) == N and got == exp
+
+
+_SCORED = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("score", T.IntegerType(), True),
+        T.StructField("ts", T.TimestampType(), True),
+    ]
+)
+_VIEW = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("n_rows", T.LongType(), True),
+        T.StructField("sum_score", T.LongType(), True),
+        T.StructField("max_score", T.IntegerType(), True),
+    ]
+)
+
+
+def _scored(spark, rows, val="score"):
+    return spark.createDataFrame(
+        rows, f"op string, lsn long, conv_id string, turn_idx int, "
+        f"{val} int, ts timestamp"
+    )
+
+
+def _view_sync(src, tgt, state, store=None):
+    return AggFeedSync(src, tgt, state, group_cols=["conv_id"],
+                       sum_cols={"sum_score": "score"},
+                       max_cols={"max_score": "score"}, store=store)
+
+
+def _view(tgt):
+    return {
+        r["conv_id"]: (r["n_rows"], r["sum_score"], r["max_score"])
+        for r in tgt.read().filter(F.col("n_rows") > 0).collect()
+    }
+
+
+def _direct_view(src):
+    df = src.read()
+    val = "points" if "points" in df.columns else "score"
+    return {
+        r["conv_id"]: (r["n"], r["s"], r["hi"])
+        for r in df.groupBy("conv_id")
+        .agg(F.count("*").alias("n"),
+             F.sum(F.coalesce(F.col(val), F.lit(0))).alias("s"),
+             F.max(val).alias("hi"))
+        .collect()
+    }
+
+
+def test_crash_then_source_advance_replays_pinned_window_once(spark, tmp_path):
+    """Crash between a sync's target commit cdf-<h> and its position write,
+    then MORE source commits before the resume: the resume must replay
+    exactly (pos, h] under cdf-<h> (the ledger skip) and only then diff
+    (h, head]. Re-deriving a wider (pos, head] window under a fresh epoch id
+    would fold (pos, h]'s signed deltas into the view a second time."""
+    import pandas as pd
+
+    src = SnapshotTable.create(spark, str(tmp_path / "src"), _SCORED,
+                               ["conv_id", "turn_idx"], num_buckets=4)
+    rep = SnapshotTable.create(spark, str(tmp_path / "rep"), _SCORED,
+                               ["conv_id", "turn_idx"], num_buckets=4)
+    agg = SnapshotTable.create(spark, str(tmp_path / "agg"), _VIEW,
+                               ["conv_id"], num_buckets=4)
+    # each consumer's second position write is lost
+    syncs = [
+        ChangeFeedSync(src, rep, str(tmp_path / "rep_state"),
+                       store=_FailNthPut(fail_on=2)),
+        _view_sync(src, agg, str(tmp_path / "agg_state"),
+                   store=_FailNthPut(fail_on=2)),
+    ]
+
+    src.merge(_scored(spark, [
+        ("U", 1, "c1", 0, 10, TS0),
+        ("U", 2, "c1", 1, 50, TS0),
+        ("U", 3, "c2", 0, 7, TS0),
+    ]), epoch_id="e000001")
+    for s in syncs:
+        assert s.sync_once() == [1]
+
+    # window (1, 2] is insert-only, so the view folds it in one commit too
+    src.merge(_scored(spark, [
+        ("U", 4, "c1", 2, 20, TS0),
+        ("U", 5, "c3", 0, 5, TS0),
+    ]), epoch_id="e000002")
+    before = [s.target.current_snapshot_id() for s in syncs]
+    for s, sid in zip(syncs, before):
+        with pytest.raises(TimeoutError, match="injected"):
+            s.sync_once()
+        assert s.position() == 1 and s.target.has_epoch("cdf-2")
+        assert s.target.current_snapshot_id() == sid + 1
+
+    # the source advances past h = 2: a delete, an LWW update lowering c1's
+    # max (50 -> 1), and an insert
+    src.merge(_scored(spark, [
+        ("D", 10, "c2", 0, None, TS0 + dt.timedelta(seconds=60)),
+        ("U", 11, "c1", 1, 1, TS0 + dt.timedelta(seconds=61)),
+    ]), epoch_id="e000003")
+    src.merge(_scored(spark, [("U", 12, "c4", 0, 9, TS0)]),
+              epoch_id="e000004")
+    for s in syncs:
+        assert s.sync_once() == [2, 3, 4]
+        assert s.position() == 4
+
+    pd.testing.assert_frame_equal(_live(src), _live(rep))
+    assert _view(agg) == _direct_view(src) == {
+        "c1": (3, 31, 20), "c3": (1, 5, 5), "c4": (1, 9, 9)
+    }
+    # one commit for (1, 2]; then one (replica) or fold + /mm (view) for (2, 4]
+    assert rep.current_snapshot_id() == before[0] + 2
+    assert before[1] + 2 <= agg.current_snapshot_id() <= before[1] + 3
+
+
+def test_lagging_consumer_catches_up_in_one_commit(spark, tmp_path):
+    """A consumer 20 source commits behind — upserts, deletes, an LWW loser,
+    a key born and deleted inside the lag, a MoR compaction and a column
+    rename — catches up with ONE covering diff: the replica gains one data
+    commit, the view at most two (fold + /mm). Both end identical to twins
+    synced after every source commit (replica live rows incl. _lsn; view
+    rows with n_rows > 0, since a net diff never sees the born-and-deleted
+    key that leaves the twins a tombstone)."""
+    import pandas as pd
+
+    src = SnapshotTable.create(spark, str(tmp_path / "src"), _SCORED,
+                               ["conv_id", "turn_idx"], num_buckets=4,
+                               merge_mode="mor")
+
+    def _pair(tag):
+        rep = SnapshotTable.create(spark, str(tmp_path / f"rep_{tag}"),
+                                   _SCORED, ["conv_id", "turn_idx"],
+                                   num_buckets=4)
+        agg = SnapshotTable.create(spark, str(tmp_path / f"agg_{tag}"),
+                                   _VIEW, ["conv_id"], num_buckets=4)
+        return (ChangeFeedSync(src, rep, str(tmp_path / f"rs_{tag}")),
+                _view_sync(src, agg, str(tmp_path / f"as_{tag}")))
+
+    lag, twin = _pair("lag"), _pair("twin")
+    src.merge(_scored(spark, [
+        ("U", i + 1, f"c{i % 4}", i // 4, 10 * (i + 1), TS0) for i in range(8)
+    ]), epoch_id="e000001")
+    for s in (*lag, *twin):
+        s.sync_once()
+
+    val = "score"
+    for i in range(20):
+        ts = TS0 + dt.timedelta(minutes=i + 1)
+        if i == 7:
+            src.compact(epoch_id="fold")
+        elif i == 12:
+            src.rename_column("score", "points", epoch_id="migrate")
+            val = "points"
+        else:
+            lsn = 100 * (i + 1)
+            rows = [("U", lsn, f"c{i % 5}", 10 + i, 3 * i, ts)]
+            if i % 4 == 0:  # LWW winner replacing an existing row
+                rows.append(("U", lsn + 1, f"c{i % 4}", 0, i, ts))
+            if i == 3:
+                rows.append(("U", lsn + 2, "born", 0, 77, ts))
+            if i == 5:
+                rows.append(("D", lsn + 2, "born", 0, None, ts))
+            if i == 9:
+                rows.append(("D", lsn + 2, "c1", 1, None, ts))
+            if i == 15:  # LWW loser: older than the stored row
+                rows.append(("U", lsn + 2, "c2", 0, 999, TS0))
+            if i == 17:
+                rows.append(("D", lsn + 2, "c3", 1, None, ts))
+            src.merge(_scored(spark, rows, val), epoch_id=f"e{i + 2:06d}")
+        for s in twin:
+            s.sync_once()
+
+    head = src.current_snapshot_id()
+    assert head - lag[0].position() == 20
+    rep_sid = lag[0].target.current_snapshot_id()
+    agg_sid = lag[1].target.current_snapshot_id()
+    for s in lag:
+        assert s.sync_once() == list(range(2, head + 1))
+    rep = lag[0].target
+    assert [
+        rep.manifest(sid)["epoch_id"]
+        for sid in range(rep_sid + 1, rep.current_snapshot_id() + 1)
+    ] == ["cdf-rename-score-points", f"cdf-{head}"]  # rename replay + 1 diff
+    assert 1 <= lag[1].target.current_snapshot_id() - agg_sid <= 2
+
+    pd.testing.assert_frame_equal(_live(rep), _live(twin[0].target))
+    assert _view(lag[1].target) == _view(twin[1].target) == _direct_view(src)
