@@ -915,8 +915,9 @@ def q_dedup_simhash_pairs(spark, sf_dir):
     """End-to-end SimHash near-dup pipeline: Manku-style block-combination
     candidate tables (GUARANTEED recall within Hamming radius max_hamming:
     d bit-errors touch ≤d of the d+g blocks, so some whole g-combination
-    agrees) + a JVM-side bit_count(xor)≤d Hamming pre-filter + candidate-only
-    exact Jaccard verify (operators/dedup.simhash_pairs). The contract corpus's
+    agrees) + a popcount(xor)≤d Hamming filter in the candidate kernel +
+    candidate-only exact Jaccard verify over shingle-hash sets
+    (operators/dedup.simhash_pairs). The contract corpus's
     j≥0.5 pairs all sit within Hamming 12 of each other, so the exact-Jaccard
     pair SQL is its oracle — closing the loop on the one family (raw
     signatures) that is inherently rows-only."""

@@ -67,7 +67,12 @@ def tokenize_ws(col: Column | str) -> Column:
     (``regexp_replace('\\s+', ' ')`` + trim) only for ``split`` to re-scan it;
     splitting on ``\\s+`` directly skips the rebuild, and ``array_remove``
     drops the leading/trailing empty tokens a whitespace-edged string yields
-    (r06, guide §1.2 per-task work; measured ~0.4 s/pass at sf1.0)."""
+    (r06, guide §1.2 per-task work; measured ~0.4 s/pass at sf1.0).
+
+    Degenerate input: an empty or whitespace-only string yields an EMPTY
+    array (the split chain yields ``[""]``). So such a doc has no shingle at
+    any n — like every doc with fewer than n tokens — and appears in no pair
+    of the shingle-based dedup operators (n-gram Jaccard, MinHash, SimHash)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.array_remove(F.split(F.lower(F.translate(c, _CTRL_CHARS, "")), r"\s+"), "")
 

@@ -1,18 +1,22 @@
 """Deduplication operator family for large-scale training-data pipelines.
 
-All variants are pure DataFrame compositions (shuffle-conscious, no Python in the hot
-path except where noted):
+All variants are DataFrame compositions (shuffle-conscious; Python only in
+the Arrow-batched numpy kernels noted below):
 
 - exact: normalize → group on content (or 64-bit fingerprint) → keep min id.
-- n-gram Jaccard: shingle → explode → self-join on shingle → pair-count / union-size.
+- n-gram Jaccard: per-doc shingle-hash sets (:func:`_shingle_hash_sets`) staged
+  once → numpy intersection-count kernel over the whole corpus.
 - MinHash + LSH: k hash functions via xxhash64(shingle, seed) → min per seed →
-  band signatures → band-bucket self-join → candidate pairs (verify with Jaccard).
-- SimHash: weighted bit-vote over shingle hashes → 64-bit signature → bucket by
-  rotated prefixes for near-match candidates.
+  band signatures → band-bucket self-join → candidate pairs.
+- SimHash: bit-vote over shingle hashes → 64-bit signature → block-combination
+  candidate tables scanned by a numpy kernel, Hamming-filtered.
 
-Scale notes: the explode self-join is bounded by document shingle counts; LSH keeps
-the candidate set near-linear (band buckets), which is the 100 TB path — exact
-pairwise Jaccard is only for small corpora / verification.
+Exact Jaccard has one representation: the per-doc shingle-hash set frame.
+The n-gram kernel counts intersections over it; MinHash and SimHash verify
+their candidates by joining the pairs to it on both sides and intersecting
+the two sets in the JVM. Scale notes: LSH keeps the candidate set
+near-linear (band buckets), which is the 100 TB path — the exact all-pairs
+kernel is only for small corpora / verification.
 """
 
 from __future__ import annotations
@@ -107,11 +111,10 @@ def _materialize_small(df: DataFrame) -> DataFrame:
     """Persist AND eagerly populate (count) a small multi-consumer frame.
 
     A lazy persist is not enough when several consumers sit in ONE downstream
-    job: stages race the cache and each recomputes the full lineage (measured 6x
-    on the LSH verify path). The eager count is one extra tiny job and makes the
-    expensive pipeline upstream run exactly once. Callers must guarantee the
-    frame is small (candidate pairs / candidate-doc shingles — near-linear in
-    duplicate count, never corpus-sized)."""
+    job: stages race the cache and each recomputes the full lineage. The eager
+    count is one extra tiny job and makes the expensive pipeline upstream run
+    exactly once. Callers must guarantee the frame is small (pair-graph nodes
+    and edges — near-linear in duplicate count, never corpus-sized)."""
     from pyspark import StorageLevel
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -168,6 +171,90 @@ def dedup_exact(
     return grouped.drop("_k") if use_fingerprint else grouped.withColumnRenamed("_k", "content_key")
 
 
+def _shingle_hashes(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """Exploded (doc, _h) rows, one xxhash64 over the n token columns per
+    shingle occurrence (duplicates kept) — the shared basis of the shingle-hash
+    sets and the MinHash signatures. Tokens carry no whitespace, so the n-tuple
+    IS the shingle: the set semantics of hashing the concat'd shingle string
+    without materializing millions of intermediate strings. Same sort-free,
+    exchange-free Generate+Project shape as :func:`_shingle_rows`; docs with
+    fewer than n tokens emit no row."""
+    toks = tokenize_ws(F.col(text_col))
+    base = _spread_small_input(df, key=id_col).select(
+        F.col(id_col).alias("doc"), toks.alias("_w")
+    ).filter(F.size("_w") >= n)
+    idx = base.select(
+        "doc", F.col("_w"), F.explode(F.sequence(F.lit(0), F.size("_w") - n)).alias("_i")
+    )
+    return idx.select(
+        "doc",
+        F.xxhash64(
+            *[F.element_at(F.col("_w"), F.col("_i") + (j + 1)) for j in range(n)]
+        ).alias("_h"),
+    )
+
+
+def _shingle_hash_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """Per-doc shingle-hash sets as lazy (doc, sz, _hs) rows: ``_hs`` is the
+    distinct set of :func:`_shingle_hashes` values and ``sz`` its size — the
+    one exact-Jaccard representation of the family (collisions are 2^-64
+    noise, the basis the minhash/fingerprint family stands on).
+
+    Degenerate documents: a doc with fewer than n tokens (``""`` and
+    whitespace-only docs included, at every n — :func:`tokenize_ws` yields
+    no tokens for them) has no shingle and no row here, so it appears in no
+    pair of any operator built on this frame."""
+    return (
+        _shingle_hashes(df, id_col, text_col, n)
+        .groupBy("doc")
+        .agg(F.collect_set("_h").alias("_hs"))
+        .select("doc", F.size("_hs").alias("sz"), "_hs")
+    )
+
+
+def _verify_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    pairs: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Exact n-gram Jaccard ≥ ``threshold`` for a GIVEN (id1, id2) candidate
+    set — cost O(corpus sets + |pairs| × set size), never O(all pairs).
+
+    The pairs join the shingle-hash set frame on both sides and
+    ``size(array_intersect)`` counts the intersection in the JVM: no Python,
+    nothing staged, nothing persisted. Pairs with an empty intersection are
+    dropped; Jaccard is ``inter / (sz1 + sz2 - inter)``, the arithmetic of
+    the :func:`ngram_jaccard_pairs` kernel, so both return identical values."""
+    sets = _shingle_hash_sets(df, id_col, text_col, n)
+
+    def side(i: int) -> DataFrame:
+        return sets.select(
+            F.col("doc").alias(f"id{i}"),
+            F.col("sz").alias(f"_sz{i}"),
+            F.col("_hs").alias(f"_hs{i}"),
+        )
+
+    inter = F.col("_inter")
+    return (
+        pairs.select("id1", "id2")
+        .join(side(1), "id1")
+        .join(side(2), "id2")
+        .withColumn("_inter", F.size(F.array_intersect("_hs1", "_hs2")))
+        .filter(inter > 0)
+        .select(
+            "id1", "id2", (inter / (F.col("_sz1") + F.col("_sz2") - inter)).alias("jaccard")
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -178,69 +265,38 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All document pairs with n-gram Jaccard ≥ threshold.
 
-    inverted-index self-join: explode shingles → join on shingle (id1 < id2) →
-    |intersection| per pair → Jaccard via |A|+|B|-|inter|. The shuffle key is the
-    shingle, so a stop-shingle shared by everything is the skew risk — at scale,
-    drop shingles with document frequency above a cap (cheap pre-agg) before the join.
+    The per-doc shingle-hash sets (:func:`_shingle_hash_sets`) are staged to
+    parquet once, and a numpy kernel counts every pair's intersection against
+    that staged side — Jaccard via |A|+|B|-|inter|. ``max_df`` drops shingles
+    with document frequency above the cap (stop-shingles, the skew risk of
+    any all-pairs shape) from the intersection; set sizes stay pre-filter.
+
+    Unlike the lazy operators of this module, the call runs Spark jobs
+    EAGERLY: the corpus scan and the staging write happen at call time (the
+    returned frame reads the stage lazily), so building the frame costs a
+    full corpus pass and a failure surfaces here.
     """
-    # r06 rewrite (guide §8 "decide with small rows / co-locate", §4.2 native
-    # kernels; before/after plans in plans/r06). The r05 shape referenced the
-    # lazy shingle frame from FOUR subtrees (self-join a/b + two size joins):
-    # the scan+shingle pipeline ran 4x, Catalyst force-broadcast the
-    # multi-million-row shingle frame from a bad post-aggregate estimate, and
-    # — measured at sf1.0 — the inverted-index self-join emitted 127M
-    # one-shingle candidate rows into a 127M-distinct-key aggregate (92 s).
-    # Exact prefix filtering (PPJoin) only cut emissions 2.3x on this dense
-    # vocabulary, so the join shape is structurally wrong here. Instead:
-    # 1. ONE corpus scan → per-doc distinct shingle-HASH sets + set size in a
-    #    single object-hash aggregate (xxhash64 basis: collisions are 2^-64
-    #    noise, the same basis the minhash/fingerprint family stands on), and
-    #    the (doc, sz, hashes) frame — hashes only, never text — is staged to
-    #    parquet once (the decision pass of guide §8).
-    # 2. Each task loads the staged side ONCE per worker (module-cached,
-    #    hash-sorted) and a numpy kernel computes exact intersection counts
-    #    for its slice of documents: searchsorted range lookup per shingle
-    #    hash, vectorized multi-range expansion, one np.unique per chunk —
-    #    Σ df² total match work with NO shuffle of candidate rows, no join,
-    #    no broadcast, no sort. The per-pair arithmetic (inter, sizes,
-    #    float64 division, >= threshold) is bit-identical to the SQL form.
-    # Scale note: the staged side is O(corpus shingle hashes) per worker —
-    # the exact all-pairs operator stays the small-corpus/verification path
-    # (LSH is the 100 TB candidate path); max_df drops stop-shingles from the
-    # intersection (df is a free by-product of the range lookup), sizes stay
-    # pre-filter — semantics identical to the r05 semi-join formulation.
+    # Why a staged kernel, not an inverted-index self-join on shingle: at
+    # sf1.0 that join emitted 127M one-shingle candidate rows into a
+    # 127M-distinct-key aggregate (92 s), and exact prefix filtering (PPJoin)
+    # cut emissions only 2.3x on this dense vocabulary (plans/r06). Each task
+    # loads the hash-sorted staged side ONCE per worker and counts exact
+    # intersections for its slice of documents: searchsorted range lookup per
+    # shingle hash, vectorized multi-range expansion, one np.unique per chunk
+    # — Σ df² match work with no shuffle of candidate rows, no join, no sort.
+    # The staged side is O(corpus shingle hashes) per worker, so this stays
+    # the small-corpus/verification path (LSH is the 100 TB candidate path);
+    # max_df's document frequency is a free by-product of the range lookup.
     import os
     import tempfile
 
     from pyspark.sql import types as T
 
     spark = df.sparkSession
-    # hash-only shingle basis: xxhash64 over the n token columns directly —
-    # same set semantics as hashing the concat'd shingle string (tokens carry
-    # no spaces, so the n-tuple is the shingle) without materializing 2.6M+
-    # intermediate strings per corpus scan
-    toks = tokenize_ws(F.col(text_col))
-    base = _spread_small_input(df, key=id_col).select(
-        F.col(id_col).alias("doc"), toks.alias("_w")
-    ).filter(F.size("_w") >= n)
-    idx = base.select(
-        "doc", F.col("_w"), F.explode(F.sequence(F.lit(0), F.size("_w") - n)).alias("_i")
-    )
-    sh = idx.select(
-        "doc",
-        F.xxhash64(
-            *[F.element_at(F.col("_w"), F.col("_i") + (j + 1)) for j in range(n)]
-        ).alias("_h"),
-    )
-    ds_sets = (
-        sh.groupBy("doc")
-        .agg(F.collect_set("_h").alias("_hs"))
-        .select("doc", F.size("_hs").alias("sz"), "_hs")
-    )
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     stage = tempfile.mkdtemp(prefix="njp_stage_", dir=shm)
     _njp_register_stage(stage)
-    ds_sets.write.mode("overwrite").parquet(stage)
+    _shingle_hash_sets(df, id_col, text_col, n).write.mode("overwrite").parquet(stage)
     # leaked until /tmp GC by design: the returned frame reads these files
     # lazily (same precedent as q_cdc_snapshot_diff's in-query table)
     a = spark.read.parquet(stage).repartition(
@@ -312,141 +368,6 @@ def ngram_jaccard_pairs(
     return a.mapInPandas(kernel, out_schema)
 
 
-def _pair_jaccard(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    pairs: DataFrame,
-    eager: bool = False,
-) -> DataFrame:
-    """Exact n-gram Jaccard for a GIVEN pair set only — cost O(|pairs| × shingles
-    per doc), never O(all pairs).
-
-    The candidate-doc semi join happens at the DOCUMENT level, before shingling,
-    so only pair members are normalized/exploded at all (at corpus scale the
-    candidate set is a sliver of the table). The intersection is computed by
-    routing id1's shingles through the pair list and equi-joining on
-    (id2, shingle) — every join key is (doc) or (doc, shingle), so the plan is
-    shuffle-bounded by the candidate volume LSH already made near-linear.
-    """
-    cand_docs = (
-        pairs.select(F.col("id1").alias("doc"))
-        .union(pairs.select(F.col("id2").alias("doc")))
-        .distinct()
-    )
-    sub = df.join(cand_docs, df[id_col] == cand_docs["doc"], "left_semi")
-    # three consumers below (sizes, id1 side, id2 side) — materialize once or each
-    # re-scans the corpus for the semi join; bounded by candidate docs' shingles
-    # (a sliver of the corpus at scale), so this is small by construction
-    sh_c = _materialize_small(_shingle_rows(sub, id_col, text_col, n))
-    sizes = sh_c.groupBy("doc").agg(F.count("*").alias("sz"))
-    a = sh_c.select(F.col("doc").alias("id1"), "shingle")
-    b = sh_c.select(F.col("doc").alias("id2"), "shingle")
-    inter = (
-        pairs.join(a, "id1")
-        .join(b, ["id2", "shingle"])
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc").alias("id1"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col("doc").alias("id2"), F.col("sz").alias("sz2"))
-    out = (
-        inter.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-        )
-        .select("id1", "id2", "jaccard")
-    )
-    if eager:
-        # materialize the (small) verified pair set and free the candidate-doc
-        # shingle cache immediately — lazily-returned frames otherwise pin sh_c
-        # in the executor caches for the whole session, the cache-accumulation
-        # skew the project notes flag (~2x on later queries; ADVICE r03 low)
-        out = out.localCheckpoint(eager=True)
-        sh_c.unpersist()
-    return out
-
-
-def _pair_jaccard_pairwise(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    pairs: DataFrame,
-) -> DataFrame:
-    """Exact n-gram Jaccard for a GIVEN pair set, computed pair-local in ONE job.
-
-    Same semantics as :func:`_pair_jaccard` (identical tokenization — the token
-    array is built JVM-side with the very same normalize/lower/split expression,
-    so shingles are byte-identical; distinct-set Jaccard; pairs with an empty
-    intersection are dropped), but a different scale shape: instead of exploding
-    candidate-doc shingles and routing them through three joins plus two eager
-    materializations (4 sequential Spark jobs — a measured ~10 s constant
-    latency floor on small candidate sets, BENCH/BASELINE.md r05), the raw token
-    arrays ride the pair join and an Arrow-batched ``mapInPandas`` forms both
-    shingle sets and the Jaccard per pair. One shuffle-bounded job, nothing
-    persisted.
-
-    Byte math vs the join verify: this ships each candidate doc's tokens once
-    per pair membership (~2× text bytes at the near-linear pair degree LSH
-    produces), while the join verify explodes shingles (~n× text bytes) and
-    shuffles them three times. Pairwise wins unless a hub doc has pair degree
-    ≫ n — at that point the join verify (``verify="join"``) amortizes the hub
-    doc's shingles across its pairs, so skewed candidate graphs should route
-    there (or cap degree upstream via ``max_df``-style pruning).
-    """
-    import pandas as pd  # noqa: F401  (mapInPandas contract)
-
-    from pyspark.sql import types as T
-
-    toks = tokenize_ws(F.col(text_col))
-    t = df.select(F.col(id_col).alias("_pj_id"), toks.alias("_pj_toks"))
-    j = (
-        pairs.select("id1", "id2")
-        .join(
-            t.select(F.col("_pj_id").alias("id1"), F.col("_pj_toks").alias("_t1")),
-            "id1",
-        )
-        .join(
-            t.select(F.col("_pj_id").alias("id2"), F.col("_pj_toks").alias("_t2")),
-            "id2",
-        )
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("id1", pairs.schema["id1"].dataType),
-            T.StructField("id2", pairs.schema["id2"].dataType),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-
-    def kernel(batches):
-        import numpy as np
-
-        for pdf in batches:
-            m = len(pdf)
-            jac = np.empty(m, dtype=np.float64)
-            keep = np.zeros(m, dtype=bool)
-            t1s = pdf["_t1"].to_numpy()
-            t2s = pdf["_t2"].to_numpy()
-            for i in range(m):
-                t1, t2 = t1s[i], t2s[i]
-                s1 = {" ".join(t1[k : k + n]) for k in range(len(t1) - n + 1)}
-                s2 = {" ".join(t2[k : k + n]) for k in range(len(t2) - n + 1)}
-                inter = len(s1 & s2)
-                if inter:
-                    keep[i] = True
-                    jac[i] = inter / (len(s1) + len(s2) - inter)
-            res = pdf.loc[keep, ["id1", "id2"]].copy()
-            res["jaccard"] = jac[keep]
-            yield res
-
-    return j.mapInPandas(kernel, out_schema)
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -459,29 +380,12 @@ def minhash_signatures(
     separately so the scaling sweep can attribute wall time per stage
     (signature agg vs bucket join vs verify — BENCH/BASELINE.md).
 
-    r06: the base shingle hash is xxhash64 over the n token columns directly
-    (tokens carry no whitespace, so the n-tuple IS the shingle) — same set
-    semantics as hashing the concat'd shingle string without materializing
-    millions of intermediate strings; with the sort-free shingle builder the
-    whole stage is Generate → map-side partial min-agg → ONE exchange of
-    k longs per doc (no sort, no distinct: duplicate shingles cannot change a
-    min)."""
-    toks = tokenize_ws(F.col(text_col))
-    base = _spread_small_input(df, key=id_col).select(
-        F.col(id_col).alias("doc"), toks.alias("_w")
-    ).filter(F.size("_w") >= n)
-    idx = base.select(
-        "doc", F.col("_w"), F.explode(F.sequence(F.lit(0), F.size("_w") - n)).alias("_i")
-    )
-    hashed = idx.select(
-        "doc",
-        F.xxhash64(
-            *[F.element_at(F.col("_w"), F.col("_i") + (j + 1)) for j in range(n)]
-        ).alias("_h0"),
-    )
-    return hashed.groupBy("doc").agg(
+    The base hash is :func:`_shingle_hashes`' xxhash64, so the whole stage is
+    Generate → map-side partial min-agg → ONE exchange of k longs per doc (no
+    sort, no distinct: duplicate shingles cannot change a min)."""
+    return _shingle_hashes(df, id_col, text_col, n).groupBy("doc").agg(
         *[
-            F.min(F.xxhash64(F.col("_h0"), F.lit(i))).alias(f"h{i}")
+            F.min(F.xxhash64(F.col("_h"), F.lit(i))).alias(f"h{i}")
             for i in range(num_hashes)
         ]
     )
@@ -495,9 +399,9 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     verify_threshold: float | None = 0.5,
-    verify: str = "pairwise",
 ) -> DataFrame:
-    """MinHash + banded LSH candidate pairs (optionally Jaccard-verified).
+    """MinHash + banded LSH candidate pairs, Jaccard-verified at
+    ``verify_threshold`` (``None`` returns the raw (id1, id2) candidates).
 
     signature[i] = min over shingles of hash_i(shingle); band j = hash of its
     rows; candidates = pairs sharing any band bucket.
@@ -541,24 +445,9 @@ def minhash_lsh_pairs(
     if verify_threshold is None:
         return cand
     # Verification is CANDIDATE-ONLY: Jaccard is computed just for the pairs LSH
-    # surfaced (O(candidates)), never by re-running the all-pairs shingle self-join
-    # over the corpus — that quadratic join is exactly what LSH exists to avoid.
-    if verify == "pairwise":
-        # cand has exactly ONE downstream consumer here, so nothing needs
-        # persisting — the whole pipeline (signatures → buckets → self-join →
-        # pair-local Jaccard) is a single Spark job.
-        verified = _pair_jaccard_pairwise(df, id_col, text_col, n, cand)
-    else:
-        # join verify: the pair list is consumed 3x downstream (id1 docs, id2
-        # docs, pair join); materialize it once or each consumer re-runs the
-        # whole signature+bucket pipeline (measured 18x slower at 40k docs).
-        # Two longs per candidate pair — near-linear in dup count.
-        cand = _materialize_small(cand)
-        verified = _pair_jaccard(df, id_col, text_col, n, cand, eager=True)
-        cand.unpersist()
-    return verified.filter(F.col("jaccard") >= verify_threshold).select(
-        "id1", "id2", "jaccard"
-    )
+    # surfaced (O(candidates)), never by re-running the all-pairs kernel over
+    # the corpus — that quadratic work is exactly what LSH exists to avoid.
+    return _verify_pairs(df, id_col, text_col, n, cand, verify_threshold)
 
 
 def simhash_buckets(
@@ -955,42 +844,25 @@ def simhash_pairs(
     verify_threshold: float = 0.5,
     group_size: int | None = None,
     max_tables: int = 4096,
-    verify: str = "pairwise",
 ) -> DataFrame:
     """Near-dup pairs via SimHash candidates + exact Jaccard verify — the
     end-to-end simhash pipeline (simhash_buckets emits the raw signatures).
 
     Candidate generation is the multi-table block-combination scheme (Manku et
-    al., WWW'07 §3 made Spark-first — see _simhash_table_plan): recall within
-    Hamming radius ``max_hamming`` is guaranteed, join keys are ≥16 bits at
-    d ≤ 6, and a JVM-side ``bit_count(xor) ≤ d`` pre-filter bounds the verify
-    set to true Hamming-ball pairs even at larger radii. Verification is
-    candidate-only exact n-gram Jaccard (same _pair_jaccard as minhash), so
-    precision is exact. Scale shape: C(d+g, g) 16-byte keys per doc through one
-    equi self-join, pre-filter on two longs per candidate, Jaccard only on
-    Hamming-confirmed pairs.
+    al., WWW'07 §3 — see _simhash_table_plan): recall within Hamming radius
+    ``max_hamming`` is guaranteed, and the candidate kernel's
+    ``popcount(sig1 XOR sig2) ≤ d`` filter bounds the verify set to true
+    Hamming-ball pairs even at wide radii (:func:`_simhash_candidates`).
+    Verification is candidate-only exact n-gram Jaccard over the shingle-hash
+    sets — the same :func:`_verify_pairs` as minhash — so precision is exact.
+    The signatures keep their string hash basis (:func:`simhash_buckets`).
 
-    r06: the signature frame is consumed exactly once (the candidate
-    kernel's staged side materializes it), so the former sigs persist +
-    eager count + output localCheckpoint — three of the barrier jobs behind
-    the r05 ~10 s verify-stage latency floor — are gone; the pairwise path
-    is now one staged write plus one verify job."""
+    The signature frame is consumed exactly once (the candidate kernel's
+    staged side materializes it, eagerly at call time); the verify is a lazy
+    JVM join, so the whole operator is one staged write plus one job."""
     sigs = simhash_buckets(df, id_col, text_col, n).select("doc", "simhash")
-    if verify == "pairwise":
-        cand = _simhash_candidates(sigs, max_hamming, group_size, max_tables)
-        verified = _pair_jaccard_pairwise(df, id_col, text_col, n, cand)
-        return verified.filter(F.col("jaccard") >= verify_threshold).select(
-            "id1", "id2", "jaccard"
-        )
-    # join verify consumes the candidate list 3x — materialize it once
-    cand = _materialize_small(
-        _simhash_candidates(sigs, max_hamming, group_size, max_tables)
-    )
-    verified = _pair_jaccard(df, id_col, text_col, n, cand, eager=True)
-    cand.unpersist()
-    return verified.filter(F.col("jaccard") >= verify_threshold).select(
-        "id1", "id2", "jaccard"
-    )
+    cand = _simhash_candidates(sigs, max_hamming, group_size, max_tables)
+    return _verify_pairs(df, id_col, text_col, n, cand, verify_threshold)
 
 
 def ngram_contamination(
@@ -1188,58 +1060,75 @@ def dedup_clusters(
     Algorithm: iterative min-label propagation over the undirected edge list —
     each round every node adopts the smallest label among itself and its
     neighbors; converges in O(component diameter) rounds (near-dup components
-    are shallow in practice; ``max_iters`` bounds pathological chains, and the
-    loop exits as soon as a round changes nothing). Each round is one
-    shuffle-join + one aggregate, all JVM-side; the classic large-star/small-star
-    optimization drops in here unchanged if components ever get deep.
+    are shallow in practice; ``max_iters`` bounds the rounds, and a chain
+    deeper than that raises instead of returning unconverged ids). The large-
+    star/small-star contraction (:func:`dedup_clusters_star`) is the O(log n)
+    path for deep components.
+
+    Each round is ONE aggregate and ONE action: round 1 groups the
+    both-direction edges (label = least(min(neighbor), self)); every later
+    round groups neighbor labels ∪ own label and carries the old label along.
+    The round's frame is a lazy local checkpoint, so one filtered count
+    (label changed) both fills it and probes convergence, and the previous
+    round is then dropped. The checkpoint also cuts the lineage: a persisted
+    round frame embeds every earlier round's cached plan, which Spark renders
+    (initial and final adaptive plan) for every action — the string grew ~3×
+    per round and a 6-hop chain exhausted a 2 GB driver heap. The returned
+    frame is the last round's checkpoint, the only RDD the call leaves
+    persisted.
 
     Input: (id1, id2) pairs. Output: (doc_id, cluster_id).
     """
-    edges = (
-        pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-        .union(pairs.select(F.col("id2").alias("a"), F.col("id1").alias("b")))
-        .distinct()
+    from pyspark import StorageLevel
+
+    edges = pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b")).union(
+        pairs.select(F.col("id2").alias("a"), F.col("id1").alias("b"))
     )
-    edges = _materialize_small(edges)  # reused every round
-    labels = _materialize_small(
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
+    # lazily cached: round 1's action fills it, so a costly pair lineage (a
+    # kernel frame, not a literal list) runs once instead of once per round
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+
+    def settle(frame: DataFrame) -> tuple[DataFrame, int]:
+        frame = frame.localCheckpoint(eager=False)
+        return frame, frame.filter(F.col("cluster_id") != F.col("_old")).count()
+
+    def drop(frame: DataFrame) -> None:
+        # a checkpoint has no DataFrame-level unpersist: free its RDD's blocks
+        # directly (Spark logs that the truncated lineage cannot be recomputed
+        # — intended, the next round is already materialized)
+        frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+    labels, changed = settle(
+        edges.groupBy(F.col("a").alias("doc_id"))
+        .agg(F.least(F.min("b"), F.first("a")).alias("cluster_id"))
+        .withColumn("_old", F.col("doc_id"))
     )
-    converged = False
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges["b"] == labels["doc_id"])
-            .groupBy(F.col("a").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("_nmin"))
-        )
-        new_labels = _materialize_small(
-            labels.join(neighbor_min, "doc_id", "left").select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("_nmin"), F.col("cluster_id"))
-                ).alias("cluster_id"),
+    rounds = 1
+    while changed:
+        if rounds == max_iters:
+            edges.unpersist()
+            drop(labels)
+            # a chain-shaped component longer than max_iters would otherwise
+            # return silently WRONG cluster ids (ADVICE r02 low) — fail loudly
+            raise RuntimeError(
+                f"dedup_clusters did not converge within max_iters={max_iters} "
+                "(component diameter exceeds the iteration budget; raise max_iters)"
             )
+        nbr = edges.join(labels.select(F.col("doc_id").alias("b"), "cluster_id"), "b")
+        new, changed = settle(
+            nbr.select(
+                F.col("a").alias("doc_id"),
+                "cluster_id",
+                F.lit(None).cast(labels.schema["cluster_id"].dataType).alias("_old"),
+            )
+            .union(
+                labels.select("doc_id", "cluster_id", F.col("cluster_id").alias("_old"))
+            )
+            .groupBy("doc_id")
+            .agg(F.min("cluster_id").alias("cluster_id"), F.max("_old").alias("_old"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # a chain-shaped component longer than max_iters would otherwise return
-        # silently WRONG cluster ids (ADVICE r02 low) — fail loudly; callers with
-        # genuinely deep components should raise max_iters or switch to the
-        # large-star/small-star contraction (O(log n) rounds).
-        raise RuntimeError(
-            f"dedup_clusters did not converge within max_iters={max_iters} "
-            "(component diameter exceeds the iteration budget; raise max_iters)"
-        )
-    return labels
+        drop(labels)
+        labels = new
+        rounds += 1
+    edges.unpersist()
+    return labels.select("doc_id", "cluster_id")

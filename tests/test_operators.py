@@ -751,42 +751,77 @@ def test_minhash_verified_jaccard_values_match_exact(spark):
         assert exact[pair] == j
 
 
-def test_pairwise_verify_equals_join_verify_on_real_corpus(spark):
-    """verify="pairwise" (Arrow pair-local Jaccard) and verify="join" (shingle
-    inverted-index verify) must produce IDENTICAL pair sets and jaccard values —
-    the pairwise kernel builds its token arrays with the very same JVM-side
-    normalize/lower/split expression, so any divergence is a tokenization or
-    set-math bug. Run on the real sf0.001 documents table (messy text: control
-    chars, long docs), not just the 4-row fixture."""
-    from etl_german_fhir_core_spark.operators.dedup import simhash_pairs
+def test_verify_equals_string_shingle_jaccard_on_real_corpus(spark):
+    """MinHash and SimHash verify intersect shingle-HASH sets in the JVM; on
+    their own candidates they must equal plain Python Jaccard over STRING
+    shingle sets built from the same tokenize_ws tokens: the same pairs at
+    0.5 and the same value to 9 decimals. Run on the real sf0.001 documents
+    table (messy text: control chars, long docs), not just the 4-row fixture."""
+    from etl_german_fhir_core_spark.functions.text import tokenize_ws
+    from etl_german_fhir_core_spark.operators.dedup import (
+        simhash_candidates,
+        simhash_pairs,
+    )
 
+    n, thr = 3, 0.5
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
-    kw = dict(n=3, num_hashes=32, bands=8, verify_threshold=0.5)
-    a = {
-        (r["id1"], r["id2"]): round(r["jaccard"], 9)
-        for r in minhash_lsh_pairs(d, "doc_id", "text", verify="pairwise", **kw).collect()
+    toks = {
+        r["doc_id"]: r["t"]
+        for r in d.select("doc_id", tokenize_ws("text").alias("t")).collect()
     }
-    b = {
-        (r["id1"], r["id2"]): round(r["jaccard"], 9)
-        for r in minhash_lsh_pairs(d, "doc_id", "text", verify="join", **kw).collect()
+
+    def shingles(doc):
+        t = toks[doc]
+        return {" ".join(t[k : k + n]) for k in range(len(t) - n + 1)}
+
+    def reference(cands):
+        out = {}
+        for r in cands.collect():
+            s1, s2 = shingles(r["id1"]), shingles(r["id2"])
+            inter = len(s1 & s2)
+            if inter and inter / (len(s1) + len(s2) - inter) >= thr:
+                out[(r["id1"], r["id2"])] = round(inter / (len(s1) + len(s2) - inter), 9)
+        return out
+
+    def verified(frame):
+        return {(r["id1"], r["id2"]): round(r["jaccard"], 9) for r in frame.collect()}
+
+    kw = dict(n=n, num_hashes=32, bands=8)
+    mh_ref = reference(minhash_lsh_pairs(d, "doc_id", "text", verify_threshold=None, **kw))
+    assert mh_ref  # the synthetic corpus has near-dups by construction
+    assert verified(minhash_lsh_pairs(d, "doc_id", "text", verify_threshold=thr, **kw)) == mh_ref
+    sh_ref = reference(simhash_candidates(d, "doc_id", "text", n=n, max_hamming=12))
+    assert sh_ref
+    assert verified(
+        simhash_pairs(d, "doc_id", "text", n=n, max_hamming=12, verify_threshold=thr)
+    ) == sh_ref
+
+
+@pytest.mark.parametrize("n", [3, 1])
+def test_degenerate_docs_pair_nowhere_and_identical_docs_score_one(spark, n):
+    """Docs with fewer than n tokens ("", whitespace-only, n-1 tokens) have no
+    shingle, so they appear in no pair of any shingle-based operator — even at
+    threshold 0 and at n=1, where a tokenizer that kept an empty token would
+    pair "" with the whitespace-only doc at 1.0. Two identical docs of exactly
+    n tokens (one shingle each) score 1.0 in all three operators."""
+    from etl_german_fhir_core_spark.operators.dedup import simhash_pairs
+
+    words = " ".join(["alpha", "beta", "gamma"][:n])
+    short = " ".join(["alpha", "beta", "gamma"][: n - 1])
+    docs = spark.createDataFrame(
+        [(1, ""), (2, " \t\n  "), (3, short), (4, words), (5, words)],
+        "doc_id long, text string",
+    )
+    ops = {
+        "ngram": ngram_jaccard_pairs(docs, "doc_id", "text", n=n, threshold=0.0),
+        "minhash": minhash_lsh_pairs(docs, "doc_id", "text", n=n, verify_threshold=0.0),
+        "simhash": simhash_pairs(docs, "doc_id", "text", n=n, verify_threshold=0.0),
     }
-    assert a  # the synthetic corpus has near-dups by construction
-    assert a == b
-    sa = {
-        (r["id1"], r["id2"]): round(r["jaccard"], 9)
-        for r in simhash_pairs(
-            d, "doc_id", "text", n=3, max_hamming=12, verify="pairwise"
-        ).collect()
-    }
-    sb = {
-        (r["id1"], r["id2"]): round(r["jaccard"], 9)
-        for r in simhash_pairs(
-            d, "doc_id", "text", n=3, max_hamming=12, verify="join"
-        ).collect()
-    }
-    assert sa == sb
+    for name, frame in ops.items():
+        got = {(r["id1"], r["id2"]): r["jaccard"] for r in frame.collect()}
+        assert got == {(4, 5): 1.0}, name
 
 
 def test_dedup_plans_have_no_broadcast_hint(spark):
@@ -850,12 +885,53 @@ def test_dedup_clusters_transitive(spark):
     disjoint pairs stay separate; canonical id is the component min."""
     from etl_german_fhir_core_spark.operators.dedup import dedup_clusters
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 9), (20, 21), (30, 31), (31, 30)],  # chain + 2 islands
-        "id1 long, id2 long",
-    )
+    base = [(1, 2), (2, 3), (3, 9), (20, 21), (30, 31), (31, 30)]  # chain + 2 islands
+    pairs = spark.createDataFrame(base, "id1 long, id2 long")
     out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 9: 1, 20: 20, 21: 20, 30: 30, 31: 30}
+
+    # + a path with scrambled ids, minimum at one end: the label needs six
+    # rounds to reach 47, and a branch hangs off the middle
+    path = [(47, 52), (44, 52), (44, 58), (41, 58), (41, 60), (40, 60), (58, 70)]
+    pairs = spark.createDataFrame(base + path, "id1 long, id2 long")
+    out = {r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in base + path:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    assert out == {x: find(x) for x in parent}
+    assert out[47] == 40
+
+
+def test_dedup_clusters_leaves_only_its_result_persisted(spark):
+    """Round frames and the edge cache are released before return: a call
+    leaves at most one persisted RDD (its result), and a call that fails to
+    converge leaves none."""
+    from etl_german_fhir_core_spark.operators.dedup import dedup_clusters
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 9), (20, 21), (30, 31)], "id1 long, id2 long"
+    )
+    assert len(dedup_clusters(pairs).collect()) == 8
+    assert len(persisted() - before) <= 1
+
+    before = persisted()
+    chain = spark.createDataFrame([(i, i + 1) for i in range(10)], "id1 long, id2 long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_clusters(chain, max_iters=3)
+    assert not persisted() - before
 
 
 def test_dedup_clusters_star_deep_chain_and_label_guard(spark):

@@ -156,3 +156,26 @@ def test_similarity_kernels_are_arrow_vectorized(spark):
         assert "BatchEvalPython" not in plan, name  # no per-row Python
         assert "ArrowEvalPython" in plan or "MapInPandas" in plan, name
         assert "aggregate(" not in plan and "zip_with(" not in plan, name
+
+
+def test_dedup_verify_runs_no_per_pair_python(spark):
+    """MinHash and SimHash verify their candidates in the JVM (a pair join to
+    the shingle-hash sets + array_intersect): the MinHash plan carries no
+    Python node at all, and the SimHash plan exactly one MapInPandas — its
+    candidate kernel. A per-pair Python verify (the CIDR'22 anti-pattern)
+    would add a MapInPandas to each."""
+    from etl_german_fhir_core_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        simhash_pairs,
+    )
+    from etl_german_fhir_core_spark.plans import explain_str
+
+    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    mh = explain_str(
+        minhash_lsh_pairs(d, "doc_id", "text", n=3, bands=8, verify_threshold=0.5),
+        "simple",
+    )
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in mh, node
+    sh = explain_str(simhash_pairs(d, "doc_id", "text", n=3, verify_threshold=0.5), "simple")
+    assert sh.count("MapInPandas") == 1
