@@ -35,6 +35,7 @@ from etl_german_fhir_core_spark.lake.table import (
     SnapshotTable,
     _bucket_expr,
     _family_index,
+    _touched_buckets,
 )
 
 LINEAGE_SCHEMA = (
@@ -406,13 +407,7 @@ class CdcEngine:
         when the scope leads with the table's bucketing key, so a state-mode rollup
         reads O(touched buckets), never the whole table."""
         if scope[0] == self.table.key_cols()[0]:
-            B = self.table.num_buckets()
-            touched = sorted(
-                r[0]
-                for r in keys.select(
-                    _bucket_expr(scope[0], B).alias(BUCKET_COL)
-                ).distinct().collect()
-            )
+            touched = _touched_buckets(keys, scope[0], self.table.num_buckets())
             state = self.table.read(buckets=touched)
         else:
             state = self.table.read()

@@ -48,6 +48,9 @@ META_COLS = (LSN_COL, DELETED_COL)
 # resolution keeps the CoW merge's "later commit beats earlier on equal
 # (order, lsn)" tie-break; base rows read as 0, so deltas beat base on ties
 SRC_COL = "_src"
+# skew salt = hash(full key) % files_per_bucket; exists only between the
+# clustering exchange and the staging write, never in a data file
+SALT_COL = "_salt"
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 
@@ -56,6 +59,18 @@ def _bucket_expr(key_col: str, num_buckets: int):
     """Deterministic bucket id for a key — same function everywhere (write, merge,
     delete) or co-location silently breaks."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
+
+
+def _touched_buckets(df: DataFrame, key_col: str, num_buckets: int) -> list[int]:
+    """Sorted bucket ids ``df``'s ``key_col`` values hash into — the pruning
+    decision (Iceberg partition-pruning analog): a tiny driver-side collect of
+    at most ``num_buckets`` ints, by design."""
+    return sorted(
+        r[0]
+        for r in df.select(_bucket_expr(key_col, num_buckets).alias(BUCKET_COL))
+        .distinct()
+        .collect()
+    )
 
 
 def _family_index(epoch_id: str) -> tuple[str | None, int | None]:
@@ -104,7 +119,10 @@ class SnapshotTable:
           _manifests/snapshot-00000042.json   # atomic commit unit
           data/<uuid>/_bucket=K/part-*.parquet
 
-    Single-writer (the epoch manager serializes commits); many concurrent readers.
+    Many concurrent readers. Concurrent writers commit optimistically: a CAS
+    loser whose touched buckets are disjoint from the winner's rebases onto
+    the new head (:meth:`_publish`); an overlapping one raises CommitConflict.
+    ``overwrite``, ``rename_column`` and ``rebucket`` never rebase.
     """
 
     def __init__(self, spark: SparkSession, root: str, committer=None):
@@ -321,19 +339,16 @@ class SnapshotTable:
                         stats[b] = new_manifest["stats"][b]
                     else:
                         stats.pop(b, None)
-                new_manifest = {
-                    **head,
-                    "snapshot_id": head["snapshot_id"] + 1,
-                    "parent_id": head["snapshot_id"],
-                    "epoch_id": epoch_id,
-                    "schema": self._union_schema_json(
+                new_manifest = self._successor(
+                    head,
+                    epoch_id,
+                    schema=self._union_schema_json(
                         head["schema"], new_manifest["schema"]
                     ),
-                    "files": files,
-                    "stats": stats,
+                    files=files,
+                    stats=stats,
                     **({"deltas": deltas} if "deltas" in head else {}),
-                    **self._ledger(head, epoch_id),
-                }
+                )
                 base = head
 
     def _union_schema_json(self, a_json: dict, b_json: dict) -> dict:
@@ -440,6 +455,41 @@ class SnapshotTable:
                 continue
             kept.append(e)
         return {"committed_epochs": kept, "epochs_through": through}
+
+    def _already(self, m: dict, epoch_id: str) -> MergeResult | None:
+        """The idempotent skip when ``m``'s ledger already holds ``epoch_id``
+        (exactly-once under at-least-once delivery), else None."""
+        if self._has_epoch_m(m, epoch_id):
+            return MergeResult(epoch_id=epoch_id, skipped=True,
+                               snapshot_id=m["snapshot_id"])
+        return None
+
+    def _successor(self, m: dict, epoch_id: str, **fields) -> dict:
+        """The manifest that follows ``m`` under ``epoch_id``: ``fields``
+        replace m's entries and the ledger records the epoch. ``fields`` come
+        last so a bulk load can reset the ledger itself."""
+        return {
+            **m,
+            "snapshot_id": m["snapshot_id"] + 1,
+            "parent_id": m["snapshot_id"],
+            "epoch_id": epoch_id,
+            **self._ledger(m, epoch_id),
+            **fields,
+        }
+
+    def _commit(
+        self, m: dict, epoch_id: str, touched: list[int], **fields
+    ) -> MergeResult:
+        """Commit ``m``'s successor through :meth:`_publish` (rebasing onto a
+        concurrent disjoint commit); a duplicate delivery of this epoch that
+        won the race turns into the idempotent skip."""
+        sid, already = self._publish(
+            self._successor(m, epoch_id, **fields), m, touched
+        )
+        if already:
+            return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
+        return MergeResult(epoch_id=epoch_id, touched_buckets=touched,
+                           snapshot_id=sid)
 
     def snapshot_before_epoch(self, epoch_id: str) -> int | None:
         """Snapshot id the table had just BEFORE ``epoch_id`` committed (walks the
@@ -643,8 +693,8 @@ class SnapshotTable:
     def _cleared_deltas(m: dict, touched: list[int]) -> dict:
         """Manifest update clearing the MoR delta lists of buckets a CoW path
         is rewriting: the rewrite's read-back RESOLVED those deltas, so leaving
-        them live would re-apply them on the next read. Every CoW rewrite site
-        must splat this into its new manifest; no-op on pure-CoW tables."""
+        them live would re-apply them on the next read. :meth:`_rewrite` and
+        the full-table rewrites apply it; no-op on pure-CoW tables."""
         if "deltas" not in m:
             return {}
         deltas = dict(m["deltas"])
@@ -652,42 +702,79 @@ class SnapshotTable:
             deltas[str(b)] = []
         return {"deltas": deltas}
 
-    def _stage_buckets(
-        self, df: DataFrame, touched: list[int], pre_partitioned: bool = False
-    ) -> dict[str, list[str]]:
-        """Write ``df`` (already carrying BUCKET_COL) partitioned by bucket into a
-        fresh uuid staging dir; return {bucket: [relative file paths]}. Staged files
-        become live only when the next manifest references them, so a crash here
-        leaves orphans, never corruption (vacuum() collects them).
+    @staticmethod
+    def _cluster(
+        df: DataFrame, n: int, m: dict | None = None
+    ) -> tuple[DataFrame, list[str]]:
+        """The ONE exchange of a write: hash-cluster ``df`` (carrying
+        BUCKET_COL) so each bucket lies wholly in one of ``n`` partitions, and
+        return the clustering columns. An aggregate grouping on them plus the
+        key reuses this exchange, and the staging write then emits one file
+        per bucket.
 
-        Skew handling (north rule: salted repartitioning for hot conv_id): with
-        ``files_per_bucket`` > 1 the shuffle key is (bucket, salt) where salt =
-        hash(full key) % fpb — a hot conversation's bucket is written by fpb
-        parallel tasks into fpb files instead of serializing into one writer.
-
-        ``pre_partitioned=True`` (r06, guide §2.4): the caller guarantees ``df``
-        is already hash-clustered by BUCKET_COL (e.g. the merge path's
-        resolution aggregate reuses one bucket exchange), so the staging
-        repartition — a second full exchange of every surviving row — is
-        skipped; each bucket still lands wholly inside one task, so the
-        one-file-per-bucket layout is unchanged."""
-        stage_rel = os.path.join(DATA_DIR, uuid.uuid4().hex)
-        stage_abs = self._abs(stage_rel)
-        m = self.manifest()
-        fpb = int(m.get("properties", {}).get("files_per_bucket", 1))
+        Skew handling (north rule: salted repartitioning for hot conv_id): when
+        ``m``'s ``files_per_bucket`` fpb > 1, a SALT_COL = hash(full key) % fpb
+        joins the clustering key over n·fpb partitions — a hot conversation's
+        bucket is written by fpb parallel tasks into fpb files instead of
+        serializing into one writer. ``m=None`` never salts (compaction and
+        rebucketing write one sorted file per bucket)."""
+        fpb = int(m.get("properties", {}).get("files_per_bucket", 1)) if m else 1
+        by = [BUCKET_COL]
         if fpb > 1:
-            salt = F.pmod(F.xxhash64(*[F.col(k) for k in m["key_cols"]]), F.lit(fpb))
-            shuffled = df.repartition(max(len(touched), 1) * fpb, F.col(BUCKET_COL), salt)
-        elif pre_partitioned:
-            shuffled = df
-        else:
-            shuffled = df.repartition(max(len(touched), 1), BUCKET_COL)
+            df = df.withColumn(
+                SALT_COL,
+                F.pmod(F.xxhash64(*[F.col(k) for k in m["key_cols"]]), F.lit(fpb)),
+            )
+            by.append(SALT_COL)
+        return df.repartition(max(n, 1) * fpb, *by), by
+
+    def _stage_buckets(
+        self, df: DataFrame, sort_by: list[str] | tuple = ()
+    ) -> dict[str, list[str]]:
+        """Write ``df`` — already clustered by :meth:`_cluster`, so no exchange
+        is added here — partitioned by bucket into a fresh uuid staging dir,
+        sorted by ``sort_by`` within each file when given; return {bucket:
+        [relative file paths]}. Staged files become live only when the next
+        manifest references them, so a crash here leaves orphans, never
+        corruption (vacuum() collects them)."""
+        stage_rel = os.path.join(DATA_DIR, uuid.uuid4().hex)
+        if sort_by:
+            df = df.sortWithinPartitions(BUCKET_COL, *sort_by)
         (
-            shuffled.write.partitionBy(BUCKET_COL)
+            df.drop(SALT_COL)
+            .write.partitionBy(BUCKET_COL)
             .mode("overwrite")
-            .parquet(stage_abs)
+            .parquet(self._abs(stage_rel))
         )
         return self._staged_files(stage_rel)
+
+    def _rewrite(
+        self,
+        m: dict,
+        epoch_id: str,
+        touched: list[int],
+        df: DataFrame,
+        sort_by: list[str] | tuple = (),
+        **fields,
+    ) -> MergeResult:
+        """Copy-on-write commit: stage ``df`` (clustered) as the new content of
+        the ``touched`` buckets, carry every other bucket's files forward by
+        reference, recompute the touched buckets' stats, clear their MoR
+        deltas (the rewrite's read-back resolved them) and commit through
+        :meth:`_commit`. ``fields`` are further manifest changes (schema)."""
+        staged = self._stage_buckets(df, sort_by)
+        files = dict(m["files"])
+        for b in touched:
+            files[str(b)] = staged.get(str(b), [])
+        return self._commit(
+            m,
+            epoch_id,
+            touched,
+            files=files,
+            stats=self._merged_stats(m, touched, staged),
+            **self._cleared_deltas(m, touched),
+            **fields,
+        )
 
     def _staged_files(self, stage_rel: str) -> dict[str, list[str]]:
         """Enumerate a staging dir's committed parquet files through Spark's
@@ -756,33 +843,37 @@ class SnapshotTable:
             return _dt.date.fromisoformat(stored)
         return stored
 
+    def _stage_bounds(self, cols: list[str], staged: dict) -> list:
+        """Per-bucket ``_mn_<c>``/``_mx_<c>`` rows of ``cols`` over one staging
+        dir — ONE narrow aggregate (only the stat columns and the partition
+        column are read); [] when nothing was staged."""
+        paths = [p for fs in staged.values() for p in fs]
+        if not paths:
+            return []
+        stage_rel = paths[0].split("/" + BUCKET_COL + "=")[0]
+        aggs = []
+        for c in cols:
+            aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
+        return (
+            self.spark.read.parquet(self._abs(stage_rel))
+            .groupBy(BUCKET_COL)
+            .agg(*aggs)
+            .collect()
+        )
+
     def _merged_stats(self, m: dict, touched: list[int], staged: dict) -> dict:
         """Per-bucket [min, max] of the table's ``stats_cols`` after a commit:
-        touched buckets get fresh bounds from ONE narrow aggregate over the
-        staged data (only the stat columns + the partition column are read);
-        untouched buckets keep their existing bounds — the Iceberg-manifest
-        data-skipping model. No-op (returns the old dict) when the table tracks
-        nothing."""
+        touched buckets get fresh bounds from the staged data
+        (:meth:`_stage_bounds`); untouched buckets keep their existing bounds
+        — the Iceberg-manifest data-skipping model. No-op (returns the old
+        dict) when the table tracks nothing."""
         cols = m.get("properties", {}).get("stats_cols") or []
         stats = dict(m.get("stats", {}))
         if not cols:
             return stats
         for b in map(str, touched):
             stats.pop(b, None)  # bucket may have emptied
-        paths = [p for fs in staged.values() for p in fs]
-        if not paths:
-            return stats
-        stage_rel = paths[0].split("/" + BUCKET_COL + "=")[0]
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
-        rows = (
-            self.spark.read.parquet(self._abs(stage_rel))
-            .groupBy(BUCKET_COL)
-            .agg(*aggs)
-            .collect()
-        )
-        for r in rows:
+        for r in self._stage_bounds(cols, staged):
             stats[str(r[BUCKET_COL])] = {
                 c: [self._stat_ser(r[f"_mn_{c}"]), self._stat_ser(r[f"_mx_{c}"])]
                 for c in cols
@@ -802,20 +893,7 @@ class SnapshotTable:
         stats = dict(m.get("stats", {}))
         if not cols:
             return stats
-        paths = [p for fs in staged.values() for p in fs]
-        if not paths:
-            return stats
-        stage_rel = paths[0].split("/" + BUCKET_COL + "=")[0]
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
-        rows = (
-            self.spark.read.parquet(self._abs(stage_rel))
-            .groupBy(BUCKET_COL)
-            .agg(*aggs)
-            .collect()
-        )
-        for r in rows:
+        for r in self._stage_bounds(cols, staged):
             b = str(r[BUCKET_COL])
             old = stats.get(b)
             if old is None:
@@ -979,38 +1057,19 @@ class SnapshotTable:
         """
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
+        batch, new_schema, touched = self._prepare_batch(
+            batch, m, op_col, lsn_col, touched
+        )
         if m.get("merge_mode") == "mor":
             return self._merge_mor(
-                batch, epoch_id, m, op_col=op_col, lsn_col=lsn_col,
-                touched=touched, finalize_payload=finalize_payload,
+                batch, epoch_id, m, new_schema, op_col, touched, finalize_payload
             )
 
         key_cols = m["key_cols"]
         order_cols = [c for c in m["order_cols"] if c != LSN_COL]
-        B = m["num_buckets"]
-
-        batch = self._apply_renames_df(batch, m)
-        batch = batch.withColumn(LSN_COL, F.col(lsn_col).cast("long"))
-        payload_schema = T.StructType(
-            [f for f in batch.schema if f.name not in (op_col, lsn_col)]
-        )
-        new_schema = self._evolve_schema(payload_schema)
-
-        batch = batch.withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B))
-        if touched is None:
-            # Touched-bucket discovery: tiny collect (≤ B ints), driver-side by
-            # design — it is the pruning decision, the analog of Iceberg partition
-            # pruning. Callers that already aggregated per-bucket stats (the epoch
-            # manager) pass ``touched`` to skip this extra scan.
-            touched = sorted(
-                r[0] for r in batch.select(BUCKET_COL).distinct().collect()
-            )
-        else:
-            touched = sorted(touched)
-
+        bucket = _bucket_expr(key_cols[0], m["num_buckets"])
         existing = (
             self._conform(self.read(buckets=touched, include_meta=True), new_schema)
             .withColumn(
@@ -1018,59 +1077,33 @@ class SnapshotTable:
                 F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), "D").otherwise("U"),
             )
             .withColumn("_src", F.lit(0))
-            .withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B))
+            .withColumn(BUCKET_COL, bucket)
         )
         incoming = (
             self._conform(batch, new_schema, carry=[op_col])
             .withColumn("_src", F.lit(1))
-            .withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B))
+            .withColumn(BUCKET_COL, bucket)
         )
-
-        combined = existing.unionByName(incoming)
-        # r06 single-exchange epoch (guide §2.4): hash-cluster the union by
-        # BUCKET_COL once, then aggregate on (bucket, *key_cols) — bucket is a
-        # pure function of key_cols[0], so the grouping is semantically
-        # unchanged, and HashPartitioning(bucket) ⊆ the grouping keys lets the
-        # aggregate reuse the exchange. The winners stay bucket-clustered all
-        # the way into the staging write (pre_partitioned below), removing the
-        # second full exchange of every surviving row that the staging
-        # repartition used to pay per epoch.
-        fpb = int(m.get("properties", {}).get("files_per_bucket", 1))
-        one_exchange = fpb == 1
-        if one_exchange:
-            combined = combined.repartition(max(len(touched), 1), BUCKET_COL)
+        # One exchange per epoch: the union is clustered once by _cluster's
+        # columns and the winners aggregate groups on them plus key_cols —
+        # bucket and salt are pure functions of the key, so the grouping is
+        # semantically unchanged while the aggregate reuses the exchange, and
+        # the winners stay clustered into the staging write.
+        combined, by = self._cluster(
+            existing.unionByName(incoming), len(touched), m
+        )
         # LWW resolution via the ONE shared winner aggregate (_lww_winners):
         # max_by over the total order (order_cols, _lsn, _src) — batch rows
         # (_src=1) beat existing on ties; _n_batch rides the same aggregate
         # for the conflict metric.
-        group_cols = [BUCKET_COL, *key_cols] if one_exchange else list(key_cols)
-        value_cols = [f.name for f in new_schema] + [op_col, "_src"] + (
-            [] if one_exchange else [BUCKET_COL]
-        )
         winners = self._lww_winners(
-            combined, group_cols, order_cols, value_cols,
+            combined, [*by, *key_cols], order_cols,
+            [f.name for f in new_schema] + [op_col, "_src"],
             tiebreak_cols=("_src",),
             extra_aggs={"_n_batch": F.sum("_src")},
         )
-        # Lineage stats ride on the write itself via Observation — computed while the
-        # staging write materializes the plan, so the epoch costs exactly ONE pass
-        # over the resolution window (no persist: caching the batch would force full
-        # row materialization and defeat Parquet column pruning; measured 6x slower
-        # at high parallelism).
-        # Conflict = a key that received >1 change in this batch (LWW losers), the
-        # analog of the reference's overwritten delete-then-insert rows.
-        obs = Observation(f"merge-{epoch_id}")
-        winners = winners.observe(
-            obs,
-            F.count(
-                F.when((F.col("_src") == 1) & (F.col(op_col) != "D"), 1)
-            ).alias("up"),
-            F.count(
-                F.when((F.col("_src") == 1) & (F.col(op_col) == "D"), 1)
-            ).alias("del"),
-            F.sum(
-                F.when(F.col("_n_batch") > 1, F.col("_n_batch") - 1).otherwise(0)
-            ).alias("conf"),
+        winners, obs = self._observed(
+            winners, epoch_id, op_col, from_batch=F.col("_src") == 1
         )
         # D-winners are retained as hidden tombstone rows (DELETED_COL=true) so
         # later out-of-order events cannot resurrect the key.
@@ -1084,44 +1117,74 @@ class SnapshotTable:
             # carries ``_src`` (0 = carried forward, 1 = from this batch) so the
             # transform can skip rows it already finalized in an earlier epoch.
             final = finalize_payload(final)
-        final = final.drop("_src")
-        staged = self._stage_buckets(final, touched, pre_partitioned=one_exchange)
-        stats = obs.get
-
-        files = dict(m["files"])
-        for b in touched:
-            files[str(b)] = staged.get(str(b), [])
-        new_manifest = {
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            "schema": json.loads(new_schema.json()),
-            "files": files,
-            "stats": self._merged_stats(m, touched, staged),
-            **self._cleared_deltas(m, touched),
-            **self._ledger(m, epoch_id),
-        }
-        sid, already = self._publish(new_manifest, m, touched)
-        if already:
-            return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
-        return MergeResult(
-            epoch_id=epoch_id,
-            touched_buckets=touched,
-            rows_upserted=int(stats["up"] or 0),
-            rows_deleted=int(stats["del"] or 0),
-            conflict_count=int(stats["conf"] or 0),
-            snapshot_id=sid,
+        res = self._rewrite(
+            m, epoch_id, touched, final.drop("_src"),
+            schema=json.loads(new_schema.json()),
         )
+        return self._counted(res, obs)
+
+    def _prepare_batch(
+        self,
+        batch: DataFrame,
+        m: dict,
+        op_col: str,
+        lsn_col: str,
+        touched: list[int] | None,
+    ) -> tuple[DataFrame, T.StructType, list[int]]:
+        """Prologue shared by both merge modes: conform former column names,
+        persist the lsn as ``_lsn``, evolve the schema from the batch payload,
+        and discover the touched buckets unless the caller (the epoch manager,
+        from its per-bucket stats) already knows them."""
+        batch = self._apply_renames_df(batch, m)
+        batch = batch.withColumn(LSN_COL, F.col(lsn_col).cast("long"))
+        new_schema = self._evolve_schema(
+            T.StructType([f for f in batch.schema if f.name not in (op_col, lsn_col)])
+        )
+        if touched is None:
+            touched = _touched_buckets(batch, m["key_cols"][0], m["num_buckets"])
+        return batch, new_schema, sorted(touched)
+
+    @staticmethod
+    def _observed(
+        winners: DataFrame, epoch_id: str, op_col: str, from_batch
+    ) -> tuple[DataFrame, Observation]:
+        """Lineage counts ride on the staging write itself via Observation, so
+        the epoch costs exactly ONE pass over the resolution window (no
+        persist: caching the batch would force full row materialization and
+        defeat Parquet column pruning; measured 6x slower at high
+        parallelism). Upserts/deletes count winners ``from_batch``; a conflict
+        is a key that received >1 change in this batch (LWW losers), the
+        analog of the reference's overwritten delete-then-insert rows."""
+        obs = Observation(f"merge-{epoch_id}")
+        winners = winners.observe(
+            obs,
+            F.count(F.when(from_batch & (F.col(op_col) != "D"), 1)).alias("up"),
+            F.count(F.when(from_batch & (F.col(op_col) == "D"), 1)).alias("del"),
+            F.sum(
+                F.when(F.col("_n_batch") > 1, F.col("_n_batch") - 1).otherwise(0)
+            ).alias("conf"),
+        )
+        return winners, obs
+
+    @staticmethod
+    def _counted(res: MergeResult, obs: Observation) -> MergeResult:
+        """Fill a committed merge's row counts from its staging write's
+        Observation (an idempotent skip reports none)."""
+        if not res.skipped:
+            c = obs.get
+            res.rows_upserted = int(c["up"] or 0)
+            res.rows_deleted = int(c["del"] or 0)
+            res.conflict_count = int(c["conf"] or 0)
+        return res
 
     def _merge_mor(
         self,
         batch: DataFrame,
         epoch_id: str,
         m: dict,
+        new_schema: T.StructType,
         op_col: str,
-        lsn_col: str,
-        touched: list[int] | None,
+        touched: list[int],
         finalize_payload,
     ) -> MergeResult:
         """MERGE-ON-READ epoch commit (Iceberg v2 row-level delta model): the
@@ -1142,40 +1205,19 @@ class SnapshotTable:
         until :meth:`compact` tightens them)."""
         key_cols = m["key_cols"]
         order_cols = [c for c in m["order_cols"] if c != LSN_COL]
-        B = m["num_buckets"]
-
-        batch = self._apply_renames_df(batch, m)
-        batch = batch.withColumn(LSN_COL, F.col(lsn_col).cast("long"))
-        payload_schema = T.StructType(
-            [f for f in batch.schema if f.name not in (op_col, lsn_col)]
+        incoming, by = self._cluster(
+            self._conform(batch, new_schema, carry=[op_col]).withColumn(
+                BUCKET_COL, _bucket_expr(key_cols[0], m["num_buckets"])
+            ),
+            len(touched),
+            m,
         )
-        new_schema = self._evolve_schema(payload_schema)
-
-        batch = batch.withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B))
-        if touched is None:
-            touched = sorted(
-                r[0] for r in batch.select(BUCKET_COL).distinct().collect()
-            )
-        else:
-            touched = sorted(touched)
-
-        incoming = self._conform(batch, new_schema, carry=[op_col]).withColumn(
-            BUCKET_COL, _bucket_expr(key_cols[0], B)
-        )
-        value_cols = [f.name for f in new_schema] + [op_col, BUCKET_COL]
         winners = self._lww_winners(
-            incoming, key_cols, order_cols, value_cols,
+            incoming, [*by, *key_cols], order_cols,
+            [f.name for f in new_schema] + [op_col],
             extra_aggs={"_n_batch": F.count(F.lit(1))},
         )
-        obs = Observation(f"merge-{epoch_id}")
-        winners = winners.observe(
-            obs,
-            F.count(F.when(F.col(op_col) != "D", 1)).alias("up"),
-            F.count(F.when(F.col(op_col) == "D", 1)).alias("del"),
-            F.sum(
-                F.when(F.col("_n_batch") > 1, F.col("_n_batch") - 1).otherwise(0)
-            ).alias("conf"),
-        )
+        winners, obs = self._observed(winners, epoch_id, op_col, F.lit(True))
         final = (
             winners.withColumn(DELETED_COL, F.col(op_col) == "D")
             .select(*[f.name for f in new_schema], BUCKET_COL)
@@ -1188,33 +1230,17 @@ class SnapshotTable:
         final = final.withColumn(
             SRC_COL, F.lit(m["snapshot_id"] + 1).cast("long")
         )
-        staged = self._stage_buckets(final, touched)
-        stats = obs.get
-
+        staged = self._stage_buckets(final)
         deltas = dict(m.get("deltas", {}))
         for b in touched:
             deltas[str(b)] = list(deltas.get(str(b), [])) + staged.get(str(b), [])
-        new_manifest = {
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            "schema": json.loads(new_schema.json()),
-            "deltas": deltas,
-            "stats": self._widened_stats(m, touched, staged),
-            **self._ledger(m, epoch_id),
-        }
-        sid, already = self._publish(new_manifest, m, touched)
-        if already:
-            return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
-        return MergeResult(
-            epoch_id=epoch_id,
-            touched_buckets=touched,
-            rows_upserted=int(stats["up"] or 0),
-            rows_deleted=int(stats["del"] or 0),
-            conflict_count=int(stats["conf"] or 0),
-            snapshot_id=sid,
+        res = self._commit(
+            m, epoch_id, touched,
+            schema=json.loads(new_schema.json()),
+            deltas=deltas,
+            stats=self._widened_stats(m, touched, staged),
         )
+        return self._counted(res, obs)
 
     # ---------------------------------------------------------------- MERGE-agg
 
@@ -1236,54 +1262,30 @@ class SnapshotTable:
         """
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
         key_cols, B = m["key_cols"], m["num_buckets"]
         fns = {"min": F.min, "max": F.max, "sum": F.sum}
+        schema = T.StructType.fromJson(m["schema"])
 
         batch = self._apply_renames_df(batch, m)
-        batch = batch.withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B))
-        touched = sorted(r[0] for r in batch.select(BUCKET_COL).distinct().collect())
-        schema = self.schema()
-
-        existing = self._conform(self.read(buckets=touched), schema).withColumn(
-            BUCKET_COL, _bucket_expr(key_cols[0], B)
+        touched = _touched_buckets(batch, key_cols[0], B)
+        # same single exchange as merge(): cluster, then group on the
+        # clustering columns plus the key
+        merged, by = self._cluster(
+            self._conform(self.read(buckets=touched), schema)
+            .unionByName(self._conform(batch, schema))
+            .withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B)),
+            len(touched),
+            m,
         )
-        incoming = self._conform(batch, schema).withColumn(
-            BUCKET_COL, _bucket_expr(key_cols[0], B)
+        merged = merged.groupBy(*by, *key_cols).agg(
+            *[fns[how](F.col(c)).alias(c) for c, how in combine.items()]
         )
-        merged = (
-            existing.unionByName(incoming)
-            .groupBy(*key_cols)
-            .agg(
-                *[fns[how](F.col(c)).alias(c) for c, how in combine.items()],
-                F.first(BUCKET_COL).alias(BUCKET_COL),
-            )
+        final = self._conform(merged, schema, carry=[BUCKET_COL]).withColumn(
+            DELETED_COL, F.lit(False)
         )
-        final = (
-            self._conform(merged.drop(DELETED_COL), schema, carry=[BUCKET_COL])
-            .withColumn(DELETED_COL, F.lit(False))
-            .select(*[f.name for f in schema], BUCKET_COL)
-        )
-        staged = self._stage_buckets(final, touched)
-        files = dict(m["files"])
-        for b in touched:
-            files[str(b)] = staged.get(str(b), [])
-        new_manifest = {
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            "files": files,
-            "stats": self._merged_stats(m, touched, staged),
-            **self._cleared_deltas(m, touched),
-            **self._ledger(m, epoch_id),
-        }
-        sid, already = self._publish(new_manifest, m, touched)
-        if already:
-            return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
-        return MergeResult(epoch_id=epoch_id, touched_buckets=touched, snapshot_id=sid)
+        return self._rewrite(m, epoch_id, touched, final)
 
     # ---------------------------------------------------------------- MERGE-replace
 
@@ -1307,9 +1309,8 @@ class SnapshotTable:
         """
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
         key_cols, B = m["key_cols"], m["num_buckets"]
         scope_cols = [c for c in key_cols if c in keys.columns]
         if key_cols[0] not in scope_cols:
@@ -1317,15 +1318,11 @@ class SnapshotTable:
                 f"keys must include the leading key column {key_cols[0]!r} "
                 f"(got {keys.columns}) — bucket pruning is impossible otherwise"
             )
-        keys = keys.select(*scope_cols).distinct()
-        # pruning decision: ≤B ints collected, same contract as merge()
-        touched = sorted(
-            r[0]
-            for r in keys.select(_bucket_expr(key_cols[0], B).alias(BUCKET_COL))
-            .distinct()
-            .collect()
-        )
-        schema = self.schema()
+        # no distinct: the anti-join below ignores duplicate keys, and
+        # _touched_buckets dedups bucket ids itself
+        keys = keys.select(*scope_cols)
+        touched = _touched_buckets(keys, key_cols[0], B)
+        schema = T.StructType.fromJson(m["schema"])
         # NULL-SAFE scoping: Spark doesn't enforce key nullability on write,
         # and callers (e.g. the change feed's dirty-group replace) may scope a
         # NULL-valued group key; plain `on=` equality would keep the existing
@@ -1340,31 +1337,15 @@ class SnapshotTable:
         )
         final = self._conform(kept, schema)
         if agg is not None:
-            incoming = self._conform(
-                self._apply_renames_df(agg, m), schema
-            ).withColumn(
-                DELETED_COL, F.lit(False)
+            final = final.unionByName(
+                self._conform(self._apply_renames_df(agg, m), schema).withColumn(
+                    DELETED_COL, F.lit(False)
+                )
             )
-            final = final.unionByName(self._conform(incoming, schema))
         final = final.withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B))
-        staged = self._stage_buckets(final, touched)
-        files = dict(m["files"])
-        for b in touched:
-            files[str(b)] = staged.get(str(b), [])
-        new_manifest = {
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            "files": files,
-            "stats": self._merged_stats(m, touched, staged),
-            **self._cleared_deltas(m, touched),
-            **self._ledger(m, epoch_id),
-        }
-        sid, already = self._publish(new_manifest, m, touched)
-        if already:
-            return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
-        return MergeResult(epoch_id=epoch_id, touched_buckets=touched, snapshot_id=sid)
+        return self._rewrite(
+            m, epoch_id, touched, self._cluster(final, len(touched), m)[0]
+        )
 
     def delete_keys(self, keys: DataFrame, epoch_id: str) -> MergeResult:
         """Scoped PHYSICAL keyed delete: remove every row whose leading key appears
@@ -1393,9 +1374,8 @@ class SnapshotTable:
         underlying merge ledger."""
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
         key_cols, B = m["key_cols"], m["num_buckets"]
         order_cols = [c for c in m["order_cols"] if c != LSN_COL]
         scope_cols = [c for c in key_cols if c in keys.columns]
@@ -1424,12 +1404,7 @@ class SnapshotTable:
             )
         else:
             keys = keys.select(*scope_cols).distinct()
-        touched = sorted(
-            r[0]
-            for r in keys.select(_bucket_expr(key_cols[0], B).alias(BUCKET_COL))
-            .distinct()
-            .collect()
-        )
+        touched = _touched_buckets(keys, key_cols[0], B)
         live = (
             self.read(buckets=touched, include_meta=True)
             .filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
@@ -1494,28 +1469,26 @@ class SnapshotTable:
             .select(*[f.name for f in new_schema], BUCKET_COL)
         )
         touched = list(range(B))
-        staged = self._stage_buckets(compacted, touched)
+        staged = self._stage_buckets(self._cluster(compacted, B, m)[0])
         if lsn_obs is not None:
             hi_lsn = lsn_obs.get["hi"]
-        new_manifest = {
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": str(epoch_id),
-            "schema": json.loads(new_schema.json()),
-            "files": {b: fs for b, fs in staged.items()},
-            "stats": self._merged_stats({**m, "stats": {}}, touched, staged),
+        new_manifest = self._successor(
+            m,
+            str(epoch_id),
+            schema=json.loads(new_schema.json()),
+            files=staged,
+            stats=self._merged_stats({**m, "stats": {}}, touched, staged),
             **({"deltas": {}} if "deltas" in m else {}),
             # bulk load supersedes incremental history: tail AND settled
             # watermark reset (a stale watermark would mark pre-bulk epoch ids
             # as committed under the new history)
-            "committed_epochs": [str(epoch_id)],
-            "epochs_through": dict(),
-            "properties": {
+            committed_epochs=[str(epoch_id)],
+            epochs_through={},
+            properties={
                 **m.get("properties", {}),
                 "bootstrap_hi_lsn": int(hi_lsn) if hi_lsn is not None else None,
             },
-        }
+        )
         self._settled = {}  # pending settlement belongs to the superseded history
         sid = self._write_manifest(new_manifest)
         return MergeResult(epoch_id=str(epoch_id), touched_buckets=touched,
@@ -1529,10 +1502,10 @@ class SnapshotTable:
         rows matching ``predicate`` (a Column). ``buckets`` restricts the rewrite
         to the given buckets (caller asserts no other bucket matches) — the
         pruning hook for maintenance passes like tombstone expiry."""
+        epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, str(epoch_id)):
-            return MergeResult(epoch_id=str(epoch_id), skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
         B = m["num_buckets"]
         touched = list(range(B)) if buckets is None else sorted(buckets)
         kept = (
@@ -1540,27 +1513,9 @@ class SnapshotTable:
             .filter(~predicate)
             .withColumn(BUCKET_COL, _bucket_expr(m["key_cols"][0], B))
         )
-        staged = self._stage_buckets(kept, touched)
-        # untouched buckets carry their files forward by reference (CoW contract)
-        files = dict(m["files"])
-        for b in touched:
-            files[str(b)] = staged.get(str(b), [])
-        new_manifest = {
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": str(epoch_id),
-            "files": files,
-            "stats": self._merged_stats(m, touched, staged),
-            **self._cleared_deltas(m, touched),
-            **self._ledger(m, str(epoch_id)),
-        }
-        sid, already = self._publish(new_manifest, m, touched)
-        if already:
-            return MergeResult(epoch_id=str(epoch_id), skipped=True,
-                               snapshot_id=sid)
-        return MergeResult(epoch_id=str(epoch_id), touched_buckets=touched,
-                           snapshot_id=sid)
+        return self._rewrite(
+            m, epoch_id, touched, self._cluster(kept, len(touched), m)[0]
+        )
 
     def changes_between(
         self, from_snapshot: int, to_snapshot: int, emit_preimage: bool = False
@@ -1682,19 +1637,9 @@ class SnapshotTable:
         uninterrupted run (ADVICE r03 medium). Idempotent per epoch_id."""
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
-        sid, already = self._publish({
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            **self._ledger(m, epoch_id),
-        }, m, touched=[])
-        if already:
-            return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
-        return MergeResult(epoch_id=epoch_id, touched_buckets=[], snapshot_id=sid)
+        if done := self._already(m, epoch_id):
+            return done
+        return self._commit(m, epoch_id, [])
 
     def rename_column(self, old: str, new: str, epoch_id: str) -> MergeResult:
         """METADATA-ONLY column rename — the reference's ALTER TABLE ... RENAME
@@ -1715,9 +1660,8 @@ class SnapshotTable:
         overwrite. Idempotent per epoch_id."""
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
         schema = T.StructType.fromJson(m["schema"])
         names = [f.name for f in schema]
         if old not in names:
@@ -1748,17 +1692,14 @@ class SnapshotTable:
             b: {(new if c == old else c): v for c, v in cs.items()}
             for b, cs in m.get("stats", {}).items()
         }
-        sid = self._write_manifest({
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            "schema": json.loads(T.StructType(new_fields).json()),
-            "renamed_cols": renames,
-            "stats": stats,
-            "properties": props,
-            **self._ledger(m, epoch_id),
-        })
+        sid = self._write_manifest(self._successor(
+            m,
+            epoch_id,
+            schema=json.loads(T.StructType(new_fields).json()),
+            renamed_cols=renames,
+            stats=stats,
+            properties=props,
+        ))
         return MergeResult(epoch_id=epoch_id, touched_buckets=[], snapshot_id=sid)
 
     # ---------------------------------------------------------------- maintenance
@@ -1787,9 +1728,8 @@ class SnapshotTable:
         every bucket a single small delta ever touched. Default 1 folds all."""
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
         B = m["num_buckets"]
         delta_buckets = {
             int(b)
@@ -1810,34 +1750,11 @@ class SnapshotTable:
         rows = self.read(buckets=touched, include_meta=True).withColumn(
             BUCKET_COL, _bucket_expr(m["key_cols"][0], B)
         )
-        # bypass salted staging: exactly one task (and file) per bucket
-        stage_rel = os.path.join(DATA_DIR, uuid.uuid4().hex)
-        shuffled = rows.repartition(len(touched), BUCKET_COL)
-        sort_by = self.key_cols() if sort_cols is None else list(sort_cols)
-        if sort_by:
-            shuffled = shuffled.sortWithinPartitions(BUCKET_COL, *sort_by)
-        (
-            shuffled.write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(self._abs(stage_rel))
+        # unsalted: exactly one task (and file) per bucket
+        return self._rewrite(
+            m, epoch_id, touched, self._cluster(rows, len(touched))[0],
+            sort_by=m["key_cols"] if sort_cols is None else list(sort_cols),
         )
-        staged = self._staged_files(stage_rel)
-        files = dict(m["files"])
-        for b in touched:
-            files[str(b)] = staged.get(str(b), [])
-        sid, already = self._publish({
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            "files": files,
-            "stats": self._merged_stats(m, touched, staged),
-            **self._cleared_deltas(m, touched),
-            **self._ledger(m, epoch_id),
-        }, m, touched)
-        if already:
-            return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
-        return MergeResult(epoch_id=epoch_id, touched_buckets=touched, snapshot_id=sid)
 
     def rebucket(self, new_num_buckets: int, epoch_id: str) -> MergeResult:
         """Bucket-LAYOUT evolution: re-hash the whole table into a different
@@ -1863,9 +1780,8 @@ class SnapshotTable:
         a ledger marker so crash-resume replay stays deterministic."""
         epoch_id = str(epoch_id)
         m = self.manifest()
-        if self._has_epoch_m(m, epoch_id):
-            return MergeResult(epoch_id=epoch_id, skipped=True,
-                               snapshot_id=m["snapshot_id"])
+        if done := self._already(m, epoch_id):
+            return done
         B = int(new_num_buckets)
         if B < 1:
             raise ValueError(f"num_buckets must be >= 1, got {B}")
@@ -1875,27 +1791,17 @@ class SnapshotTable:
         rows = self.read(include_meta=True).withColumn(
             BUCKET_COL, _bucket_expr(key0, B)
         )
-        stage_rel = os.path.join(DATA_DIR, uuid.uuid4().hex)
-        (
-            rows.repartition(B, BUCKET_COL)
-            .sortWithinPartitions(BUCKET_COL, *self.key_cols())
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(self._abs(stage_rel))
+        staged = self._stage_buckets(
+            self._cluster(rows, B)[0], sort_by=m["key_cols"]
         )
-        staged = self._staged_files(stage_rel)
-        files = {str(b): staged.get(str(b), []) for b in range(B)}
-        sid = self._write_manifest({
-            **m,
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent_id": m["snapshot_id"],
-            "epoch_id": epoch_id,
-            "num_buckets": B,
-            "files": files,
-            "stats": self._merged_stats({**m, "stats": {}}, list(range(B)), staged),
+        sid = self._write_manifest(self._successor(
+            m,
+            epoch_id,
+            num_buckets=B,
+            files={str(b): staged.get(str(b), []) for b in range(B)},
+            stats=self._merged_stats({**m, "stats": {}}, list(range(B)), staged),
             **({"deltas": {}} if "deltas" in m else {}),
-            **self._ledger(m, epoch_id),
-        })
+        ))
         return MergeResult(epoch_id=epoch_id, touched_buckets=list(range(B)),
                            snapshot_id=sid)
 
@@ -1926,17 +1832,12 @@ class SnapshotTable:
             F.lit(False),
         )
         m = self.manifest()
-        if self._has_epoch_m(m, str(epoch_id)):
-            return MergeResult(epoch_id=str(epoch_id), skipped=True,
-                               snapshot_id=m["snapshot_id"])
-        key0, B = m["key_cols"][0], m["num_buckets"]
-        candidates = sorted(
-            r[0]
-            for r in self.read(include_meta=True)
-            .filter(pred)
-            .select(_bucket_expr(key0, B).alias(BUCKET_COL))
-            .distinct()
-            .collect()
+        if done := self._already(m, str(epoch_id)):
+            return done
+        candidates = _touched_buckets(
+            self.read(include_meta=True).filter(pred),
+            m["key_cols"][0],
+            m["num_buckets"],
         )
         if not candidates:
             # the "nothing expired" decision is still LEDGERED: a crash-resume

@@ -42,8 +42,8 @@ def pushed_filters(df: DataFrame) -> list[str]:
 
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle Exchange operators (each is a full network/disk pass at
-    scale; the CDC apply path budget is: 1 for the LWW hash-agg + 1 for the staged
-    bucket write)."""
+    scale; a table write's budget is 1: the bucket-clustering exchange, which
+    the LWW hash-agg reuses). A single-partition exchange is not counted."""
     s = explain_str(df, "simple")  # simple mode inlines "Exchange hashpartitioning(...)"
     return len(re.findall(r"\bExchange (?:hashpartitioning|rangepartitioning)", s))
 

@@ -424,19 +424,13 @@ class AggFeedSync(ChangeFeedSync):
         the most work), and a forced broadcast of it is a driver/executor
         OOM. AQE still picks a broadcast at runtime whenever the key set is
         actually small, so the common path's plan is unchanged."""
-        from etl_german_fhir_core_spark.lake.table import _bucket_expr
+        from etl_german_fhir_core_spark.lake.table import _touched_buckets
 
         buckets = None
         src_m = self.source.manifest(to_snapshot)
         if self.group_cols[0] == src_m["key_cols"][0]:
-            buckets = sorted(
-                r[0]
-                for r in dirty.select(
-                    _bucket_expr(self.group_cols[0], src_m["num_buckets"])
-                    .alias("_b")
-                )
-                .distinct()
-                .collect()
+            buckets = _touched_buckets(
+                dirty, self.group_cols[0], src_m["num_buckets"]
             )
         state = self.source.read(snapshot_id=to_snapshot, buckets=buckets)
         value_srcs = dict.fromkeys(

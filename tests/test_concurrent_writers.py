@@ -12,6 +12,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_german_fhir_core_spark.lake import SnapshotTable
@@ -53,8 +54,6 @@ def _batch(spark, rows):
 
 
 def _bucket_of(spark, tbl, conv_id: str) -> int:
-    from pyspark.sql import functions as F
-
     from etl_german_fhir_core_spark.lake.table import _bucket_expr
 
     return (
@@ -64,9 +63,55 @@ def _bucket_of(spark, tbl, conv_id: str) -> int:
     )
 
 
-def _mk(spark, root) -> SnapshotTable:
+def _mk(spark, root, merge_mode: str = "cow") -> SnapshotTable:
     return SnapshotTable.create(spark, root, SCHEMA, ["conv_id", "turn_idx"],
-                                num_buckets=8)
+                                num_buckets=8, merge_mode=merge_mode)
+
+
+def _seed(spark, tbl, key: str) -> None:
+    tbl.merge(_batch(spark, [("U", 0, key, 0, "old-A", TS0),
+                             ("U", 0, key, 1, "stale", TS0)]), epoch_id="e-seed")
+
+
+def _upsert(spark, tbl, key, epoch_id):
+    return tbl.merge(_batch(spark, [("U", 1, key, 0, "from-A", TS0)]),
+                     epoch_id=epoch_id)
+
+
+def _replace(spark, tbl, key, epoch_id):
+    return tbl.merge_replace_keys(
+        spark.createDataFrame([(key, 0, "from-A", TS0)],
+                              "conv_id string, turn_idx int, text string, "
+                              "ts timestamp"),
+        spark.createDataFrame([(key,)], "conv_id string"),
+        epoch_id=epoch_id,
+    )
+
+
+def _delete_stale(spark, tbl, key, epoch_id):
+    return tbl.delete_where(F.col("text") == "stale", epoch_id=epoch_id,
+                            buckets=[_bucket_of(spark, tbl, key)])
+
+
+def _compact(spark, tbl, key, epoch_id):
+    return tbl.compact(epoch_id=epoch_id,
+                       target_buckets=[_bucket_of(spark, tbl, key)])
+
+
+# every rebaseable write, as the racing loser: name -> (merge_mode, seed the
+# key's bucket first, write(spark, tbl, key, epoch_id), key's texts after it)
+LOSER_WRITES = {
+    "cow_merge": ("cow", False, _upsert, {"from-A"}),
+    "mor_merge": ("mor", False, _upsert, {"from-A"}),
+    "merge_replace_keys": ("cow", True, _replace, {"from-A"}),
+    "delete_where": ("cow", True, _delete_stale, {"old-A"}),
+    "compact": ("mor", True, _compact, {"old-A", "stale"}),
+}
+
+
+def _rows(tbl) -> list:
+    return sorted((x["conv_id"], x["turn_idx"], x["text"])
+                  for x in tbl.read().collect())
 
 
 def _disjoint_keys(spark, tbl) -> tuple[str, str]:
@@ -81,27 +126,33 @@ def _disjoint_keys(spark, tbl) -> tuple[str, str]:
     raise AssertionError("no disjoint buckets in 32 keys")
 
 
-def test_disjoint_concurrent_commits_both_land(spark, tmp_path):
-    tbl_b = _mk(spark, str(tmp_path / "t"))
+@pytest.mark.parametrize("write", list(LOSER_WRITES))
+def test_disjoint_concurrent_commits_both_land(spark, tmp_path, write):
+    mode, seeded, loser_write, texts_a = LOSER_WRITES[write]
+    tbl_b = _mk(spark, str(tmp_path / "t"), mode)
     ka, kb = _disjoint_keys(spark, tbl_b)
-    rows_a = [("U", 1, ka, 0, "from-A", TS0)]
+    if seeded:
+        _seed(spark, tbl_b, ka)
     rows_b = [("U", 2, kb, 0, "from-B", TS0)]
 
     tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
     tbl_a.committer = _LoseFirstRace(
         lambda: tbl_b.merge(_batch(spark, rows_b), epoch_id="e-live")
     )
-    r = tbl_a.merge(_batch(spark, rows_a), epoch_id="e-backfill")
+    r = loser_write(spark, tbl_a, ka, "e-backfill")
     assert not r.skipped
 
     assert tbl_b.has_epoch("e-live") and tbl_b.has_epoch("e-backfill")
     state = {(x["conv_id"], x["text"]) for x in tbl_a.read().collect()}
-    # serial reference: same two batches applied one after the other
-    ref = _mk(spark, str(tmp_path / "ref"))
+    # serial reference: same two writes applied one after the other
+    ref = _mk(spark, str(tmp_path / "ref"), mode)
+    if seeded:
+        _seed(spark, ref, ka)
     ref.merge(_batch(spark, rows_b), epoch_id="e-live")
-    ref.merge(_batch(spark, rows_a), epoch_id="e-backfill")
+    loser_write(spark, ref, ka, "e-backfill")
     ref_state = {(x["conv_id"], x["text"]) for x in ref.read().collect()}
-    assert state == ref_state == {(ka, "from-A"), (kb, "from-B")}
+    assert state == ref_state == {(ka, t) for t in texts_a} | {(kb, "from-B")}
+    assert _rows(tbl_a) == _rows(ref)
 
 
 def test_overlapping_buckets_still_conflict(spark, tmp_path):
@@ -120,19 +171,49 @@ def test_overlapping_buckets_still_conflict(spark, tmp_path):
     assert {x["text"] for x in tbl_b.read().collect()} == {"from-B"}
 
 
-def test_duplicate_epoch_race_is_idempotent(spark, tmp_path):
+@pytest.mark.parametrize("write", list(LOSER_WRITES))
+def test_duplicate_epoch_race_is_idempotent(spark, tmp_path, write):
     """Two at-least-once deliveries of the SAME epoch racing: the loser detects
     its epoch already committed at rebase time and returns the idempotent skip."""
-    tbl_b = _mk(spark, str(tmp_path / "t"))
-    rows = [("U", 1, "cY", 0, "payload", TS0)]
+    mode, seeded, loser_write, texts = LOSER_WRITES[write]
+    tbl_b = _mk(spark, str(tmp_path / "t"), mode)
+    if seeded:
+        _seed(spark, tbl_b, "cY")
 
     tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
     tbl_a.committer = _LoseFirstRace(
-        lambda: tbl_b.merge(_batch(spark, rows), epoch_id="e1")
+        lambda: loser_write(spark, tbl_b, "cY", "e1")
     )
-    r = tbl_a.merge(_batch(spark, rows), epoch_id="e1")
+    r = loser_write(spark, tbl_a, "cY", "e1")
     assert r.skipped
-    assert tbl_b.read().count() == 1
+    # exactly one application of the epoch
+    assert {x["text"] for x in tbl_b.read().collect()} == texts
+    assert tbl_b.read().count() == len(texts)
+
+
+def test_disjoint_concurrent_merge_agg_commits_both_land(spark, tmp_path):
+    """merge_agg's rebase: the loser's folded bucket and the winner's both
+    survive, each folded exactly once."""
+    schema = T.StructType([T.StructField("conv_id", T.StringType(), False),
+                           T.StructField("n", T.LongType(), True)])
+    tbl_b = SnapshotTable.create(spark, str(tmp_path / "t"), schema,
+                                 ["conv_id"], num_buckets=8)
+    ka, kb = _disjoint_keys(spark, tbl_b)
+
+    def fold(tbl, key, n, epoch_id):
+        return tbl.merge_agg(
+            spark.createDataFrame([(key, n)], "conv_id string, n long"),
+            {"n": "sum"}, epoch_id=epoch_id,
+        )
+
+    fold(tbl_b, ka, 1, "e-seed")
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
+    tbl_a.committer = _LoseFirstRace(lambda: fold(tbl_b, kb, 5, "e-live"))
+    r = fold(tbl_a, ka, 2, "e-backfill")
+    assert not r.skipped
+    assert tbl_b.has_epoch("e-live") and tbl_b.has_epoch("e-backfill")
+    got = sorted((x["conv_id"], x["n"]) for x in tbl_a.read().collect())
+    assert got == sorted([(ka, 3), (kb, 5)])
 
 
 def test_disjoint_rebase_with_schema_evolution(spark, tmp_path):

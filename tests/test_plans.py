@@ -49,10 +49,12 @@ def test_feed_scan_pushes_lsn_filter(spark, tmp_path):
     assert "text" not in "".join(re.findall(r"ReadSchema: [^\n]*", explain_str(df)))
 
 
-def test_merge_resolution_shuffle_budget(spark, tmp_path):
+def test_merge_resolution_shuffle_budget(spark, tmp_path, monkeypatch):
     """The LWW resolution plan must cost exactly one hash-partition exchange
     (the groupBy on the key) — a second exchange before the window/sort would
-    double the epoch's network cost at scale."""
+    double the epoch's network cost at scale. The same budget holds for the
+    frame every table write path hands to its staging write: the clustering
+    exchange also serves the resolution aggregate, salted or not."""
     import pyspark.sql.types as T
 
     from etl_german_fhir_core_spark.lake import SnapshotTable
@@ -73,8 +75,8 @@ def test_merge_resolution_shuffle_budget(spark, tmp_path):
         "op string, lsn long, conv_id string, turn_idx int, text string, ts timestamp",
     )
     tbl.merge(batch, epoch_id="1")
-    # re-merge path: existing ∪ batch → groupBy max_by; count exchanges in the plan
-    # the staging write adds its own repartition, so budget = 2 total
+    # re-merge path: existing ∪ batch → groupBy max_by; the resolution
+    # aggregate alone costs one exchange
     batch2 = batch.withColumn("lsn", F.lit(2).cast("long"))
     from etl_german_fhir_core_spark.lake.table import BUCKET_COL, _bucket_expr
 
@@ -84,6 +86,76 @@ def test_merge_resolution_shuffle_budget(spark, tmp_path):
         .agg(F.max_by(F.struct("text"), F.struct("ts", "lsn")).alias("w"))
     )
     assert count_exchanges(combined_plan) == 1
+
+    # every frame a table write hands to DataFrame.write, captured per call
+    # (patched on the concrete session DataFrame class, which defines write)
+    written: list = []
+    frame_cls = type(batch)
+    write = frame_cls.write
+    monkeypatch.setattr(
+        frame_cls, "write",
+        property(lambda df: (written.append(df), write.fget(df))[1]),
+    )
+
+    def exchanges_of_write(op) -> int:
+        written.clear()
+        op()
+        assert len(written) == 1  # one staging write per commit
+        return count_exchanges(written[0])
+
+    # eight conversations over several buckets: a write into a single
+    # bucket would plan its exchange as SinglePartition
+    convs = [f"c{i}" for i in range(8)]
+    wide = spark.createDataFrame(
+        [("U", 2, c, 0, "again", dt.datetime(2025, 1, 2)) for c in convs],
+        "op string, lsn long, conv_id string, turn_idx int, text string, ts timestamp",
+    )
+
+    def mk(name, **kw):
+        t = SnapshotTable.create(
+            spark, str(tmp_path / name), schema, ["conv_id", "turn_idx"],
+            num_buckets=4, **kw,
+        )
+        t.merge(wide.withColumn("lsn", F.lit(1).cast("long")), epoch_id="1")
+        return t
+
+    cow, salted, mor = mk("cow"), mk("salted", files_per_bucket=4), mk(
+        "mor", merge_mode="mor"
+    )
+    assert exchanges_of_write(lambda: cow.merge(wide, epoch_id="2")) == 1
+    assert exchanges_of_write(lambda: salted.merge(wide, epoch_id="2")) == 1
+    assert exchanges_of_write(lambda: mor.merge(wide, epoch_id="2")) == 1
+    # the scope keys come from a frame the planner sizes as small, so the
+    # anti-join broadcasts them; a large key set sort-merge joins instead
+    keys = spark.range(8).select(
+        F.concat(F.lit("c"), F.col("id").cast("string")).alias("conv_id")
+    )
+    assert exchanges_of_write(
+        lambda: cow.merge_replace_keys(
+            wide.select("conv_id", "turn_idx", F.lit("replaced").alias("text"), "ts"),
+            keys,
+            epoch_id="r",
+        )
+    ) == 1
+    assert exchanges_of_write(
+        lambda: cow.delete_where(F.col("text") == "gone", epoch_id="d")
+    ) == 1
+    agg = SnapshotTable.create(
+        spark, str(tmp_path / "agg"),
+        T.StructType([
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("n", T.LongType(), True),
+        ]),
+        ["conv_id"], num_buckets=4,
+    )
+    rows = wide.select("conv_id", F.lit(1).cast("long").alias("n"))
+    agg.merge_agg(rows, {"n": "sum"}, epoch_id="1")
+    assert exchanges_of_write(
+        lambda: agg.merge_agg(rows, {"n": "sum"}, epoch_id="2")
+    ) == 1
+    assert sorted((r["conv_id"], r["n"]) for r in agg.read().collect()) == [
+        (c, 2) for c in convs
+    ]
 
 
 def test_jdbc_paged_scan_roundtrip_derby(spark):
