@@ -312,10 +312,9 @@ def q_cdc_changefeed_agg(spark, sf_dir):
 def q_cdc_changefeed_minmax(spark, sf_dir):
     """Delta-maintained MIN/MAX view over the change feed (streaming/changefeed
     AggFeedSync min_cols/max_cols — the IVM case monoid folding cannot do:
-    extremes are not retractable, so groups hit by a delete or an LWW
-    replacement are re-aggregated from the source at the diff's TO snapshot,
-    bucket-pruned + semi-joined, under the cdf-<n>/mm maintenance marker;
-    insert-only groups still fold O(diff)). The per-conversation
+    extremes are not retractable, so every group a sync's diff touches is
+    re-aggregated from the source at the diff's TO snapshot, bucket-pruned +
+    semi-joined, and replaced in one commit under cdf-<n>). The per-conversation
     COUNT/SUM/MIN/MAX view maintained only from snapshot diffs across two
     source merges must equal DuckDB's direct aggregate over the feed's LWW
     live state — deletes of a conversation's extreme turns included."""

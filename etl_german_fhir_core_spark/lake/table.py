@@ -1347,13 +1347,6 @@ class SnapshotTable:
             m, epoch_id, touched, self._cluster(final, len(touched), m)[0]
         )
 
-    def delete_keys(self, keys: DataFrame, epoch_id: str) -> MergeResult:
-        """Scoped PHYSICAL keyed delete: remove every row whose leading key appears
-        in ``keys``. Sugar for merge_replace_keys(agg=None, ...). For engine-driven
-        FK cascades use :meth:`cascade_tombstones` instead — physical removal leaves
-        no tombstone, so a late child-directed event could resurrect the row."""
-        return self.merge_replace_keys(None, keys, epoch_id)
-
     def cascade_tombstones(self, keys: DataFrame, epoch_id: str) -> MergeResult:
         """FK cascade delete as RETAINED tombstones (ADVICE r02 medium; reference
         O9: ON DELETE CASCADE FKs, pre_processing/pre_process_alter_tables.sql:48-98).

@@ -107,19 +107,12 @@ def _spread_small_input(df: DataFrame, key: str | None = None) -> DataFrame:
     return df
 
 
-def _materialize_small(df: DataFrame) -> DataFrame:
-    """Persist AND eagerly populate (count) a small multi-consumer frame.
-
-    A lazy persist is not enough when several consumers sit in ONE downstream
-    job: stages race the cache and each recomputes the full lineage. The eager
-    count is one extra tiny job and makes the expensive pipeline upstream run
-    exactly once. Callers must guarantee the frame is small (pair-graph nodes
-    and edges — near-linear in duplicate count, never corpus-sized)."""
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    return df
+def _drop_checkpoint(frame: DataFrame) -> None:
+    """Free a local checkpoint's blocks. A checkpoint has no DataFrame-level
+    unpersist (``DataFrame.unpersist`` leaves them cached), so unpersist the
+    RDD under its plan directly; Spark logs that the truncated lineage cannot
+    be recomputed — intended, callers drop only superseded rounds."""
+    frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _shingle_rows(
@@ -982,15 +975,16 @@ def dedup_clusters_star(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
 
     Input: (id1, id2) pairs. Output: (doc_id, cluster_id) for every paired doc.
     """
-    nodes = _materialize_small(
+    nodes = (
         pairs.select(F.col("id1").alias("doc_id"))
         .union(pairs.select(F.col("id2").alias("doc_id")))
         .distinct()
     )
-    e = _materialize_small(
+    e = (
         pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
 
     def _large_star(edges: DataFrame) -> DataFrame:
@@ -1027,12 +1021,13 @@ def dedup_clusters_star(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
         changed = (
             e2.subtract(e).limit(1).count() + e.subtract(e2).limit(1).count()
         )
-        e.unpersist()
+        _drop_checkpoint(e)
         e = e2
         if changed == 0:
             converged = True
             break
     if not converged:
+        _drop_checkpoint(e)
         raise RuntimeError(
             f"dedup_clusters_star did not converge within max_iters={max_iters}"
         )
@@ -1041,11 +1036,9 @@ def dedup_clusters_star(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     star = e.select(
         F.greatest("a", "b").alias("doc_id"), F.least("a", "b").alias("cluster_id")
     ).groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
-    out = nodes.join(star, "doc_id", "left").select(
+    return nodes.join(star, "doc_id", "left").select(
         "doc_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id")
     )
-    nodes.unpersist()
-    return out
 
 
 def dedup_clusters(
@@ -1092,12 +1085,6 @@ def dedup_clusters(
         frame = frame.localCheckpoint(eager=False)
         return frame, frame.filter(F.col("cluster_id") != F.col("_old")).count()
 
-    def drop(frame: DataFrame) -> None:
-        # a checkpoint has no DataFrame-level unpersist: free its RDD's blocks
-        # directly (Spark logs that the truncated lineage cannot be recomputed
-        # — intended, the next round is already materialized)
-        frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
     labels, changed = settle(
         edges.groupBy(F.col("a").alias("doc_id"))
         .agg(F.least(F.min("b"), F.first("a")).alias("cluster_id"))
@@ -1107,7 +1094,7 @@ def dedup_clusters(
     while changed:
         if rounds == max_iters:
             edges.unpersist()
-            drop(labels)
+            _drop_checkpoint(labels)
             # a chain-shaped component longer than max_iters would otherwise
             # return silently WRONG cluster ids (ADVICE r02 low) — fail loudly
             raise RuntimeError(
@@ -1127,7 +1114,7 @@ def dedup_clusters(
             .groupBy("doc_id")
             .agg(F.min("cluster_id").alias("cluster_id"), F.max("_old").alias("_old"))
         )
-        drop(labels)
+        _drop_checkpoint(labels)
         labels = new
         rounds += 1
     edges.unpersist()

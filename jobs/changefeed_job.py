@@ -6,8 +6,8 @@ cdf-<n> epochs, durable store-blob position):
 
   replica  apply each diff to a same-schema target table (Delta-CDF replica)
   agg      maintain a delta-folded aggregate view (COUNT always; SUM via
-           --sum out=src; MIN/MAX via --min/--max out=src — extremes use
-           dirty-group re-aggregation, see AggFeedSync)
+           --sum out=src; MIN/MAX via --min/--max out=src — extremes
+           re-aggregate the touched groups from the source, see AggFeedSync)
 
 Usage:
   spark-submit --py-files engine.zip jobs/changefeed_job.py \
@@ -127,8 +127,8 @@ def main() -> None:
     print(json.dumps({
         "mode": args.mode,
         "applied": applied,
-        # target snapshots this run committed: 1 per sync (2 with a /mm
-        # re-aggregation), whatever the number of source commits applied
+        # target snapshots this run committed: 1 per sync, whatever the
+        # number of source commits applied
         "target_commits": tgt.current_snapshot_id() - tgt_sid0,
         "position": sync.position(),
         "source_head": src.current_snapshot_id(),

@@ -301,12 +301,12 @@ def test_agg_feed_delta_maintained_view(spark, tmp_path):
 
 def test_agg_feed_minmax_dirty_group_reaggregation(spark, tmp_path):
     """MIN/MAX view maintenance: extremes are not retractable from deltas, so
-    groups with a retraction (D/U_pre) in a step's diff are re-aggregated from
-    the source at the diff's TO snapshot (bucket-pruned + semi-join), committed
-    under the cdf-<n>/mm maintenance marker; insert-only groups still fold
-    monoid-style. Covers: max shrinks when its row is deleted, max shrinks
-    when its row is updated DOWN, fully-deleted group is REMOVED, crash
-    between the clean fold and the /mm replace replays to the same state."""
+    every group a step's diff touches is re-aggregated from the source at the
+    diff's TO snapshot (bucket-pruned + semi-join) and replaced in ONE commit
+    under cdf-<n>, insert-only groups included. Covers: max shrinks when its
+    row is deleted, max shrinks when its row is updated DOWN, fully-deleted
+    group is REMOVED, a crash inside the one write retries to exactly one
+    commit, and a lost position write replays as a ledger skip."""
     schema = T.StructType(
         [
             T.StructField("conv_id", T.StringType(), False),
@@ -358,27 +358,32 @@ def test_agg_feed_minmax_dirty_group_reaggregation(spark, tmp_path):
                        min_cols={"min_score": "score"},
                        max_cols={"max_score": "score"})
 
-    # insert-only step: pure monoid fold, no /mm commit
+    # insert-only step: one commit, no maintenance marker
     src.merge(_b([
         ("U", 1, "c1", 0, 10, TS0),
         ("U", 2, "c1", 1, 50, TS0),
         ("U", 3, "c2", 0, 7, TS0),
     ]), epoch_id="e000001")
+    sids = tgt.current_snapshot_id()
     sync.sync_once()
     assert _got() == _expected() == {"c1": (2, 60, 10, 50), "c2": (1, 7, 7, 7)}
-    assert not tgt.has_epoch("cdf-1/mm")  # clean step never commits the marker
+    assert not tgt.has_epoch("cdf-1/mm")
+    assert tgt.current_snapshot_id() == sids + 1
+    assert tgt.manifest()["epoch_id"] == "cdf-1"
 
     # the monoid-impossible cases: delete c1's max row; update c2's only row
-    # DOWN; widen c3 insert-only in the same step (stays on the fold path)
+    # DOWN; widen c3 insert-only in the same step (same single commit)
     src.merge(_b([
         ("D", 10, "c1", 1, None, TS0 + dt.timedelta(seconds=60)),  # kills max 50
         ("U", 11, "c2", 0, 3, TS0 + dt.timedelta(seconds=61)),     # 7 -> 3
         ("U", 12, "c3", 0, 5, TS0),
     ]), epoch_id="e000002")
+    sids = tgt.current_snapshot_id()
     sync.sync_once()
     assert _got() == _expected() == {
         "c1": (1, 10, 10, 10), "c2": (1, 3, 3, 3), "c3": (1, 5, 5, 5)
     }
+    assert tgt.current_snapshot_id() == sids + 1
 
     # fully-deleted group is REMOVED (replace semantics), not a zero-row
     src.merge(_b([
@@ -388,41 +393,65 @@ def test_agg_feed_minmax_dirty_group_reaggregation(spark, tmp_path):
     got = _got()
     assert "c2" not in got and got == _expected()
 
-    # crash BETWEEN the clean fold (cdf-4) and the /mm replace: replay must
-    # skip the fold, re-derive the identical re-aggregate, and converge
+    # (a) crash INSIDE the view's one write (staged, manifest never
+    # published): nothing is ledgered, the position stays, and the retry
+    # re-derives the identical re-aggregate in exactly one commit
     src.merge(_b([
         ("U", 30, "c1", 0, 2, TS0 + dt.timedelta(seconds=180)),   # 10 -> 2
-        ("U", 31, "c4", 0, 9, TS0),                                # clean insert
+        ("U", 31, "c4", 0, 9, TS0),                                # insert
     ]), epoch_id="e000004")
-    orig = tgt.merge_replace_keys
-    calls = {"n": 0}
+    publish = tgt._publish
 
     def crashing(*a, **k):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise TimeoutError("injected: died before the /mm commit")
-        return orig(*a, **k)
+        raise TimeoutError("injected: died inside the view commit")
 
-    tgt.merge_replace_keys = crashing
+    tgt._publish = crashing
+    sids = tgt.current_snapshot_id()
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keys())
     with pytest.raises(TimeoutError, match="injected"):
         sync.sync_once()
+    tgt._publish = publish
+    assert set(jsc.getPersistentRDDs().keys()) <= cached  # key set released
     assert sync.position() == 3          # position never advanced
-    assert tgt.has_epoch("cdf-4")        # ...but the clean fold committed
-    sids = tgt.current_snapshot_id()
-    sync.sync_once()                     # fold -> ledgered skip; /mm lands
-    tgt.merge_replace_keys = orig
-    assert tgt.current_snapshot_id() == sids + 1  # exactly one extra commit
+    assert not tgt.has_epoch("cdf-4")    # ...and nothing committed
+    assert tgt.current_snapshot_id() == sids
+    sync.sync_once()
+    assert tgt.current_snapshot_id() == sids + 1  # exactly one commit
+    assert sync.position() == 4
     assert _got() == _expected()
     assert _got()["c1"] == (1, 2, 2, 2) and _got()["c4"] == (1, 9, 9, 9)
-    # the /mm marker settles with its base epoch: ledger tail stays bounded
+
+    # (b) the position write after the commit is lost: the resume's pin
+    # re-derives (4, 5] under cdf-5 and hits the ledger skip, zero commits
+    src.merge(_b([
+        ("D", 40, "c4", 0, None, TS0 + dt.timedelta(seconds=240)),
+        ("U", 41, "c1", 1, 8, TS0 + dt.timedelta(seconds=241)),
+    ]), epoch_id="e000005")
+    store = sync.store
+    sync.store = _FailNthPut(fail_on=1)
+    sids = tgt.current_snapshot_id()
+    with pytest.raises(TimeoutError, match="injected"):
+        sync.sync_once()
+    sync.store = store
+    assert sync.position() == 4 and tgt.has_epoch("cdf-5")
+    assert tgt.current_snapshot_id() == sids + 1
+    assert sync.sync_once() == [5]
+    assert sync.position() == 5
+    assert tgt.current_snapshot_id() == sids + 1  # the replay committed nothing
+    assert _got() == _expected()
+    assert _got()["c1"] == (2, 10, 2, 8) and "c4" not in _got()
+    assert set(jsc.getPersistentRDDs().keys()) <= cached
+    # settled cdf-<n> ids fold into the watermark: ledger tail stays bounded
     assert len(tgt.committed_epochs()) <= 2
 
 
 def test_agg_feed_minmax_null_group_key(spark, tmp_path):
     """A NULLABLE group column's NULL group is a group like any other: its
-    retractions must route to the dirty re-aggregation (null-safe anti/semi
-    joins), not leak into the monoid fold — else a lowered maximum would stay
-    stale forever. Also: deleting the NULL group's last row removes it."""
+    retractions must reach the re-aggregation and the replace scope (null-safe
+    semi and anti joins) — else a lowered maximum would stay stale forever or
+    the old NULL row would survive beside its replacement. Also: deleting the
+    NULL group's last row removes it."""
     schema = T.StructType(
         [
             T.StructField("conv_id", T.StringType(), False),
@@ -468,8 +497,8 @@ def test_agg_feed_minmax_null_group_key(spark, tmp_path):
     sync.sync_once()
     assert _got() == {None: (2, 99), "A": (1, 7)}
 
-    # lower the NULL group's maximum: 99 -> 3 (dirty via U_pre; the null-safe
-    # split must re-aggregate the NULL group, leaving max 5)
+    # lower the NULL group's maximum: 99 -> 3 (touched via U_pre; the
+    # null-safe semi join must re-aggregate the NULL group, leaving max 5)
     src.merge(_b([
         ("U", 10, "c1", 0, None, 3, TS0 + dt.timedelta(seconds=60)),
     ]), epoch_id="e000002")
@@ -487,7 +516,7 @@ def test_agg_feed_minmax_null_group_key(spark, tmp_path):
 
 def test_agg_feed_over_mor_source(spark, tmp_path):
     """Integration of the round's two features: AggFeedSync (with MIN/MAX
-    dirty-group re-aggregation) tailing a MERGE-ON-READ source — diffs span
+    touched-group re-aggregation) tailing a MERGE-ON-READ source — diffs span
     delta-append commits and a compaction, and the maintained view equals the
     direct aggregate of the source's resolved live state."""
     schema = T.StructType(
@@ -538,7 +567,7 @@ def test_agg_feed_over_mor_source(spark, tmp_path):
     sync.sync_once()
     assert _got() == _expected() == {"c1": (2, 50), "c2": (1, 7)}
 
-    # delete the max (dirty re-aggregation reads the MoR source at that
+    # delete the max (the re-aggregation reads the MoR source at that
     # snapshot), then compact the source mid-stream, then keep appending
     src.merge(_b([("D", 10, "c1", 1, None, TS0 + dt.timedelta(seconds=60))]),
               epoch_id="e2")
@@ -551,7 +580,7 @@ def test_agg_feed_over_mor_source(spark, tmp_path):
 
 def test_agg_feed_bulk_retraction_large_dirty_set(spark, tmp_path):
     """VERDICT r05 wrong #2: `_reaggregate` must NOT force-broadcast the
-    dirty-group key set — a bulk retraction dirties every group at once
+    touched-group key set — a bulk retraction touches every group at once
     (here 10^5 groups), exactly the step where a forced broadcast of the
     keys would OOM at scale. Asserts (a) the re-aggregation plan carries no
     broadcast HINT (AQE may still choose one at runtime for small sets) and
@@ -595,7 +624,7 @@ def test_agg_feed_bulk_retraction_large_dirty_set(spark, tmp_path):
     assert tgt.read().count() == N
 
     # structural guard: the re-aggregation subtree must not carry a broadcast
-    # hint on the (unbounded) dirty-key side
+    # hint on the (unbounded) touched-key side
     from etl_german_fhir_core_spark.plans import has_broadcast_hint
 
     dirty = src.read().select("conv_id").limit(100)
@@ -604,7 +633,7 @@ def test_agg_feed_bulk_retraction_large_dirty_set(spark, tmp_path):
     )
 
     # bulk retraction: every group's max shrinks in ONE step -> the entire
-    # 10^5-group key set goes through the dirty re-aggregation path
+    # 10^5-group key set goes through the re-aggregation path
     src.merge(_gen(N + 1, F.col("id") % 7, TS0 + dt.timedelta(seconds=60)),
               epoch_id="e000002")
     sync.sync_once()
@@ -725,16 +754,16 @@ def test_crash_then_source_advance_replays_pinned_window_once(spark, tmp_path):
     assert _view(agg) == _direct_view(src) == {
         "c1": (3, 31, 20), "c3": (1, 5, 5), "c4": (1, 9, 9)
     }
-    # one commit for (1, 2]; then one (replica) or fold + /mm (view) for (2, 4]
+    # one commit for (1, 2]; then one for (2, 4], replica and view alike
     assert rep.current_snapshot_id() == before[0] + 2
-    assert before[1] + 2 <= agg.current_snapshot_id() <= before[1] + 3
+    assert agg.current_snapshot_id() == before[1] + 2
 
 
 def test_lagging_consumer_catches_up_in_one_commit(spark, tmp_path):
     """A consumer 20 source commits behind — upserts, deletes, an LWW loser,
     a key born and deleted inside the lag, a MoR compaction and a column
     rename — catches up with ONE covering diff: the replica gains one data
-    commit, the view at most two (fold + /mm). Both end identical to twins
+    commit, the view one. Both end identical to twins
     synced after every source commit (replica live rows incl. _lsn; view
     rows with n_rows > 0, since a net diff never sees the born-and-deleted
     key that leaves the twins a tombstone)."""
@@ -798,7 +827,11 @@ def test_lagging_consumer_catches_up_in_one_commit(spark, tmp_path):
         rep.manifest(sid)["epoch_id"]
         for sid in range(rep_sid + 1, rep.current_snapshot_id() + 1)
     ] == ["cdf-rename-score-points", f"cdf-{head}"]  # rename replay + 1 diff
-    assert 1 <= lag[1].target.current_snapshot_id() - agg_sid <= 2
+    agg = lag[1].target
+    assert [
+        agg.manifest(sid)["epoch_id"]
+        for sid in range(agg_sid + 1, agg.current_snapshot_id() + 1)
+    ] == [f"cdf-{head}"]  # one view data commit
 
     pd.testing.assert_frame_equal(_live(rep), _live(twin[0].target))
     assert _view(lag[1].target) == _view(twin[1].target) == _direct_view(src)

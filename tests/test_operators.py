@@ -909,12 +909,20 @@ def test_dedup_clusters_transitive(spark):
     assert out[47] == 40
 
 
-def test_dedup_clusters_leaves_only_its_result_persisted(spark):
-    """Round frames and the edge cache are released before return: a call
+@pytest.mark.parametrize(
+    "op, chain_len, max_iters",
+    [("dedup_clusters", 10, 3), ("dedup_clusters_star", 40, 2)],
+    ids=["dedup_clusters", "dedup_clusters_star"],
+)
+def test_dedup_clusters_leaves_only_its_result_persisted(
+    spark, op, chain_len, max_iters
+):
+    """Round frames and edge caches are released before return: a call
     leaves at most one persisted RDD (its result), and a call that fails to
     converge leaves none."""
-    from etl_german_fhir_core_spark.operators.dedup import dedup_clusters
+    from etl_german_fhir_core_spark.operators import dedup
 
+    clusters = getattr(dedup, op)
     jsc = spark.sparkContext._jsc
 
     def persisted():
@@ -924,13 +932,15 @@ def test_dedup_clusters_leaves_only_its_result_persisted(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 9), (20, 21), (30, 31)], "id1 long, id2 long"
     )
-    assert len(dedup_clusters(pairs).collect()) == 8
+    assert len(clusters(pairs).collect()) == 8
     assert len(persisted() - before) <= 1
 
     before = persisted()
-    chain = spark.createDataFrame([(i, i + 1) for i in range(10)], "id1 long, id2 long")
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(chain_len)], "id1 long, id2 long"
+    )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(chain, max_iters=3)
+        clusters(chain, max_iters=max_iters)
     assert not persisted() - before
 
 
