@@ -35,6 +35,7 @@ from etl_german_fhir_core_spark.lake.table import (
     SnapshotTable,
     _bucket_expr,
     _family_index,
+    _key_join,
     _touched_buckets,
 )
 
@@ -411,7 +412,9 @@ class CdcEngine:
             state = self.table.read(buckets=touched)
         else:
             state = self.table.read()
-        return state.join(keys, on=scope, how="left_semi")
+        # null-safe: a NULL scope key (a nullable rollup key) must keep its
+        # rows, or the replace below would drop the stored NULL group
+        return _key_join(state, keys, scope, "left_semi")
 
     def _apply_projections(self, batch: DataFrame, epoch_id: str) -> None:
         """Fan the epoch's changes out to per-domain child tables, in list order

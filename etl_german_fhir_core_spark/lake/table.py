@@ -38,7 +38,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 BUCKET_COL = "_bucket"
 LSN_COL = "_lsn"
@@ -70,6 +69,19 @@ def _touched_buckets(df: DataFrame, key_col: str, num_buckets: int) -> list[int]
         for r in df.select(_bucket_expr(key_col, num_buckets).alias(BUCKET_COL))
         .distinct()
         .collect()
+    )
+
+
+def _key_join(df: DataFrame, keys: DataFrame, cols: list[str], how: str) -> DataFrame:
+    """``df`` semi- or anti-joined (``how``) to ``keys`` on ``cols`` NULL-SAFELY
+    — the one scoping join of the keyed-replace paths. Spark doesn't enforce
+    key nullability on write, and a NULL-valued group or scope key must match
+    its stored NULL row: plain ``on=`` equality would drop that row from a
+    semi-join (its group recomputed as absent) and keep it through an
+    anti-join (a silent duplicate beside its replacement)."""
+    k = keys.select(*[F.col(c).alias(f"_k_{c}") for c in cols])
+    return df.join(
+        k, on=[F.col(c).eqNullSafe(F.col(f"_k_{c}")) for c in cols], how=how
     )
 
 
@@ -1323,17 +1335,9 @@ class SnapshotTable:
         keys = keys.select(*scope_cols)
         touched = _touched_buckets(keys, key_cols[0], B)
         schema = T.StructType.fromJson(m["schema"])
-        # NULL-SAFE scoping: Spark doesn't enforce key nullability on write,
-        # and callers (e.g. the change feed's dirty-group replace) may scope a
-        # NULL-valued group key; plain `on=` equality would keep the existing
-        # NULL-key row while the replacement unions in — a silent duplicate.
-        scope_keys = keys.select(
-            *[F.col(c).alias(f"_sk_{c}") for c in scope_cols]
-        )
-        kept = self.read(buckets=touched, include_meta=True).join(
-            scope_keys,
-            on=[F.col(c).eqNullSafe(F.col(f"_sk_{c}")) for c in scope_cols],
-            how="left_anti",
+        kept = _key_join(
+            self.read(buckets=touched, include_meta=True), keys, scope_cols,
+            "left_anti",
         )
         final = self._conform(kept, schema)
         if agg is not None:
@@ -1446,23 +1450,25 @@ class SnapshotTable:
             [f for f in df.schema if f.name not in ("op", "lsn")]
         )
         new_schema = self._evolve_schema(payload_schema)
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc_nulls_last() for c in order_cols],
-            F.col(LSN_COL).desc_nulls_last(),
+        # LWW compaction the way merge resolves: one exchange (_cluster), and
+        # the one winner aggregate (_lww_winners) grouping on its columns plus
+        # the key reuses it, carrying op for the tombstone flag
+        clustered, by = self._cluster(
+            df.withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B)), B, m
+        )
+        winners = self._lww_winners(
+            clustered, [*by, *key_cols], order_cols,
+            [f.name for f in new_schema if f.name != DELETED_COL] + ["op"],
         )
         # D-winners are RETAINED as hidden tombstones, same as the merge path:
         # a bulk load that physically dropped them would let a late incremental
         # event with an older (ts, lsn) resurrect a bulk-deleted key after the
         # bulk→incremental handoff (the LWW retention invariant, CLAUDE.md)
-        compacted = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .withColumn(DELETED_COL, F.col("op") == "D")
-            .withColumn(BUCKET_COL, _bucket_expr(key_cols[0], B))
-            .select(*[f.name for f in new_schema], BUCKET_COL)
+        compacted = winners.withColumn(DELETED_COL, F.col("op") == "D").select(
+            *[f.name for f in new_schema], *by
         )
         touched = list(range(B))
-        staged = self._stage_buckets(self._cluster(compacted, B, m)[0])
+        staged = self._stage_buckets(compacted)
         if lsn_obs is not None:
             hi_lsn = lsn_obs.get["hi"]
         new_manifest = self._successor(

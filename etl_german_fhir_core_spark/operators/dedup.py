@@ -8,15 +8,19 @@ the Arrow-batched numpy kernels noted below):
   once → numpy intersection-count kernel over the whole corpus.
 - MinHash + LSH: k hash functions via xxhash64(shingle, seed) → min per seed →
   band signatures → band-bucket self-join → candidate pairs.
-- SimHash: bit-vote over shingle hashes → 64-bit signature → block-combination
-  candidate tables scanned by a numpy kernel, Hamming-filtered.
+- SimHash: per-doc shingle-hash sets → numpy bit-vote kernel → 64-bit
+  signature → block-combination candidate tables scanned by a numpy kernel,
+  Hamming-filtered.
 
-Exact Jaccard has one representation: the per-doc shingle-hash set frame.
-The n-gram kernel counts intersections over it; MinHash and SimHash verify
-their candidates by joining the pairs to it on both sides and intersecting
-the two sets in the JVM. Scale notes: LSH keeps the candidate set
-near-linear (band buckets), which is the 100 TB path — the exact all-pairs
-kernel is only for small corpora / verification.
+One representation per concept. Every shingle comes from one base
+(:func:`_shingles`: tokenize → explode → n token columns). Exact Jaccard is
+the per-doc shingle-hash set frame: the n-gram kernel counts intersections
+over it; MinHash and SimHash verify their candidates by joining the pairs to
+it on both sides and intersecting the two sets in the JVM. Both SimHash hash
+bases vote in the one numpy kernel. Both staged kernels write their side with
+:func:`_stage` and load it with :func:`_load_side`. Scale notes: LSH keeps
+the candidate set near-linear (band buckets), which is the 100 TB path — the
+exact all-pairs kernel is only for small corpora / verification.
 """
 
 from __future__ import annotations
@@ -27,15 +31,34 @@ from pyspark.sql import functions as F
 from etl_german_fhir_core_spark.functions.text import normalize_text, tokenize_ws
 
 
-_NJP_SIDE_CACHE: dict = {}
+_SIDE_CACHE: dict = {}
 _NJP_STAGES: list[str] = []
 
 
-def _njp_register_stage(path: str) -> None:
-    """Track a staged kernel side for atexit cleanup — stages live on tmpfs
-    (/dev/shm) for I/O determinism, so they must not outlive the driver
-    process. They cannot be deleted earlier: the returned frame reads them
-    lazily for the caller's whole session."""
+def _stage(frame: DataFrame) -> str:
+    """Write ``frame`` to a fresh parquet stage and return its path — the one
+    staged side of the numpy kernels. Stages live on tmpfs (/dev/shm) for I/O
+    determinism and are tracked in ``_NJP_STAGES`` for atexit cleanup: they
+    must not outlive the driver process, and cannot be deleted earlier since
+    the kernels' frames read them lazily for the caller's whole session.
+
+    The stage is a driver-local directory that every task reads by path, so
+    it is correct only when all executors share the driver's host. Any
+    master other than ``local[...]`` / ``local-cluster[...]`` raises before
+    anything is written, instead of letting tasks on other hosts miss the
+    side and silently undercount pairs."""
+    import os
+    import tempfile
+
+    master = frame.sparkSession.sparkContext.master
+    if not master.startswith("local"):
+        raise RuntimeError(
+            f"staged dedup kernels need a single-host master (local[...] or "
+            f"local-cluster[...]), got {master!r}: the side is staged to a "
+            "driver-local directory that executors on other hosts cannot read"
+        )
+    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    path = tempfile.mkdtemp(prefix="dedup_stage_", dir=shm)
     if not _NJP_STAGES:
         import atexit
         import shutil
@@ -44,23 +67,24 @@ def _njp_register_stage(path: str) -> None:
             lambda: [shutil.rmtree(p, ignore_errors=True) for p in _NJP_STAGES]
         )
     _NJP_STAGES.append(path)
+    frame.write.mode("overwrite").parquet(path)
+    return path
 
 
-def _njp_load_side(path: str):
-    """Load the staged (doc, sz, _hs) side of ngram_jaccard_pairs' kernel ONCE
-    per Python worker (guide §4.5: heavyweight init cached in a module-level
-    global keyed by path+pid so reused workers keep it across tasks; single
-    entry so successive stagings replace, never accumulate). Returns
-    (hashes sorted ascending, doc-index per hash, doc ids, set sizes)."""
+def _load_side(path: str, build):
+    """A staged side, loaded ONCE per Python worker: ``build`` turns the
+    staged pyarrow table into the kernel's arrays (guide §4.5: heavyweight
+    init cached in a module-level global keyed by path+pid so reused workers
+    keep it across tasks). One slot per ``build`` function, so successive
+    stagings replace, never accumulate. ``build`` must be a module-level
+    function: it is pickled by reference, so its identity survives task
+    deserialization."""
     import os
 
-    import numpy as np
-
     key = (path, os.getpid())
-    hit = _NJP_SIDE_CACHE.get("side")
+    hit = _SIDE_CACHE.get(build)
     if hit is not None and hit[0] == key:
         return hit[1]
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     # use_threads=False: every reused worker on the host loads the side at
@@ -68,7 +92,17 @@ def _njp_load_side(path: str):
     # workers × cpus threads thrashing one tmpfs directory (measured 3.6 s
     # first-call medians vs 0.5 s warm) — single-threaded reads of a few
     # tens of MB are faster and contention-free
-    t = pq.read_table(path, columns=["doc", "sz", "_hs"], use_threads=False)
+    data = build(pq.read_table(path, use_threads=False))
+    _SIDE_CACHE[build] = (key, data)
+    return data
+
+
+def _njp_side(t):
+    """The staged (doc, sz, _hs) side of :func:`ngram_jaccard_pairs`' kernel
+    as (hashes sorted ascending, doc-index per hash, doc ids, set sizes)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
     doc = t.column("doc").to_numpy(zero_copy_only=False)
     sz = t.column("sz").to_numpy(zero_copy_only=False)
     flat, lens = [], []
@@ -82,9 +116,21 @@ def _njp_load_side(path: str):
         h = np.empty(0, np.int64)
         idx = np.empty(0, np.int64)
     order = np.argsort(h, kind="stable")
-    data = (h[order], idx[order], doc, sz)
-    _NJP_SIDE_CACHE["side"] = (key, data)
-    return data
+    return (h[order], idx[order], doc, sz)
+
+
+def _sim_side(t):
+    """The staged (doc, simhash) side of the simhash candidate kernel as
+    (doc ids, signatures as uint64)."""
+    import numpy as np
+
+    doc = t.column("doc").to_numpy(zero_copy_only=False)
+    sig = (
+        t.column("simhash").to_numpy(zero_copy_only=False)
+        .astype(np.int64)
+        .view(np.uint64)
+    )
+    return (doc, sig)
 
 
 def _spread_small_input(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -115,11 +161,11 @@ def _drop_checkpoint(frame: DataFrame) -> None:
     frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def _shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, distinct: bool = True
-) -> DataFrame:
-    """Word n-gram shingles of the normalized, lowercased text, as exploded
-    (doc, shingle) rows — DISTINCT per doc by default (set-Jaccard semantics).
+def _shingles(df: DataFrame, id_col: str, text_col: str, n: int, shingle) -> DataFrame:
+    """The ONE shingle base: (doc, shingle(*tokens)) rows, one per word n-gram
+    occurrence of the normalized, lowercased text (duplicates kept), where
+    ``shingle`` maps the n token columns to one aliased column (the shingle
+    string, or a hash of it). Docs with fewer than n tokens emit no row.
 
     Built as explode(sequence(0, size-n)) + n element_at lookups — the same
     codegen-only Generate+Project shape as chunk_exact_dupes, with NO exchange
@@ -128,11 +174,7 @@ def _shingle_rows(
     and every consumer of the lazy frame re-paid it; guide §2.4 "remove
     shuffles outright"). Array-transform HOFs remain off the table: their
     lambdas evaluate interpreted per element (measured 6x slower at sf0.1) —
-    element_at with a column index is a plain codegen'd projection.
-
-    ``distinct=False`` skips the dedup shuffle for consumers whose aggregate is
-    duplicate-insensitive (MinHash mins: min over a multiset == min over its
-    set) — one full-corpus shuffle saved on the signature path."""
+    element_at with a column index is a plain codegen'd projection."""
     toks = tokenize_ws(F.col(text_col))
     base = _spread_small_input(df, key=id_col).select(
         F.col(id_col).alias("doc"), toks.alias("_w")
@@ -142,9 +184,19 @@ def _shingle_rows(
     idx = base.select(
         "doc", F.col("_w"), F.explode(F.sequence(F.lit(0), F.size("_w") - n)).alias("_i")
     )
-    parts = [F.element_at(F.col("_w"), F.col("_i") + (j + 1)) for j in range(n)]
-    out = idx.select("doc", F.concat_ws(" ", *parts).alias("shingle"))
-    return out.distinct() if distinct else out
+    return idx.select(
+        "doc",
+        shingle(*[F.element_at(F.col("_w"), F.col("_i") + (j + 1)) for j in range(n)]),
+    )
+
+
+def _shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+    """Distinct (doc, shingle) string rows per doc (set semantics) from
+    :func:`_shingles` — the shape of the consumers that match shingle text
+    (contamination, top n-grams)."""
+    return _shingles(
+        df, id_col, text_col, n, lambda *w: F.concat_ws(" ", *w).alias("shingle")
+    ).distinct()
 
 
 def dedup_exact(
@@ -171,22 +223,8 @@ def _shingle_hashes(
     shingle occurrence (duplicates kept) — the shared basis of the shingle-hash
     sets and the MinHash signatures. Tokens carry no whitespace, so the n-tuple
     IS the shingle: the set semantics of hashing the concat'd shingle string
-    without materializing millions of intermediate strings. Same sort-free,
-    exchange-free Generate+Project shape as :func:`_shingle_rows`; docs with
-    fewer than n tokens emit no row."""
-    toks = tokenize_ws(F.col(text_col))
-    base = _spread_small_input(df, key=id_col).select(
-        F.col(id_col).alias("doc"), toks.alias("_w")
-    ).filter(F.size("_w") >= n)
-    idx = base.select(
-        "doc", F.col("_w"), F.explode(F.sequence(F.lit(0), F.size("_w") - n)).alias("_i")
-    )
-    return idx.select(
-        "doc",
-        F.xxhash64(
-            *[F.element_at(F.col("_w"), F.col("_i") + (j + 1)) for j in range(n)]
-        ).alias("_h"),
-    )
+    without materializing millions of intermediate strings."""
+    return _shingles(df, id_col, text_col, n, lambda *w: F.xxhash64(*w).alias("_h"))
 
 
 def _shingle_hash_sets(
@@ -267,7 +305,9 @@ def ngram_jaccard_pairs(
     Unlike the lazy operators of this module, the call runs Spark jobs
     EAGERLY: the corpus scan and the staging write happen at call time (the
     returned frame reads the stage lazily), so building the frame costs a
-    full corpus pass and a failure surfaces here.
+    full corpus pass and a failure surfaces here. The stage is driver-local
+    (:func:`_stage`), so the session must run on a single host (``local[...]``
+    or ``local-cluster[...]``); any other master raises.
     """
     # Why a staged kernel, not an inverted-index self-join on shingle: at
     # sf1.0 that join emitted 127M one-shingle candidate rows into a
@@ -280,18 +320,10 @@ def ngram_jaccard_pairs(
     # The staged side is O(corpus shingle hashes) per worker, so this stays
     # the small-corpus/verification path (LSH is the 100 TB candidate path);
     # max_df's document frequency is a free by-product of the range lookup.
-    import os
-    import tempfile
-
     from pyspark.sql import types as T
 
     spark = df.sparkSession
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    stage = tempfile.mkdtemp(prefix="njp_stage_", dir=shm)
-    _njp_register_stage(stage)
-    _shingle_hash_sets(df, id_col, text_col, n).write.mode("overwrite").parquet(stage)
-    # leaked until /tmp GC by design: the returned frame reads these files
-    # lazily (same precedent as q_cdc_snapshot_diff's in-query table)
+    stage = _stage(_shingle_hash_sets(df, id_col, text_col, n))
     a = spark.read.parquet(stage).repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -310,7 +342,7 @@ def ngram_jaccard_pairs(
         import numpy as np
         import pandas as pd
 
-        bh, bidx, b_doc, b_sz = _njp_load_side(stage)
+        bh, bidx, b_doc, b_sz = _load_side(stage, _njp_side)
         nb = len(b_doc)
         for pdf in batches:
             m = len(pdf)
@@ -453,116 +485,78 @@ def simhash_buckets(
 ) -> DataFrame:
     """64-bit SimHash per document + a prefix bucket for near-dup candidate grouping.
 
-    bit b of the signature = sign of sum over shingles of (±1 depending on bit b of
-    hash(shingle)). Vectorized as an explode + 64 conditional sums (one shuffle).
+    bit b of the signature = majority vote over the doc's DISTINCT shingles of
+    bit b of hash(shingle) (an exact tie votes 0). Each shingle string hashes
+    to one 64-bit long (:func:`_shingles`), one object-hash ``collect_set``
+    gathers the per-doc distinct set (one small-frame exchange), and an
+    Arrow-batched numpy kernel votes: ``np.unpackbits`` (little-endian = bit
+    b of the uint64) and one segmented reduction per batch. Row-independent —
+    no staged side, no join. (Why not JVM aggregates: 64 per-bit
+    conditional sums measured 6.5 s of a 13 s candidate run at 40k docs.)
 
     ``hash_basis`` selects the per-shingle hash the bit-votes derive from:
 
-    - ``"xxhash64"`` (default): one JVM xxhash64 per shingle — the fast path.
+    - ``"xxhash64"`` (default): one JVM xxhash64 of the shingle string.
     - ``"md5"``: bits come from the first 16 hex digits of md5(shingle), bit b =
-      bit (b % 4) of hex digit (b // 4). md5 exists in every SQL engine, which
-      makes the signature CROSS-ENGINE REPRODUCIBLE — the DuckDB-oracle basis
+      bit (b % 4) of hex digit (b // 4) — the digits packed into one long,
+      digit i at bits 4i..4i+3. md5 exists in every SQL engine, which makes
+      the signature CROSS-ENGINE REPRODUCIBLE — the DuckDB-oracle basis
       (xxhash64 bit-votes have no SQL equivalent; VERDICT r03 next #2). Same
-      quality (both are uniform bit sources), ~16 extra string ops per shingle.
+      quality (both are uniform bit sources).
     """
+    from pyspark.sql import types as T
+
     if hash_basis == "xxhash64":
-        # r06 fast path: the 64 per-bit conditional-sum aggregates were the
-        # dominant cost of the whole simhash family (measured 6.5 s of a 13 s
-        # candidate run at 40k docs — 64 when/shift/sum expression trees per
-        # shingle row). Instead: per-doc DISTINCT shingle-hash sets via one
-        # object-hash collect_set (hash basis: xxhash64 of the shingle STRING,
-        # unchanged from r05 — signatures stay bit-identical), then
-        # an Arrow-batched numpy kernel unpacks the hash bits
-        # (np.unpackbits, little-endian = bit b of the uint64) and majority-
-        # votes per doc with one segmented reduction. Row-independent — no
-        # staged side, no join; one small-frame exchange total.
-        import numpy as np  # noqa: F401
-        from pyspark.sql import types as T
-
-        toks = tokenize_ws(F.col(text_col))
-        base = _spread_small_input(df, key=id_col).select(
-            F.col(id_col).alias("doc"), toks.alias("_w")
-        ).filter(F.size("_w") >= n)
-        idx = base.select(
-            "doc",
-            F.col("_w"),
-            F.explode(F.sequence(F.lit(0), F.size("_w") - n)).alias("_i"),
-        )
-        sh = idx.select(
-            "doc",
-            F.xxhash64(
-                F.concat_ws(
-                    " ",
-                    *[
-                        F.element_at(F.col("_w"), F.col("_i") + (j + 1))
-                        for j in range(n)
-                    ],
-                )
-            ).alias("_h"),
-        )
-        ds = sh.groupBy("doc").agg(F.collect_set("_h").alias("_hs"))
-        out_schema = T.StructType(
-            [
-                T.StructField("doc", df.schema[id_col].dataType),
-                T.StructField("simhash", T.LongType()),
-            ]
-        )
-
-        def vote_kernel(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                m = len(pdf)
-                if m == 0:
-                    continue
-                hs = pdf["_hs"].to_numpy()
-                lens = np.fromiter((len(h) for h in hs), np.int64, m)
-                flat = (
-                    np.concatenate([np.asarray(h) for h in hs])
-                    .astype(np.int64)
-                    .view(np.uint64)
-                )
-                bits = np.unpackbits(
-                    flat.view(np.uint8), bitorder="little"
-                ).reshape(-1, 64)
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                ones = np.add.reduceat(bits.astype(np.int64), starts, axis=0)
-                # vote_b > 0  <=>  2*ones_b > n_hashes (exact tie -> bit 0)
-                sigbits = (2 * ones) > lens[:, None]
-                sig = (
-                    (sigbits.astype(np.uint64) << np.arange(64, dtype=np.uint64))
-                    .sum(axis=1, dtype=np.uint64)
-                    .view(np.int64)
-                )
-                yield pd.DataFrame({"doc": pdf["doc"], "simhash": sig})
-
-        out = ds.mapInPandas(vote_kernel, out_schema)
-        return out.withColumn(
-            "bucket", F.shiftrightunsigned(F.col("simhash"), 64 - prefix_bits)
-        )
-    sh = _shingle_rows(df, id_col, text_col, n)
-    if hash_basis == "md5":
-        digits = [
-            F.conv(F.substring(F.md5(F.col("shingle")), i + 1, 1), 16, 10)
-            .cast("int")
-            .alias(f"_d{i}")
-            for i in range(16)
-        ]
-        sh = sh.select("doc", *digits)
-
-        def bit(b: int):
-            return F.shiftright(F.col(f"_d{b // 4}"), b % 4).bitwiseAND(F.lit(1))
+        digest = F.xxhash64
+    elif hash_basis == "md5":
+        # the hex digits reversed read as one base-16 number put digit i at
+        # bits 4i..4i+3; a negative target base makes conv emit it signed
+        def digest(s):
+            return F.conv(F.reverse(F.substring(F.md5(s), 1, 16)), 16, -10).cast("long")
 
     else:
         raise ValueError(f"unknown hash_basis {hash_basis!r}")
-    votes = sh.groupBy("doc").agg(
-        *[F.sum(F.when(bit(b) == 1, 1).otherwise(-1)).alias(f"v{b}") for b in range(64)]
+    sh = _shingles(
+        df, id_col, text_col, n, lambda *w: digest(F.concat_ws(" ", *w)).alias("_h")
     )
-    sig = F.lit(0).cast("long")
-    for b in range(64):
-        sig = sig + F.when(F.col(f"v{b}") > 0, F.lit(1).cast("long") * (2**b if b < 63 else -(2**63))).otherwise(0)
-    out = votes.withColumn("simhash", sig).select("doc", "simhash")
+    ds = sh.groupBy("doc").agg(F.collect_set("_h").alias("_hs"))
+    out_schema = T.StructType(
+        [
+            T.StructField("doc", df.schema[id_col].dataType),
+            T.StructField("simhash", T.LongType()),
+        ]
+    )
+
+    def vote_kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            m = len(pdf)
+            if m == 0:
+                continue
+            hs = pdf["_hs"].to_numpy()
+            lens = np.fromiter((len(h) for h in hs), np.int64, m)
+            flat = (
+                np.concatenate([np.asarray(h) for h in hs])
+                .astype(np.int64)
+                .view(np.uint64)
+            )
+            bits = np.unpackbits(
+                flat.view(np.uint8), bitorder="little"
+            ).reshape(-1, 64)
+            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+            ones = np.add.reduceat(bits.astype(np.int64), starts, axis=0)
+            # vote_b > 0  <=>  2*ones_b > n_hashes (exact tie -> bit 0)
+            sigbits = (2 * ones) > lens[:, None]
+            sig = (
+                (sigbits.astype(np.uint64) << np.arange(64, dtype=np.uint64))
+                .sum(axis=1, dtype=np.uint64)
+                .view(np.int64)
+            )
+            yield pd.DataFrame({"doc": pdf["doc"], "simhash": sig})
+
+    out = ds.mapInPandas(vote_kernel, out_schema)
     return out.withColumn(
         "bucket", F.shiftrightunsigned(F.col("simhash"), 64 - prefix_bits)
     )
@@ -637,35 +631,6 @@ def _simhash_table_plan(
     return k, list(combinations(range(k), g))
 
 
-_SIM_SIDE_CACHE: dict = {}
-
-
-def _sim_load_side(path: str):
-    """Load the staged (doc, simhash) side of the simhash candidate kernel once
-    per Python worker (same module-cache pattern as :func:`_njp_load_side`).
-    Returns (doc ids array, signatures as uint64 array)."""
-    import os
-
-    import numpy as np
-
-    key = (path, os.getpid())
-    hit = _SIM_SIDE_CACHE.get("side")
-    if hit is not None and hit[0] == key:
-        return hit[1]
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(path, columns=["doc", "simhash"], use_threads=False)
-    doc = t.column("doc").to_numpy(zero_copy_only=False)
-    sig = (
-        t.column("simhash").to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-        .view(np.uint64)
-    )
-    data = (doc, sig)
-    _SIM_SIDE_CACHE["side"] = (key, data)
-    return data
-
-
 def _popcount64(x):
     """Vectorized 64-bit population count (SWAR; numpy<2 has no bitwise_count).
     ``x`` must be uint64; integer wraparound in the multiply is intended."""
@@ -706,17 +671,11 @@ def _simhash_candidates(
     optimizes against N (``_simhash_table_plan`` cost model), which unlocks
     wide-radius plans (d=12 → hundreds of tables of ~16-bit keys) that the
     expression-tree version could not afford."""
-    import os
-    import tempfile
-
     import numpy as np  # noqa: F401  (kernel contract)
     from pyspark.sql import types as T
 
     spark = sigs.sparkSession
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    stage = tempfile.mkdtemp(prefix="sim_stage_", dir=shm)
-    _njp_register_stage(stage)
-    sigs.select("doc", "simhash").write.mode("overwrite").parquet(stage)
+    stage = _stage(sigs.select("doc", "simhash"))
     if n_docs is None:
         # parquet footer-count over the just-written stage — metadata-only,
         # never recomputes the signature pipeline
@@ -738,7 +697,7 @@ def _simhash_candidates(
         import numpy as np
         import pandas as pd
 
-        doc, sig = _sim_load_side(stage)
+        doc, sig = _load_side(stage, _sim_side)
         nb = len(doc)
         for pdf in batches:
             if nb < 2 or len(pdf) == 0:
@@ -823,7 +782,10 @@ def simhash_candidates(
     r06: no persist and no localCheckpoint — the signature pipeline runs
     exactly once into the kernel's staged side (the stage IS the
     materialization barrier), so the former persist+count+checkpoint job
-    chain (three extra actions of the r05 verify-floor attribution) is gone."""
+    chain (three extra actions of the r05 verify-floor attribution) is gone.
+    The stage is driver-local (:func:`_stage`), so the session must run on a
+    single host (``local[...]`` or ``local-cluster[...]``); any other master
+    raises."""
     sigs = simhash_buckets(df, id_col, text_col, n).select("doc", "simhash")
     return _simhash_candidates(sigs, max_hamming, group_size, max_tables)
 
@@ -852,7 +814,9 @@ def simhash_pairs(
 
     The signature frame is consumed exactly once (the candidate kernel's
     staged side materializes it, eagerly at call time); the verify is a lazy
-    JVM join, so the whole operator is one staged write plus one job."""
+    JVM join, so the whole operator is one staged write plus one job. Like
+    :func:`simhash_candidates` it needs a single-host session (``local[...]``
+    or ``local-cluster[...]``); any other master raises."""
     sigs = simhash_buckets(df, id_col, text_col, n).select("doc", "simhash")
     cand = _simhash_candidates(sigs, max_hamming, group_size, max_tables)
     return _verify_pairs(df, id_col, text_col, n, cand, verify_threshold)

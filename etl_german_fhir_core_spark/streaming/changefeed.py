@@ -47,6 +47,8 @@ from etl_german_fhir_core_spark.lake.table import (
     SnapshotTable,
     SnapshotExpiredError,
     _family_index,
+    _key_join,
+    _touched_buckets,
 )
 
 
@@ -380,8 +382,6 @@ class AggFeedSync(ChangeFeedSync):
         work), and a forced broadcast of it is a driver/executor OOM. AQE
         still picks a broadcast at runtime whenever the key set is actually
         small, so the common path's plan is unchanged."""
-        from etl_german_fhir_core_spark.lake.table import _touched_buckets
-
         buckets = None
         src_m = self.source.manifest(to_snapshot)
         if self.group_cols[0] == src_m["key_cols"][0]:
@@ -397,14 +397,7 @@ class AggFeedSync(ChangeFeedSync):
             *[F.col(self._resolve(state, c)).alias(c) for c in self.group_cols],
             *[F.col(self._resolve(state, s)).alias(s) for s in value_srcs],
         )
-        # null-safe semi: a nullable group column's NULL group must be
-        # recomputed like any other (plain `on=` equality would drop it)
-        k = keys.select(*[F.col(c).alias(f"_k_{c}") for c in self.group_cols])
-        scoped = scan.join(
-            k,
-            on=[F.col(c).eqNullSafe(F.col(f"_k_{c}")) for c in self.group_cols],
-            how="semi",
-        )
+        scoped = _key_join(scan, keys, self.group_cols, "left_semi")
         aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
         for out, src_col in self.sum_cols.items():
             # NULL folds as 0 on the delta path; match it here

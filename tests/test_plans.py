@@ -140,6 +140,10 @@ def test_merge_resolution_shuffle_budget(spark, tmp_path, monkeypatch):
     assert exchanges_of_write(
         lambda: cow.delete_where(F.col("text") == "gone", epoch_id="d")
     ) == 1
+    # bulk overwrite resolves LWW like merge: the winner aggregate reuses the
+    # clustering exchange (no window exchange + sort ahead of it)
+    assert exchanges_of_write(lambda: cow.overwrite(wide, epoch_id="b")) == 1
+    assert exchanges_of_write(lambda: salted.overwrite(wide, epoch_id="b")) == 1
     agg = SnapshotTable.create(
         spark, str(tmp_path / "agg"),
         T.StructType([

@@ -111,6 +111,38 @@ def test_state_rollup_retracts_deletes(spark, tmp_path):
     assert rtbl.current_snapshot_id() == sid
 
 
+def test_state_rollup_keeps_the_null_group(spark, tmp_path):
+    """A state-mode rollup keyed on a NULLABLE column (``tool``) must keep its
+    NULL group: the scoped state read, the recomputed partial and the keyed
+    replace all match the NULL key null-safely, so the rollup equals a
+    recompute from the final state, NULL group included."""
+    feed_path = str(tmp_path / "feed")
+    write_feed(synth_feed(spark, 3000, n_convs=40, max_turns=10, ooo_frac=0.2), feed_path, 3)
+
+    tbl = SnapshotTable.create(
+        spark, str(tmp_path / "t"), TARGET, ["conv_id", "turn_idx"], num_buckets=4
+    )
+    rtbl = SnapshotTable.create(
+        spark, str(tmp_path / "r"),
+        T.StructType([
+            T.StructField("tool", T.StringType(), True),
+            T.StructField("n_events", T.LongType(), True),
+        ]),
+        ["tool"], num_buckets=4,
+    )
+
+    def by_tool(batch):
+        return batch.groupBy("tool").agg(F.count("*").alias("n_events"))
+
+    spec = RollupSpec(table=rtbl, partial=by_tool, mode="state")
+    CdcEngine(spark, feed_path, tbl, epoch_rows=1000, rollups=[spec]).run()
+
+    got = {r["tool"]: r["n_events"] for r in rtbl.read().collect()}
+    expect = {r["tool"]: r["n_events"] for r in by_tool(tbl.read()).collect()}
+    assert None in expect  # the feed has tool-less turns
+    assert got == expect
+
+
 def test_rollup_folds_on_resume_after_main_commit(spark, tmp_path):
     """ADVICE r01 (high): a crash between the main-table commit and the rollup
     commit must NOT lose that epoch's fold — the resume path re-folds it."""
