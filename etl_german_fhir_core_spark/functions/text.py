@@ -4,9 +4,8 @@ Reference parity (SURVEY §2.3): these are the batch-columnar re-expression of t
 reference's per-record mapper logic — string truncation ``cutString``
 (mapper/PatientMapper.java:439-448, limits Constants.java:14-18), regex cleanup
 (mapper/helpers/FindOmopConcepts.java:175), validity filters
-(PatientMapper.java:107-130, ObservationMapper.java:157-192), conditional assignment
-(PatientMapper.java:233-281), key prefixing
-(mapper/helpers/ResourceFhirReferenceUtils.java:162-181).
+(PatientMapper.java:107-130, ObservationMapper.java:157-192) and conditional
+assignment (PatientMapper.java:233-281).
 
 Everything here is a Column-in/Column-out expression built from pyspark.sql.functions
 (JVM-side, whole-stage-codegen'd). The training-data-pipeline extensions (language ID,
@@ -17,9 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# reference Constants.java:14-18 — hard max lengths applied by cutString
-MAX_SOURCE_VALUE_LENGTH = 50
 
 # tiny stopword list for the quality heuristic (public, language-agnostic-ish)
 _STOPWORDS = [
@@ -75,18 +71,6 @@ def tokenize_ws(col: Column | str) -> Column:
     of the shingle-based dedup operators (n-gram Jaccard, MinHash, SimHash)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.array_remove(F.split(F.lower(F.translate(c, _CTRL_CHARS, "")), r"\s+"), "")
-
-
-def cut_string(col: Column | str, max_len: int = MAX_SOURCE_VALUE_LENGTH) -> Column:
-    """Leftmost-n truncation — direct analog of cutString (PatientMapper.java:439-448)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isNull(), None).otherwise(F.substring(c, 1, max_len))
-
-
-def prefix_key(col: Column | str, prefix: str) -> Column:
-    """Type-prefixed key (ResourceFhirReferenceUtils.java:162-181: ``"pat-"+id``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.concat(F.lit(prefix), c)
 
 
 def token_count(col: Column | str) -> Column:

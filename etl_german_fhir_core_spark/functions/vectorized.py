@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _TOKEN_RE = re.compile(r"[\w]+|[^\w\s]")
-_WS_RE = re.compile(r"\s+")
 
 
 @F.pandas_udf(T.IntegerType())
@@ -25,25 +24,3 @@ def token_count_pd(texts: pd.Series) -> pd.Series:
     """BPE-ish token count, pandas-vectorized (same semantics as
     functions.text.token_count; used where a real tokenizer library would slot in)."""
     return texts.fillna("").str.findall(_TOKEN_RE).str.len().astype("int32")
-
-
-@F.pandas_udf(T.StringType())
-def normalize_text_pd(texts: pd.Series) -> pd.Series:
-    """Whitespace-collapse + trim via pandas str ops (normalize_text equivalent)."""
-    return texts.str.replace(_WS_RE, " ", regex=True).str.strip()
-
-
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def l2_normalize_pd(vecs: pd.Series) -> pd.Series:
-    """L2-normalize embedding vectors (numpy inside an Arrow batch — the shape a
-    model-embedding or re-scoring step takes)."""
-    import numpy as np
-
-    def norm(v):
-        if v is None:
-            return None
-        a = np.asarray(v, dtype="float32")
-        n = float(np.linalg.norm(a))
-        return (a / n).tolist() if n > 0 else a.tolist()
-
-    return vecs.map(norm)

@@ -3,7 +3,7 @@
 The environment ships no Iceberg/Delta jars, so the engine provides its own minimal
 lakehouse table format with the subset of semantics the CDC north rule needs:
 
-- atomic snapshot commits (JSON manifest, exclusive-create rename) — the analog of an
+- atomic snapshot commits (JSON manifest, the store's PUT-IF-ABSENT) — the analog of an
   Iceberg commit; on an object store this becomes an optimistic-concurrency swap,
 - key-bucketed data layout (``bucket(N, conv_id)``) so MERGE touches only the buckets a
   batch writes to — the analog of the reference's provenance-key B-tree indexes
@@ -17,12 +17,11 @@ lakehouse table format with the subset of semantics the CDC north rule needs:
   restartable reader state (FhirServerItemReader.java:160-191).
 """
 
-from etl_german_fhir_core_spark.lake.commit import (
+from etl_german_fhir_core_spark.lake.store import (
     CommitConflict,
     ConditionalPutCommitter,
-    PosixCommitter,
+    LocalStore,
 )
-from etl_german_fhir_core_spark.lake.store import LocalStore
 from etl_german_fhir_core_spark.lake.table import MergeResult, SnapshotTable
 
 __all__ = [
@@ -30,6 +29,5 @@ __all__ = [
     "MergeResult",
     "CommitConflict",
     "ConditionalPutCommitter",
-    "PosixCommitter",
     "LocalStore",
 ]

@@ -11,9 +11,9 @@ Scale design (the part that must survive 100 TB / 10^10 events):
   files forward by reference in the new manifest. A micro-batch touching 1% of keys
   rewrites ~1% of the table, not all of it.
 - A snapshot manifest is a single small JSON file listing every live data file per
-  bucket plus the table schema and the set of committed epoch ids. Commit is an
-  exclusive-create write of ``snapshot-<n>.json`` — atomic on a POSIX filesystem; on an
-  object store the same scheme is a compare-and-swap (Iceberg's optimistic commit).
+  bucket plus the table schema and the set of committed epoch ids. Commit is the
+  store's PUT-IF-ABSENT of ``snapshot-<n>.json`` — an exclusive link on a POSIX
+  filesystem, a conditional PUT on an object store (Iceberg's optimistic commit).
   Readers always see a complete snapshot or the previous one, never a torn write.
 - Schema evolution is additive: new columns widen the manifest schema; old files are
   read with the widened schema and Spark's Parquet reader null-fills missing columns.
@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 from dataclasses import dataclass, field
 
@@ -38,6 +37,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_german_fhir_core_spark.lake.store import CommitConflict, LocalStore
 
 BUCKET_COL = "_bucket"
 LSN_COL = "_lsn"
@@ -137,14 +138,12 @@ class SnapshotTable:
     ``overwrite``, ``rename_column`` and ``rebucket`` never rebase.
     """
 
-    def __init__(self, spark: SparkSession, root: str, committer=None):
-        from etl_german_fhir_core_spark.lake.commit import PosixCommitter
-
+    def __init__(self, spark: SparkSession, root: str, store=None):
         self.spark = spark
         self.root = root
-        # pluggable PUT-IF-ABSENT (lake/commit.py): POSIX link() here; an object
-        # store swaps in a conditional-PUT committer without touching table logic
-        self.committer = committer or PosixCommitter()
+        # every manifest, tag and vacuum effect goes through this one store
+        # (lake/store.py); the engine and change-feed consumers use it too
+        self.store = store or LocalStore()
         # per-family settled-epoch watermark declared by the epoch manager
         # (mark_settled); folded into the manifest's ``epochs_through`` at the
         # NEXT commit — in-memory only, so no extra snapshot per settlement and
@@ -186,8 +185,6 @@ class SnapshotTable:
         :meth:`compact` folds the deltas back into the base. All other write
         paths (delete_where, expiry, replace, rebucket, overwrite) stay CoW
         and clear the buckets' deltas they rewrite."""
-        os.makedirs(os.path.join(root, MANIFEST_DIR), exist_ok=True)
-        os.makedirs(os.path.join(root, DATA_DIR), exist_ok=True)
         tbl = cls(spark, root)
         if tbl.current_snapshot_id() is not None:
             raise FileExistsError(f"table already exists at {root}")
@@ -241,47 +238,55 @@ class SnapshotTable:
 
     @classmethod
     def exists(cls, root: str) -> bool:
-        d = os.path.join(root, MANIFEST_DIR)
-        return os.path.isdir(d) and any(
-            f.startswith("snapshot-") for f in os.listdir(d)
-        )
+        return cls(None, root).current_snapshot_id() is not None
 
     # ---------------------------------------------------------------- manifests
 
-    def _manifest_path(self, snapshot_id: int) -> str:
-        return os.path.join(self.root, MANIFEST_DIR, f"snapshot-{snapshot_id:08d}.json")
+    def _meta_path(self, name: str) -> str:
+        return os.path.join(self.root, MANIFEST_DIR, name)
 
-    def current_snapshot_id(self) -> int | None:
-        d = os.path.join(self.root, MANIFEST_DIR)
-        if not os.path.isdir(d):
-            return None
-        ids = [
+    def _manifest_path(self, snapshot_id: int) -> str:
+        return self._meta_path(f"snapshot-{snapshot_id:08d}.json")
+
+    def _snapshot_ids(self) -> list[int]:
+        """Ids of the manifest JSONs present, from one store listing."""
+        return [
             int(f[len("snapshot-") : -len(".json")])
-            for f in os.listdir(d)
+            for f in self.store.list_dirs(self._meta_path(""))
             if f.startswith("snapshot-") and f.endswith(".json")
         ]
-        return max(ids) if ids else None
+
+    def current_snapshot_id(self) -> int | None:
+        return max(self._snapshot_ids(), default=None)
+
+    def _get_json(self, path: str):
+        raw = self.store.get_blob(path)
+        return None if raw is None else json.loads(raw)
+
+    def _put_json(self, path: str, obj) -> None:
+        """Replace a single-writer record (tags, the vacuum watermark)."""
+        self.store.put_blob(path, json.dumps(obj, sort_keys=True).encode("utf-8"))
 
     def manifest(self, snapshot_id: int | None = None) -> dict:
         sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise FileNotFoundError(f"no snapshots under {self.root}")
-        with open(self._manifest_path(sid)) as fh:
-            return json.load(fh)
+        m = None if sid is None else self._get_json(self._manifest_path(sid))
+        if m is None:
+            raise FileNotFoundError(f"no snapshot {sid} under {self.root}")
+        return m
 
     def _write_manifest(self, manifest: dict) -> int:
-        """Atomic commit via the pluggable committer's PUT-IF-ABSENT: a concurrent
-        writer racing for the same snapshot id loses with CommitConflict (a
+        """Atomic commit via the store's PUT-IF-ABSENT: a concurrent writer
+        racing for the same snapshot id loses with CommitConflict (a
         FileExistsError subclass — the optimistic-concurrency conflict an Iceberg
-        commit would surface)."""
+        commit would surface). Only :meth:`create` and :meth:`_publish` call it."""
         path = self._manifest_path(manifest["snapshot_id"])
-        self.committer.commit(path, json.dumps(manifest).encode("utf-8"))
+        self.store.put_if_absent(path, json.dumps(manifest).encode("utf-8"))
         return manifest["snapshot_id"]
 
     _REBASE_RETRIES = 5
 
     def _publish(
-        self, new_manifest: dict, base: dict, touched: list[int]
+        self, new_manifest: dict, base: dict, touched: list[int], rebase: bool
     ) -> tuple[int, bool]:
         """Commit with Iceberg-style optimistic-concurrency REBASE (VERDICT r04
         missing #2): a CAS loser whose change is DISJOINT from the winner's —
@@ -296,16 +301,15 @@ class SnapshotTable:
         Returns ``(snapshot_id, already_committed)`` — ``already_committed``
         when the winner turns out to be a duplicate of OUR epoch (two at-least-
         once deliveries racing): the caller converts it into the idempotent
-        skip, same as the ledger check at entry."""
-        from etl_german_fhir_core_spark.lake.commit import CommitConflict
-
+        skip, same as the ledger check at entry. ``rebase=False`` (the
+        whole-table and schema rewrites) re-raises every CommitConflict."""
         epoch_id = new_manifest.get("epoch_id")
         touched_s = {str(b) for b in touched}
         for attempt in range(self._REBASE_RETRIES + 1):
             try:
                 return self._write_manifest(new_manifest), False
             except CommitConflict:
-                if attempt == self._REBASE_RETRIES:
+                if not rebase or attempt == self._REBASE_RETRIES:
                     raise
                 head = self.manifest()
                 if epoch_id is not None and self._has_epoch_m(head, epoch_id):
@@ -367,8 +371,6 @@ class SnapshotTable:
         """Additive union of two manifest schemas for rebase: both writers may
         have evolved independently (new columns, safe widenings); an
         incompatible concurrent type change is a real conflict."""
-        from etl_german_fhir_core_spark.lake.commit import CommitConflict
-
         a, b = T.StructType.fromJson(a_json), T.StructType.fromJson(b_json)
         names = {f.name: f for f in a}
         out = list(a.fields)
@@ -490,13 +492,15 @@ class SnapshotTable:
         }
 
     def _commit(
-        self, m: dict, epoch_id: str, touched: list[int], **fields
+        self, m: dict, epoch_id: str, touched: list[int], rebase: bool = True,
+        **fields,
     ) -> MergeResult:
         """Commit ``m``'s successor through :meth:`_publish` (rebasing onto a
-        concurrent disjoint commit); a duplicate delivery of this epoch that
-        won the race turns into the idempotent skip."""
+        concurrent disjoint commit unless ``rebase=False``); a duplicate
+        delivery of this epoch that won the race turns into the idempotent
+        skip."""
         sid, already = self._publish(
-            self._successor(m, epoch_id, **fields), m, touched
+            self._successor(m, epoch_id, **fields), m, touched, rebase
         )
         if already:
             return MergeResult(epoch_id=epoch_id, skipped=True, snapshot_id=sid)
@@ -1471,9 +1475,12 @@ class SnapshotTable:
         staged = self._stage_buckets(compacted)
         if lsn_obs is not None:
             hi_lsn = lsn_obs.get["hi"]
-        new_manifest = self._successor(
+        self._settled = {}  # pending settlement belongs to the superseded history
+        return self._commit(
             m,
             str(epoch_id),
+            touched,
+            rebase=False,
             schema=json.loads(new_schema.json()),
             files=staged,
             stats=self._merged_stats({**m, "stats": {}}, touched, staged),
@@ -1488,10 +1495,6 @@ class SnapshotTable:
                 "bootstrap_hi_lsn": int(hi_lsn) if hi_lsn is not None else None,
             },
         )
-        self._settled = {}  # pending settlement belongs to the superseded history
-        sid = self._write_manifest(new_manifest)
-        return MergeResult(epoch_id=str(epoch_id), touched_buckets=touched,
-                           snapshot_id=sid)
 
     def delete_where(
         self, predicate, epoch_id: str, buckets: list[int] | None = None
@@ -1691,15 +1694,16 @@ class SnapshotTable:
             b: {(new if c == old else c): v for c, v in cs.items()}
             for b, cs in m.get("stats", {}).items()
         }
-        sid = self._write_manifest(self._successor(
+        return self._commit(
             m,
             epoch_id,
+            [],
+            rebase=False,
             schema=json.loads(T.StructType(new_fields).json()),
             renamed_cols=renames,
             stats=stats,
             properties=props,
-        ))
-        return MergeResult(epoch_id=epoch_id, touched_buckets=[], snapshot_id=sid)
+        )
 
     # ---------------------------------------------------------------- maintenance
 
@@ -1793,16 +1797,16 @@ class SnapshotTable:
         staged = self._stage_buckets(
             self._cluster(rows, B)[0], sort_by=m["key_cols"]
         )
-        sid = self._write_manifest(self._successor(
+        return self._commit(
             m,
             epoch_id,
+            list(range(B)),
+            rebase=False,
             num_buckets=B,
             files={str(b): staged.get(str(b), []) for b in range(B)},
             stats=self._merged_stats({**m, "stats": {}}, list(range(B)), staged),
             **({"deltas": {}} if "deltas" in m else {}),
-        ))
-        return MergeResult(epoch_id=epoch_id, touched_buckets=list(range(B)),
-                           snapshot_id=sid)
+        )
 
     def expire_tombstones(self, older_than, epoch_id: str) -> MergeResult:
         """Drop retained tombstone rows whose (ts) is older than ``older_than`` — the
@@ -1861,9 +1865,9 @@ class SnapshotTable:
         endpoint stays readable.
 
         Orphan collection is inherently a LISTING operation (so is Iceberg's
-        remove_orphan_files) — object stores support listing, just slowly; this
-        POSIX walk is the local implementation of that maintenance pass and is
-        never on the commit hot path (which is listing-free: _staged_files +
+        remove_orphan_files) — object stores support listing, just slowly. Its
+        listings and deletes go through the store, and it is never on the
+        commit hot path (which is listing-free: _staged_files +
         PUT-IF-ABSENT)."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
@@ -1896,18 +1900,24 @@ class SnapshotTable:
             for fs in tm.get("deltas", {}).values():
                 live.update(fs)
         removed = 0
-        data_abs = self._abs(DATA_DIR)
-        for dirpath, _dirnames, filenames in os.walk(data_abs):
-            for f in filenames:
-                p = os.path.join(dirpath, f)
-                rel = os.path.relpath(p, self.root)
-                if f.endswith(".parquet") and rel not in live:
-                    os.unlink(p)
-                    removed += 1
-        # prune empty dirs
-        for dirpath, dirnames, filenames in os.walk(data_abs, topdown=False):
-            if not dirnames and not filenames and dirpath != data_abs:
-                shutil.rmtree(dirpath, ignore_errors=True)
+        ls = self.store.list_dirs
+        # data/<stage>/_bucket=K/part-*.parquet: a stage with no live file (a
+        # superseded or crashed one) goes as one prefix delete, otherwise its
+        # dead files go one by one
+        for stage in ls(self._abs(DATA_DIR)):
+            rel = os.path.join(DATA_DIR, stage)
+            files = [
+                os.path.join(rel, b, f)
+                for b in ls(self._abs(rel))
+                for f in ls(self._abs(os.path.join(rel, b)))
+                if f.endswith(".parquet")
+            ]
+            dead = [f for f in files if f not in live]
+            removed += len(dead)
+            if len(dead) == len(files):
+                dead = [rel]
+            for f in dead:
+                self.store.remove(self._abs(f))
         # Manifest-JSON GC (VERDICT r04 wrong #1): one snapshot JSON per commit
         # otherwise accumulates forever — at streaming cadence that is ~525k
         # files/year of dead metadata. Manifests behind the retention window
@@ -1916,17 +1926,12 @@ class SnapshotTable:
         # for time travel and changes_between. The oldest fully-readable
         # snapshot id is recorded durably so readers can fail EAGERLY with a
         # named error instead of a mid-job file-not-found (VERDICT r04 wrong #3).
-        mdir = os.path.join(self.root, MANIFEST_DIR)
-        for f in os.listdir(mdir):
-            if f.startswith("snapshot-") and f.endswith(".json"):
-                fsid = int(f[len("snapshot-"):-len(".json")])
-                if fsid < oldest_kept and fsid not in tagged:
-                    os.unlink(os.path.join(mdir, f))
-                    removed += 1
-        tmp = os.path.join(mdir, ".oldest-readable.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"oldest_readable_snapshot": oldest_kept}, fh)
-        os.replace(tmp, os.path.join(mdir, ".oldest-readable"))
+        for fsid in self._snapshot_ids():
+            if fsid < oldest_kept and fsid not in tagged:
+                self.store.remove(self._manifest_path(fsid))
+                removed += 1
+        self._put_json(self._meta_path(".oldest-readable"),
+                       {"oldest_readable_snapshot": oldest_kept})
         return removed
 
     def oldest_readable_snapshot(self) -> int:
@@ -1934,30 +1939,15 @@ class SnapshotTable:
         by vacuum's retention walk; 0 before any vacuum). Tagged snapshots
         (:meth:`tag`) remain readable even below this watermark — vacuum
         retains them explicitly."""
-        p = os.path.join(self.root, MANIFEST_DIR, ".oldest-readable")
-        if not os.path.exists(p):
-            return 0
-        with open(p) as fh:
-            return int(json.load(fh)["oldest_readable_snapshot"])
+        rec = self._get_json(self._meta_path(".oldest-readable"))
+        return 0 if rec is None else int(rec["oldest_readable_snapshot"])
 
     # ---------------------------------------------------------------- tags
 
-    def _tags_path(self) -> str:
-        return os.path.join(self.root, MANIFEST_DIR, "tags.json")
-
     def tags(self) -> dict[str, int]:
         """Named snapshot pins (Iceberg tags): {name: snapshot_id}."""
-        p = self._tags_path()
-        if not os.path.exists(p):
-            return {}
-        with open(p) as fh:
-            return {k: int(v) for k, v in json.load(fh).items()}
-
-    def _write_tags(self, tags: dict[str, int]) -> None:
-        tmp = self._tags_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(tags, fh, sort_keys=True)
-        os.replace(tmp, self._tags_path())
+        tags = self._get_json(self._meta_path("tags.json")) or {}
+        return {k: int(v) for k, v in tags.items()}
 
     def tag(self, name: str, snapshot_id: int | None = None) -> int:
         """Pin a snapshot under ``name`` (Iceberg tag) — e.g. the exact corpus
@@ -1976,7 +1966,7 @@ class SnapshotTable:
             )
         self.manifest(sid)  # must exist — fail eagerly, not at first read
         tags[str(name)] = sid
-        self._write_tags(tags)
+        self._put_json(self._meta_path("tags.json"), tags)
         return sid
 
     def drop_tag(self, name: str) -> int:
@@ -1984,5 +1974,5 @@ class SnapshotTable:
         (nothing is deleted here). Returns the snapshot id it pointed at."""
         tags = self.tags()
         sid = tags.pop(str(name))  # KeyError on unknown tag, by design
-        self._write_tags(tags)
+        self._put_json(self._meta_path("tags.json"), tags)
         return sid

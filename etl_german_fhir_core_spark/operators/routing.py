@@ -63,40 +63,6 @@ def temporal_validity_join(
     return joined.drop(*[dim[k] for k in on])
 
 
-def route_by_domain(
-    mapped: DataFrame, domain_col: str, domains: list[str]
-) -> dict[str, DataFrame]:
-    """Domain-routing fan-out (J3 analog: ICD→SNOMED 1:N mappings each carrying a
-    target domain_id; the mapper switches on it — ConditionMapper.java:922-989).
-    One filtered projection per target table; Catalyst collapses each into the scan."""
-    return {d: mapped.filter(F.col(domain_col) == d) for d in domains}
-
-
-def reciprocal_pairs(
-    pairs: DataFrame,
-    left_cols: list[str],
-    right_cols: list[str],
-    relation_col: str = "relationship_id",
-    forward: str = "primary_of",
-    backward: str = "secondary_of",
-) -> DataFrame:
-    """Reciprocal fact-relationship emission (J8 analog: primary/secondary ICD pairs
-    insert BOTH directions, concepts 44818770/44818868 —
-    post_processing/post_process_primary_secondary_icd.sql:257-326):
-    union of the pair frame with its column-swapped projection."""
-    fwd = pairs.select(
-        *[F.col(c).alias(f"e1_{i}") for i, c in enumerate(left_cols)],
-        *[F.col(c).alias(f"e2_{i}") for i, c in enumerate(right_cols)],
-        F.lit(forward).alias(relation_col),
-    )
-    bwd = pairs.select(
-        *[F.col(c).alias(f"e1_{i}") for i, c in enumerate(right_cols)],
-        *[F.col(c).alias(f"e2_{i}") for i, c in enumerate(left_cols)],
-        F.lit(backward).alias(relation_col),
-    )
-    return fwd.unionByName(bwd)
-
-
 def materialize_dim(df, name: str | None = None, storage_level=None):
     """J7: materialized vocabulary view (reference precomputes 3-way dim joins into
     helper tables once per job and reuses them across every mapper,

@@ -158,8 +158,8 @@ def rest_link_walk_scan(
 
     Restart state: with ``cursor_path`` set, each fetched body is recorded
     atomically as ``page-<i>.json`` BEFORE its next link is followed — through
-    the pluggable side-path ``store`` (lake/store.py get_blob/put_blob), the
-    same abstraction the retry queue rides, so on a real cluster the cursor
+    the pluggable ``store`` (lake/store.py get_blob/put_blob), the same store
+    a table's commits and retry queue ride, so on a real cluster the cursor
     state lives in the shared object store and survives a driver-pod death
     (VERDICT r04 missing #1; the reference persists its reader restart state in
     the Spring Batch job-repository DATABASE, FhirServerItemReader.java:160-191

@@ -56,31 +56,25 @@ class ChangeFeedSync:
     """Apply a source table's snapshot diffs to a target table, in snapshot
     order, with durable restart position.
 
-    ``state_path`` holds the consumer's recorded position as a store blob
-    (lake/store.py — object-store GET/PUT on a cluster, same abstraction as
-    the retry queue and REST cursor). A consumer that has fallen behind the
-    source's vacuum retention window either raises SnapshotExpiredError
-    (``bootstrap=False``; re-run vacuum with larger keep_last) or re-seeds
-    from the source's CURRENT state in one batch (``bootstrap=True`` —
-    tombstones included, so late out-of-order events stay suppressed after
-    the jump)."""
+    ``state_path`` holds the consumer's recorded position as a blob in the
+    TARGET table's store (lake/store.py — object-store GET/PUT on a cluster,
+    the same store that publishes the target's commits). A consumer that has
+    fallen behind the source's vacuum retention window either raises
+    SnapshotExpiredError (``bootstrap=False``; re-run vacuum with larger
+    keep_last) or re-seeds from the source's CURRENT state in one batch
+    (``bootstrap=True`` — tombstones included, so late out-of-order events
+    stay suppressed after the jump)."""
 
     def __init__(
         self,
         source: SnapshotTable,
         target: SnapshotTable,
         state_path: str,
-        store=None,
         bootstrap: bool = False,
     ):
-        if store is None:
-            from etl_german_fhir_core_spark.lake.store import LocalStore
-
-            store = LocalStore()
         self.source = source
         self.target = target
         self.state_path = state_path
-        self.store = store
         self.bootstrap = bootstrap
 
     # diffs are requested with U_pre preimage rows only when the consumer
@@ -95,11 +89,11 @@ class ChangeFeedSync:
     def position(self) -> int:
         """Last source snapshot id this consumer has fully applied (0 = from
         the table's empty root snapshot)."""
-        raw = self.store.get_blob(self._pos_blob())
+        raw = self.target.store.get_blob(self._pos_blob())
         return int(json.loads(raw)["snapshot_id"]) if raw is not None else 0
 
     def _record(self, snapshot_id: int) -> None:
-        self.store.put_blob(
+        self.target.store.put_blob(
             self._pos_blob(),
             json.dumps({"snapshot_id": snapshot_id}).encode("utf-8"),
         )
@@ -286,9 +280,8 @@ class AggFeedSync(ChangeFeedSync):
         sum_cols: dict[str, str] | None = None,
         min_cols: dict[str, str] | None = None,
         max_cols: dict[str, str] | None = None,
-        store=None,
     ):
-        super().__init__(source, target, state_path, store=store, bootstrap=True)
+        super().__init__(source, target, state_path, bootstrap=True)
         self.group_cols = list(group_cols)
         self.sum_cols = dict(sum_cols or {})
         self.min_cols = dict(min_cols or {})

@@ -73,8 +73,8 @@ def test_diff_stream_converges_exactly_once_across_crash(spark, tmp_path):
         for i in range(1, 6)
     ]), epoch_id="e000001")
 
-    store = _FailNthPut(fail_on=2)  # first put = position 1; second crashes
-    sync = ChangeFeedSync(src, tgt, str(tmp_path / "state"), store=store)
+    tgt.store = _FailNthPut(fail_on=2)  # first put = position 1; second crashes
+    sync = ChangeFeedSync(src, tgt, str(tmp_path / "state"))
     assert sync.sync_once() == [1]
     import pandas as pd
 
@@ -247,10 +247,10 @@ def test_agg_feed_delta_maintained_view(spark, tmp_path):
             for r in tgt.read().filter(F.col("n_rows") > 0).collect()
         }
 
-    store = _FailNthPut(fail_on=3)  # 3rd position write crashes
+    tgt.store = _FailNthPut(fail_on=3)  # 3rd position write crashes
     sync = AggFeedSync(src, tgt, str(tmp_path / "state"),
                        group_cols=["conv_id"],
-                       sum_cols={"sum_score": "score"}, store=store)
+                       sum_cols={"sum_score": "score"})
 
     src.merge(_b([
         ("U", 1, "c1", 0, 10, TS0),
@@ -428,12 +428,12 @@ def test_agg_feed_minmax_dirty_group_reaggregation(spark, tmp_path):
         ("D", 40, "c4", 0, None, TS0 + dt.timedelta(seconds=240)),
         ("U", 41, "c1", 1, 8, TS0 + dt.timedelta(seconds=241)),
     ]), epoch_id="e000005")
-    store = sync.store
-    sync.store = _FailNthPut(fail_on=1)
+    store = tgt.store
+    tgt.store = _FailNthPut(fail_on=1)
     sids = tgt.current_snapshot_id()
     with pytest.raises(TimeoutError, match="injected"):
         sync.sync_once()
-    sync.store = store
+    tgt.store = store
     assert sync.position() == 4 and tgt.has_epoch("cdf-5")
     assert tgt.current_snapshot_id() == sids + 1
     assert sync.sync_once() == [5]
@@ -670,10 +670,10 @@ def _scored(spark, rows, val="score"):
     )
 
 
-def _view_sync(src, tgt, state, store=None):
+def _view_sync(src, tgt, state):
     return AggFeedSync(src, tgt, state, group_cols=["conv_id"],
                        sum_cols={"sum_score": "score"},
-                       max_cols={"max_score": "score"}, store=store)
+                       max_cols={"max_score": "score"})
 
 
 def _view(tgt):
@@ -711,11 +711,11 @@ def test_crash_then_source_advance_replays_pinned_window_once(spark, tmp_path):
     agg = SnapshotTable.create(spark, str(tmp_path / "agg"), _VIEW,
                                ["conv_id"], num_buckets=4)
     # each consumer's second position write is lost
+    rep.store = _FailNthPut(fail_on=2)
+    agg.store = _FailNthPut(fail_on=2)
     syncs = [
-        ChangeFeedSync(src, rep, str(tmp_path / "rep_state"),
-                       store=_FailNthPut(fail_on=2)),
-        _view_sync(src, agg, str(tmp_path / "agg_state"),
-                   store=_FailNthPut(fail_on=2)),
+        ChangeFeedSync(src, rep, str(tmp_path / "rep_state")),
+        _view_sync(src, agg, str(tmp_path / "agg_state")),
     ]
 
     src.merge(_scored(spark, [

@@ -3,7 +3,7 @@ ONE table — the standard backfill-plus-live-stream lakehouse pattern. Iceberg'
 optimistic-concurrency model retries a commit whose conflict is disjoint
 (different buckets / epoch ids); a true overlap must still raise.
 
-The race is deterministic: writer A's committer fires the rival's commit right
+The race is deterministic: writer A's store fires the rival's commit right
 before A's own PUT-IF-ABSENT, so A always loses the CAS and must rebase.
 """
 
@@ -15,8 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_german_fhir_core_spark.lake import SnapshotTable
-from etl_german_fhir_core_spark.lake.commit import CommitConflict, PosixCommitter
+from etl_german_fhir_core_spark.lake import CommitConflict, LocalStore, SnapshotTable
 
 TS0 = dt.datetime(2025, 1, 1, 0, 0, 0)
 
@@ -30,20 +29,19 @@ SCHEMA = T.StructType(
 )
 
 
-class _LoseFirstRace:
-    """Committer that triggers ``rival()`` immediately before this writer's
-    first commit attempt — guaranteeing the CAS loss that exercises rebase."""
+class _LoseFirstRace(LocalStore):
+    """Store that triggers ``rival()`` immediately before this writer's first
+    PUT-IF-ABSENT — guaranteeing the CAS loss that exercises rebase."""
 
     def __init__(self, rival):
         self._rival = rival
         self._fired = False
-        self._inner = PosixCommitter()
 
-    def commit(self, path: str, payload: bytes) -> None:
+    def put_if_absent(self, path: str, data: bytes) -> None:
         if not self._fired:
             self._fired = True
             self._rival()
-        self._inner.commit(path, payload)
+        super().put_if_absent(path, data)
 
 
 def _batch(spark, rows):
@@ -136,7 +134,7 @@ def test_disjoint_concurrent_commits_both_land(spark, tmp_path, write):
     rows_b = [("U", 2, kb, 0, "from-B", TS0)]
 
     tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.committer = _LoseFirstRace(
+    tbl_a.store = _LoseFirstRace(
         lambda: tbl_b.merge(_batch(spark, rows_b), epoch_id="e-live")
     )
     r = loser_write(spark, tbl_a, ka, "e-backfill")
@@ -161,7 +159,7 @@ def test_overlapping_buckets_still_conflict(spark, tmp_path):
     rows_b = [("U", 2, "cX", 1, "from-B", TS0)]  # same conv -> same bucket
 
     tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.committer = _LoseFirstRace(
+    tbl_a.store = _LoseFirstRace(
         lambda: tbl_b.merge(_batch(spark, rows_b), epoch_id="e-live")
     )
     with pytest.raises(CommitConflict, match="same bucket"):
@@ -181,7 +179,7 @@ def test_duplicate_epoch_race_is_idempotent(spark, tmp_path, write):
         _seed(spark, tbl_b, "cY")
 
     tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.committer = _LoseFirstRace(
+    tbl_a.store = _LoseFirstRace(
         lambda: loser_write(spark, tbl_b, "cY", "e1")
     )
     r = loser_write(spark, tbl_a, "cY", "e1")
@@ -208,7 +206,7 @@ def test_disjoint_concurrent_merge_agg_commits_both_land(spark, tmp_path):
 
     fold(tbl_b, ka, 1, "e-seed")
     tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.committer = _LoseFirstRace(lambda: fold(tbl_b, kb, 5, "e-live"))
+    tbl_a.store = _LoseFirstRace(lambda: fold(tbl_b, kb, 5, "e-live"))
     r = fold(tbl_a, ka, 2, "e-backfill")
     assert not r.skipped
     assert tbl_b.has_epoch("e-live") and tbl_b.has_epoch("e-backfill")
@@ -231,7 +229,7 @@ def test_disjoint_rebase_with_schema_evolution(spark, tmp_path):
         tbl_b.merge(evolved, epoch_id="e-live")
 
     tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.committer = _LoseFirstRace(_rival)
+    tbl_a.store = _LoseFirstRace(_rival)
     tbl_a.merge(_batch(spark, [("U", 1, ka, 0, "from-A", TS0)]),
                 epoch_id="e-backfill")
 
@@ -239,3 +237,31 @@ def test_disjoint_rebase_with_schema_evolution(spark, tmp_path):
     assert "tool" in cols
     got = {(x["conv_id"], x["text"], x["tool"]) for x in tbl_a.read().collect()}
     assert got == {(ka, "from-A", None), (kb, "from-B", "extra-B")}
+
+
+# the writes that never rebase: they commit whole-table or schema state
+NON_REBASING = {
+    "overwrite": lambda spark, tbl: tbl.overwrite(
+        _batch(spark, [("U", 1, "cA", 0, "bulk-A", TS0)]), epoch_id="bulk-A"),
+    "rename_column": lambda spark, tbl: tbl.rename_column(
+        "text", "body", epoch_id="e-rename"),
+    "rebucket": lambda spark, tbl: tbl.rebucket(4, epoch_id="e-rebucket"),
+}
+
+
+@pytest.mark.parametrize("write", list(NON_REBASING))
+def test_non_rebasing_writes_conflict_on_a_lost_race(spark, tmp_path, write):
+    """overwrite, rename_column and rebucket commit without rebase: a rival
+    commit that lands between the writer's manifest read and its publish
+    makes the write raise CommitConflict, and the rival stays the head. A
+    rebased rename would have committed on top, unioning ``text`` back in."""
+    tbl_b = _mk(spark, str(tmp_path / "t"))
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
+    tbl_a.store = _LoseFirstRace(lambda: tbl_b.merge(
+        _batch(spark, [("U", 2, "cB", 0, "from-B", TS0)]), epoch_id="e-live"))
+    with pytest.raises(CommitConflict):
+        NON_REBASING[write](spark, tbl_a)
+    head = tbl_b.manifest()
+    assert head["epoch_id"] == "e-live" and head["snapshot_id"] == 1
+    assert head["num_buckets"] == 8
+    assert _rows(tbl_b) == [("cB", 0, "from-B")]

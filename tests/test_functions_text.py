@@ -6,11 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_german_fhir_core_spark.functions.text import (
-    cut_string,
     doc_fingerprint,
     lang_id,
     normalize_text,
-    prefix_key,
     quality_score,
     redact_pii,
     token_count,
@@ -26,18 +24,6 @@ def test_normalize_text(spark):
     assert _one(spark, "  a\t\tb\n c  ", normalize_text("text")) == "a b c"
     assert _one(spark, "x\x00y\x07z", normalize_text("text")) == "xyz"
     assert _one(spark, "abcdef", normalize_text("text", max_len=3)) == "abc"
-
-
-def test_cut_string_matches_reference_semantics(spark):
-    # PatientMapper.java:439-448: leftmost n chars, null-safe
-    assert _one(spark, "x" * 80, cut_string("text")) == "x" * 50
-    assert _one(spark, None, cut_string("text")) is None
-    assert _one(spark, "short", cut_string("text")) == "short"
-
-
-def test_prefix_key(spark):
-    # ResourceFhirReferenceUtils.java:162-181: "pat-" + id
-    assert _one(spark, "123", prefix_key("text", "pat-")) == "pat-123"
 
 
 def test_token_count(spark):

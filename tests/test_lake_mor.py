@@ -259,7 +259,7 @@ def test_mor_concurrent_delta_appends_rebase_when_disjoint(spark, tmp_path):
     """Two writers appending MoR deltas concurrently: disjoint buckets rebase
     (both epochs land, union state), the same bucket conflicts (relative _src
     order between the two delta files would be ambiguous)."""
-    from etl_german_fhir_core_spark.lake.commit import CommitConflict
+    from etl_german_fhir_core_spark.lake import CommitConflict
     from etl_german_fhir_core_spark.lake.table import _bucket_expr
 
     root = str(tmp_path / "t")

@@ -603,7 +603,7 @@ def test_rebucket_conflicts_with_concurrent_old_layout_writer(spark, tmp_path):
     """A commit staged against the OLD layout must fail with CommitConflict
     after a concurrent rebucket — its CoW files carry bucket ids the new hash
     disagrees with, so rebase would corrupt co-location silently."""
-    from etl_german_fhir_core_spark.lake.commit import CommitConflict
+    from etl_german_fhir_core_spark.lake import CommitConflict
 
     root = str(tmp_path / "t")
     t1 = SnapshotTable.create(spark, root, _schema(), ["conv_id", "turn_idx"],
@@ -676,3 +676,28 @@ def test_snapshot_tags_pin_through_vacuum(spark, tmp_path):
         tbl.read(snapshot_id=1)
     with pytest.raises(KeyError):
         tbl.read(tag="train-v1")
+
+
+def test_table_has_no_raw_file_io():
+    """lake/table.py reaches storage only through its store: no raw file call
+    and no shutil import, so paths the runtime store tripwire
+    (test_retry_queue_side_paths_are_store_clean) never drives stay covered."""
+    import ast
+    import pathlib
+
+    from etl_german_fhir_core_spark.lake import table
+
+    raw = {"listdir", "replace", "walk", "unlink", "makedirs"}
+    banned = {"open"} | {f"os.{n}" for n in raw}
+    tree = ast.parse(pathlib.Path(table.__file__).read_text())
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and ast.unparse(node.func) in banned:
+            found.append((ast.unparse(node.func), node.lineno))
+        elif isinstance(node, ast.Import):
+            found += [(a.name, node.lineno) for a in node.names
+                      if a.name.split(".")[0] == "shutil"]
+        elif isinstance(node, ast.ImportFrom) and node.module in ("os", "shutil"):
+            found += [(f"{node.module}.{a.name}", node.lineno) for a in node.names
+                      if node.module == "shutil" or a.name in raw]
+    assert not found, found

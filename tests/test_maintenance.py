@@ -4,6 +4,7 @@ recovery (staging orphans never corrupt; vacuum reclaims them)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import signal
 import subprocess
@@ -221,11 +222,19 @@ def test_crash_mid_merge_leaves_no_corruption(spark, tmp_path):
     shutil.rmtree(f"{work}/tbl_ref", ignore_errors=True)
 
 
+def _put(tbl, manifest):
+    """Publish ``manifest`` through the table's store PUT-IF-ABSENT — the
+    primitive a commit races on."""
+    tbl.store.put_if_absent(tbl._manifest_path(manifest["snapshot_id"]),
+                            json.dumps(manifest).encode("utf-8"))
+
+
 def test_commit_race_exactly_one_winner(spark, tmp_path):
     """Two writers racing for the same snapshot id: exactly one commit wins, the
     loser gets CommitConflict (FileExistsError) and the winner's manifest is the
-    one readers see — the optimistic-concurrency contract the committer must keep
-    on any store (POSIX link here; conditional PUT on S3/GCS)."""
+    one readers see — the optimistic-concurrency contract the store's
+    PUT-IF-ABSENT must keep on any backend (POSIX link here; conditional PUT on
+    S3/GCS)."""
     import pyspark.sql.types as T
     import pytest
 
@@ -246,11 +255,11 @@ def test_commit_race_exactly_one_winner(spark, tmp_path):
               "parent_id": base["snapshot_id"], "epoch_id": "winner"}
     loser = {**base, "snapshot_id": base["snapshot_id"] + 1,
              "parent_id": base["snapshot_id"], "epoch_id": "loser"}
-    tbl._write_manifest(winner)
+    _put(tbl, winner)
     with pytest.raises(CommitConflict):
-        tbl._write_manifest(loser)
+        _put(tbl, loser)
     with pytest.raises(FileExistsError):  # catchable as the stdlib class too
-        tbl._write_manifest(loser)
+        _put(tbl, loser)
     assert tbl.manifest()["epoch_id"] == "winner"
     # no torn tmp files left behind
     import os
@@ -260,9 +269,9 @@ def test_commit_race_exactly_one_winner(spark, tmp_path):
 
 
 def test_conditional_put_committer_race_and_fault(spark, tmp_path):
-    """The committer interface must actually decouple (VERDICT r02 missing #4):
+    """The store interface must actually decouple (VERDICT r02 missing #4):
     (1) the race test passes under the object-store-style conditional-PUT
-    committer (CAS authority = key set, no os.link), and (2) the classic
+    store (CAS authority = key set, no os.link), and (2) the classic
     object-store fault — PUT landed, response lost — is absorbed by the
     idempotent epoch ledger: the caller's retry sees the epoch committed."""
     import pytest
@@ -277,15 +286,15 @@ def test_conditional_put_committer_race_and_fault(spark, tmp_path):
     tbl = SnapshotTable.create(
         spark, str(tmp_path / "cas"), SCHEMA, ["conv_id", "turn_idx"], num_buckets=2
     )
-    tbl.committer = ConditionalPutCommitter()
+    tbl.store = ConditionalPutCommitter()
     base = tbl.manifest()
     winner = {**base, "snapshot_id": base["snapshot_id"] + 1,
               "parent_id": base["snapshot_id"], "epoch_id": "winner"}
     loser = {**base, "snapshot_id": base["snapshot_id"] + 1,
              "parent_id": base["snapshot_id"], "epoch_id": "loser"}
-    tbl._write_manifest(winner)
+    _put(tbl, winner)
     with pytest.raises(CommitConflict):
-        tbl._write_manifest(loser)
+        _put(tbl, loser)
     assert tbl.manifest()["epoch_id"] == "winner"
 
     # (2) fault injection: first PUT lands but the client sees an error
@@ -293,7 +302,7 @@ def test_conditional_put_committer_race_and_fault(spark, tmp_path):
     tbl2 = SnapshotTable.create(
         spark, root2, SCHEMA, ["conv_id", "turn_idx"], num_buckets=2
     )
-    tbl2.committer = ConditionalPutCommitter(fail_after_put=1)
+    tbl2.store = ConditionalPutCommitter(fail_after_put=1)
     rows = [("I", i, f"c{i % 3}", i, f"t{i}", TS0) for i in range(20)]
     with pytest.raises(TimeoutError):
         tbl2.merge(_batch(spark, rows), epoch_id="e1")

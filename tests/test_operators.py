@@ -19,7 +19,6 @@ from etl_german_fhir_core_spark.operators import (
     simhash_buckets,
     temporal_validity_join,
 )
-from etl_german_fhir_core_spark.operators.routing import reciprocal_pairs, route_by_domain
 
 TS0 = dt.datetime(2025, 1, 1)
 
@@ -67,23 +66,6 @@ def test_lookup_with_default(spark):
         for r in lookup_with_default(fact, dim, ["code"], "concept_id", 0).collect()
     }
     assert out == {"x": 7, "y": 0}
-
-
-def test_route_by_domain_and_reciprocal_pairs(spark):
-    mapped = spark.createDataFrame(
-        [(1, "Condition"), (2, "Measurement"), (3, "Condition")],
-        "id int, domain string",
-    )
-    routed = route_by_domain(mapped, "domain", ["Condition", "Measurement"])
-    assert routed["Condition"].count() == 2
-    assert routed["Measurement"].count() == 1
-
-    pairs = spark.createDataFrame([(1, 2)], "a int, b int")
-    rp = reciprocal_pairs(pairs, ["a"], ["b"]).collect()
-    assert {(r["e1_0"], r["e2_0"], r["relationship_id"]) for r in rp} == {
-        (1, 2, "primary_of"),
-        (2, 1, "secondary_of"),
-    }
 
 
 DOCS = [

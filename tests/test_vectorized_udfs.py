@@ -2,16 +2,8 @@
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import functions as F
-
 from etl_german_fhir_core_spark.functions.text import token_count
-from etl_german_fhir_core_spark.functions.vectorized import (
-    l2_normalize_pd,
-    normalize_text_pd,
-    token_count_pd,
-)
+from etl_german_fhir_core_spark.functions.vectorized import token_count_pd
 
 
 def test_token_count_pd_matches_native(spark):
@@ -23,15 +15,3 @@ def test_token_count_pd_matches_native(spark):
     ).collect()
     for r in out:
         assert r["native"] == r["pd"], r
-
-
-def test_normalize_text_pd(spark):
-    df = spark.createDataFrame([("  a\t b  c ",)], "text string")
-    assert df.select(normalize_text_pd("text").alias("v")).collect()[0]["v"] == "a b c"
-
-
-def test_l2_normalize_pd(spark):
-    df = spark.createDataFrame([(1, [3.0, 4.0])], "id int, embedding array<float>")
-    v = df.select(l2_normalize_pd("embedding").alias("v")).collect()[0]["v"]
-    assert math.isclose(v[0], 0.6, rel_tol=1e-6) and math.isclose(v[1], 0.8, rel_tol=1e-6)
-    assert math.isclose(sum(x * x for x in v), 1.0, rel_tol=1e-6)
