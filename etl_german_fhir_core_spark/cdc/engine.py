@@ -15,18 +15,22 @@ Scale design:
   what makes the idempotent-commit scheme exactly-once (SURVEY §7.3 hard part (a)).
 - The feed scan pushes ``lsn > lo AND lsn <= hi`` into Parquet (range-partitioned by
   lsn at write time → file pruning).
-- Within-batch LWW compaction happens in the MERGE window, which hash-partitions on
-  the full key (conv_id, turn_idx) — a hot conversation spreads over its turns.
-  Residual write skew (one hot *bucket*) is handled by salted staging: multiple files
-  per bucket written by parallel tasks (``files_per_bucket``).
+- Within-batch LWW compaction is the merge's one exchange on ``(_bucket[, _salt])``
+  followed by the ``_lww_winners`` hash aggregate on the full key (conv_id,
+  turn_idx). Write skew (one hot *bucket*) is handled by salted staging: with
+  ``files_per_bucket`` > 1 a salt of the full key joins the exchange, so parallel
+  tasks write the bucket as multiple files.
+- Counts come from the merge's own Observation (``MergeResult.rows_merged``): no
+  count job, in batch and ``foreachBatch`` mode alike.
 """
 
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_german_fhir_core_spark.functions.text import validity_filter
@@ -34,6 +38,7 @@ from etl_german_fhir_core_spark.lake.table import (
     BUCKET_COL,
     SnapshotTable,
     _bucket_expr,
+    _epoch_name,
     _family_index,
     _key_join,
     _touched_buckets,
@@ -44,13 +49,6 @@ LINEAGE_SCHEMA = (
     "rows_in long, rows_applied long, rows_deleted long, "
     "conflict_count long, rows_skipped long, rows_expired long"
 )
-
-
-class _EagerCount:
-    """Observation-shaped wrapper for a count computed eagerly (streaming path)."""
-
-    def __init__(self, metrics: dict):
-        self.get = metrics
 
 
 @dataclass
@@ -166,11 +164,6 @@ class CdcEngine:
     # AFTER expiry can resurrect its key (tested at the boundary).
     expire_every: int | None = None
     tombstone_retention_sec: float | None = None
-    # streaming (foreachBatch) mode: the valid-row Observation's .get can block
-    # forever in the micro-batch thread (its listener event is not delivered
-    # until the foreachBatch callback returns — observed deadlock), so the count
-    # runs as an explicit tiny job instead. Set by stream_feed_into_table.
-    stream_safe_counts: bool = False
     results: list[EpochResult] = field(default_factory=list)
 
     # ------------------------------------------------------------------ planning
@@ -198,7 +191,7 @@ class CdcEngine:
         epochs, i = [], 1
         while start < hi:
             end = min(start + self.epoch_rows, hi)
-            epochs.append((f"e{i:06d}", start, end))
+            epochs.append((_epoch_name("e", i), start, end))
             start, i = end, i + 1
         return epochs
 
@@ -207,15 +200,8 @@ class CdcEngine:
     def apply_epoch(self, epoch_id: str, lo: int, hi: int) -> EpochResult:
         """Process one epoch: scan (lo, hi] → normalize → validity gate → retry-queue
         union/park → MERGE → lineage. Idempotent: committed epochs are skipped."""
-        import time as _time
-
-        t_start = _time.time()
-        res = EpochResult(epoch_id=epoch_id, lo_lsn=lo, hi_lsn=hi)
         batch = self.feed().where((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        self._apply_batch(batch, epoch_id, res)
-        res.elapsed_sec = round(_time.time() - t_start, 2)
-        self.results.append(res)
-        return res
+        return self._apply_batch(batch, epoch_id, lo, hi)
 
     def apply_stream_batch(self, batch: DataFrame, epoch_id: str) -> EpochResult:
         """foreachBatch entry point — the streaming counterpart of apply_epoch with
@@ -226,78 +212,66 @@ class CdcEngine:
         is the determinism the idempotent ledger needs (SURVEY §7.3(a)); the
         reference brackets every load path with the same counters
         (listeners/FhirToOmopJobListener.java:283-354)."""
-        import time as _time
+        return self._apply_batch(batch, str(epoch_id), -1, -1)
 
-        t_start = _time.time()
-        res = EpochResult(epoch_id=str(epoch_id), lo_lsn=-1, hi_lsn=-1)
-        self._apply_batch(batch, str(epoch_id), res)
-        res.elapsed_sec = round(_time.time() - t_start, 2)
-        self.results.append(res)
-        return res
+    def _apply_batch(
+        self, batch: DataFrame, epoch_id: str, lo: int, hi: int
+    ) -> EpochResult:
+        """The one timed epoch body behind both entry points."""
+        t_start = time.time()
+        res = EpochResult(epoch_id=epoch_id, lo_lsn=lo, hi_lsn=hi)
+        # A committed main merge replays: a crash may have landed BETWEEN that
+        # commit and the cascade/rollup commits — each derived table's own
+        # epoch ledger decides, so re-applying below is a no-op when complete
+        # and repairs the divergence when not. Derived tables consume the SAME
+        # validity-filtered + retry-adjusted frame the main merge applied
+        # (ADVICE r02 medium), re-derived deterministically: the batch comes
+        # from the LSN range, the anchor check reads the PRE-epoch snapshot,
+        # and queue-(k-1) still exists because queue GC runs only after every
+        # derived commit (below). (Adding retry-dependent derived specs
+        # retroactively, after an epoch's queue was GC'd, is unsupported —
+        # that is a config change, not a replay.)
+        replay = res.skipped_commit = self.table.has_epoch(epoch_id)
+        if not replay:
+            # Per-bucket offset stats: a NARROW scan (lsn + leading key only —
+            # Parquet column pruning keeps the text payload untouched).
+            # Deliberately not cached: re-scanning pruned columns is cheaper
+            # than materializing the batch (measured: a full-row persist was
+            # 6x slower at 32 cores than two scans).
+            per_bucket, res.rows_in = self._bucket_stats(batch)
+            if res.hi_lsn < 0 and per_bucket:
+                # streaming path: lineage offsets come from the micro-batch itself
+                res.lo_lsn = min(lo_ for lo_, _hi, _n in per_bucket.values())
+                res.hi_lsn = max(hi_ for _lo, hi_, _n in per_bucket.values())
 
-    def _apply_batch(self, batch: DataFrame, epoch_id: str, res: EpochResult) -> EpochResult:
-        if self.table.has_epoch(epoch_id):
-            # Main-table commit exists, but a crash may have landed BETWEEN that
-            # commit and the cascade/rollup commits — each derived table's own
-            # epoch ledger decides, so re-applying here is a no-op when complete
-            # and repairs the divergence when not. Derived tables consume the SAME
-            # validity-filtered + retry-adjusted frame the main merge applied
-            # (ADVICE r02 medium), re-derived deterministically: the batch comes
-            # from the LSN range, the anchor check reads the PRE-epoch snapshot,
-            # and queue-(k-1) still exists because queue GC runs only after every
-            # derived commit (below). (Adding retry-dependent derived specs
-            # retroactively, after an epoch's queue was GC'd, is unsupported —
-            # that is a config change, not a replay.)
-            res.skipped_commit = True
-            effective, _obs, _r, _p, _e, cleanup_retry = self._effective_batch(
-                batch, epoch_id, replay=True
+        effective, retried, parked, expired, cleanup_retry = self._effective_batch(
+            batch, epoch_id, replay
+        )
+        if not replay:
+            res.retried, res.parked, res.expired = retried, parked, expired
+            mr = self.table.merge(
+                effective, epoch_id=epoch_id,
+                touched=None if self.require_turn0 else list(per_bucket),
+                # normalization runs POST-resolution on winners only: at a 50%
+                # conflict rate that halves the regex work, and LWW ordering
+                # never depends on payload columns so resolution is unaffected
+                finalize_payload=self._normalize_final if self.normalize else None,
             )
-            self._apply_projections(effective, epoch_id)
-            self._apply_cascades(effective, epoch_id)
-            self._fold_rollups(effective, epoch_id)
-            self._maybe_expire(batch, epoch_id)
-            self._maybe_compact(epoch_id)
-            cleanup_retry()
-            self._settle_epoch(epoch_id)
-            return res
-
-        # Per-bucket offset stats: a NARROW scan (lsn + leading key only — Parquet
-        # column pruning keeps the text payload untouched). Deliberately not cached:
-        # re-scanning pruned columns is cheaper than materializing the batch
-        # (measured: a full-row persist was 6x slower at 32 cores than two scans).
-        per_bucket, res.rows_in = self._bucket_stats(batch)
-        if res.hi_lsn < 0 and per_bucket:
-            # streaming path: lineage offsets come from the micro-batch itself
-            res.lo_lsn = min(lo_ for lo_, _hi, _n in per_bucket.values())
-            res.hi_lsn = max(hi_ for _lo, hi_, _n in per_bucket.values())
-
-        valid, n_valid, retried, parked, expired, cleanup_retry = (
-            self._effective_batch(batch, epoch_id, replay=False)
-        )
-        res.retried, res.parked, res.expired = retried, parked, expired
-
-        mr = self.table.merge(
-            valid, epoch_id=epoch_id,
-            touched=None if self.require_turn0 else list(per_bucket),
-            # normalization runs POST-resolution on winners only: at a 50% conflict
-            # rate that halves the regex work, and LWW ordering never depends on
-            # payload columns so resolution is unaffected
-            finalize_payload=self._normalize_final if self.normalize else None,
-        )
-        # expired retries are dropped rows too — lineage must account for them
-        res.rows_skipped = res.rows_in - n_valid() + expired
-        res.rows_applied = mr.rows_upserted
-        res.rows_deleted = mr.rows_deleted
-        res.conflict_count = mr.conflict_count
+            # the merge resolved valid + retried − parked − expired rows, so
+            # this is the dead letters plus the expired retries (dropped too)
+            res.rows_skipped = res.rows_in - mr.rows_merged + retried - parked
+            res.rows_applied = mr.rows_upserted
+            res.rows_deleted = mr.rows_deleted
+            res.conflict_count = mr.conflict_count
 
         # derived tables: FK-ordered multi-table fan-out, then cascade deletes,
         # then rollups (state-mode rollups read the post-merge main table) — ALL
         # consuming the effective (valid + retry-adjusted) frame, so dead-lettered
         # and max_retries-expired rows never reach children, and rows retried into
         # the parent in a later epoch fan out in that same later epoch.
-        self._apply_projections(valid, epoch_id)
-        self._apply_cascades(valid, epoch_id)
-        self._fold_rollups(valid, epoch_id)
+        self._apply_projections(effective, epoch_id)
+        self._apply_cascades(effective, epoch_id)
+        self._fold_rollups(effective, epoch_id)
         self._maybe_expire(batch, epoch_id)
         self._maybe_compact(epoch_id)
 
@@ -305,9 +279,11 @@ class CdcEngine:
         # then always re-derive its effective batch from queue-(k-1) on resume
         cleanup_retry()
 
-        if self.lineage_path:
-            self._write_lineage(epoch_id, res.lo_lsn, res.hi_lsn, per_bucket, res)
+        if self.lineage_path and not replay:
+            self._write_lineage(per_bucket, res)
         self._settle_epoch(epoch_id)
+        res.elapsed_sec = round(time.time() - t_start, 2)
+        self.results.append(res)
         return res
 
     def _settle_epoch(self, epoch_id: str) -> None:
@@ -327,7 +303,8 @@ class CdcEngine:
         """THE frame the main merge applies — validity gate, dead-letter split,
         retry-queue union/park — shared with every derived table (ADVICE r02
         medium: feeding projections the raw batch silently diverged parent and
-        children under dead_letter_path / require_turn0).
+        children under dead_letter_path / require_turn0). Returns (frame,
+        retried, parked, expired, queue cleanup) — see _apply_retry_queue.
 
         ``replay=True`` re-derives the frame for an already-committed epoch
         without side effects that could clobber post-commit state (queue files
@@ -339,32 +316,7 @@ class CdcEngine:
             batch.filter(~_cond).write.mode("overwrite").parquet(
                 os.path.join(self.dead_letter_path, f"epoch={epoch_id}")
             )
-        valid_obs = None
-        pre_retry = valid
-        if not replay:
-            if self.stream_safe_counts:
-                valid_obs = _EagerCount({"n_valid": valid.count()})
-            else:
-                # valid-row count rides on the merge's own write action (no extra pass)
-                valid_obs = Observation(f"valid-{epoch_id}")
-                valid = valid.observe(valid_obs, F.count(F.lit(1)).alias("n_valid"))
-        valid, retried, parked, expired, cleanup = self._apply_retry_queue(
-            valid, epoch_id, replay=replay
-        )
-
-        def n_valid() -> int:
-            # the retry queue's own aggregations also execute the observed
-            # subtree; on some plan shapes (e.g. an empty parked set) the JVM
-            # Observation then fails to materialize its metrics row — fall back
-            # to an explicit recount of the pre-retry gate (rare, lineage-only)
-            if valid_obs is not None:
-                try:
-                    return int(valid_obs.get["n_valid"] or 0)
-                except Exception:
-                    pass
-            return pre_retry.count()
-
-        return valid, n_valid, retried, parked, expired, cleanup
+        return self._apply_retry_queue(valid, epoch_id, replay=replay)
 
     # --------------------------------------------------------------- derived tables
 
@@ -416,7 +368,7 @@ class CdcEngine:
         skips when no bucket holds >1 file or the ledger already has it)."""
         if not self.compact_every:
             return
-        idx = self._epoch_index(epoch_id)
+        _fam, idx = _family_index(epoch_id)
         if idx is not None and idx % self.compact_every == 0:
             self.table.compact(epoch_id=f"{epoch_id}/compact")
 
@@ -440,7 +392,7 @@ class CdcEngine:
         identically; the <epoch>/expire ledger entry makes re-runs no-ops."""
         if not self.expire_every or self.tombstone_retention_sec is None:
             return
-        idx = self._epoch_index(epoch_id)
+        _fam, idx = _family_index(epoch_id)
         if idx is None or idx % self.expire_every != 0:
             return
         if self.table.has_epoch(f"{epoch_id}/expire"):
@@ -495,33 +447,15 @@ class CdcEngine:
     def _queue_dir(self, epoch_id: str) -> str:
         return os.path.join(self._retry_root(), f"queue-{epoch_id}")
 
-    @staticmethod
-    def _epoch_index(epoch_id: str) -> int | None:
-        """Sequence position of an epoch id — both the batch planner's e000042 and
-        Structured Streaming's stream-42 (micro-batch ids are contiguous) form
-        deterministic contiguous sequences, which is what the retry queue and the
-        every-k-th maintenance cadences key on."""
-        s = str(epoch_id)
-        if s.startswith("e") and s[1:].isdigit():
-            return int(s[1:])
-        if s.startswith("stream-") and s[len("stream-"):].isdigit():
-            return int(s[len("stream-"):])
-        return None
-
-    @staticmethod
-    def _epoch_name(like: str, idx: int) -> str:
-        return f"stream-{idx}" if str(like).startswith("stream-") else f"e{idx:06d}"
-
     def _prev_queue_dir(self, epoch_id: str) -> str | None:
         """Epoch ids form a deterministic contiguous sequence (plan_epochs:
         e000001, e000002, ... — or stream-0, stream-1, ...), so epoch k consumes
         exactly the queue epoch k-1 wrote — never 'the newest dir', which could
         belong to a crashed attempt of the CURRENT epoch."""
-        idx = self._epoch_index(epoch_id)
-        first = 0 if str(epoch_id).startswith("stream-") else 1
-        if idx is None or idx <= first:
+        fam, idx = _family_index(epoch_id)
+        if fam is None or idx < 1:
             return None
-        return self._queue_dir(self._epoch_name(epoch_id, idx - 1))
+        return self._queue_dir(_epoch_name(fam, idx - 1))
 
     def _apply_retry_queue(self, batch: DataFrame, epoch_id: str, replay: bool = False):
         """Late-reference handling (J6 analog — the reference bumps
@@ -604,19 +538,13 @@ class CdcEngine:
 
         def cleanup():
             root = self._retry_root()
-            mine = self._epoch_index(epoch_id)
+            fam, mine = _family_index(epoch_id)
             # prefix-LIST + prefix-DELETE through the table's store only —
-            # object-store-clean (lake/store.py)
+            # object-store-clean (lake/store.py); a numeric same-family
+            # compare (stream-10 vs stream-9 would mis-sort lexicographically)
             for d in self.table.store.list_dirs(root):
-                if not d.startswith("queue-"):
-                    continue
-                # numeric sequence compare (stream-10 vs stream-9 would mis-sort
-                # lexicographically), same-family only
-                other = self._epoch_index(d[len("queue-"):])
-                same_family = d[len("queue-"):].startswith("stream-") == str(
-                    epoch_id
-                ).startswith("stream-")
-                if other is not None and mine is not None and same_family and other < mine:
+                ofam, other = _family_index(d[len("queue-"):])
+                if d.startswith("queue-") and fam is not None and ofam == fam and other < mine:
                     self.table.store.remove(os.path.join(root, d))
 
         return ok.select(*feed_cols), retried, n_park, n_expired, cleanup
@@ -641,9 +569,10 @@ class CdcEngine:
         per_bucket = {int(r[BUCKET_COL]): (r["lo"], r["hi"], r["n"]) for r in rows}
         return per_bucket, sum(r["n"] for r in rows)
 
-    def _write_lineage(self, epoch_id, lo, hi, per_bucket, res: EpochResult):
+    def _write_lineage(self, per_bucket, res: EpochResult):
         """Append per-partition lineage rows, idempotently (dir named by epoch —
         rewriting it on a replayed epoch is a no-op by content)."""
+        epoch_id = res.epoch_id
         rows = [
             (
                 epoch_id, int(b), int(blo), int(bhi), int(n),
@@ -654,7 +583,7 @@ class CdcEngine:
         # epoch-level totals ride on partition_id = -1
         rows.append(
             (
-                epoch_id, -1, lo, hi, res.rows_in,
+                epoch_id, -1, res.lo_lsn, res.hi_lsn, res.rows_in,
                 res.rows_applied, res.rows_deleted, res.conflict_count,
                 res.rows_skipped, res.expired,
             )

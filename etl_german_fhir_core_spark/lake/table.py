@@ -87,12 +87,14 @@ def _key_join(df: DataFrame, keys: DataFrame, cols: list[str], how: str) -> Data
 
 
 def _family_index(epoch_id: str) -> tuple[str | None, int | None]:
-    """(family, sequence index) of an epoch id — the batch planner's e000042 and
-    streaming's stream-42 form deterministic contiguous per-family sequences
-    (CdcEngine._epoch_index is the engine-side twin). Maintenance markers commit
-    under ``<epoch>/<suffix>`` and order at their base epoch's index. Non-sequence
-    ids (e.g. 'bulk', ad-hoc test epochs) return (None, None) and always live in
-    the explicit ledger tail."""
+    """(family, sequence index) of an epoch id — the ONE epoch-id grammar, for
+    the ledger and the epoch manager alike (:func:`_epoch_name` is its
+    inverse). The batch planner's e000042 and streaming's stream-42 form
+    deterministic contiguous per-family sequences, which the bounded ledger,
+    the retry queue and the every-k-th maintenance cadences key on.
+    Maintenance markers commit under ``<epoch>/<suffix>`` and order at their
+    base epoch's index. Non-sequence ids (e.g. 'bulk', ad-hoc test epochs)
+    return (None, None) and always live in the explicit ledger tail."""
     base = str(epoch_id).split("/", 1)[0]
     if base.startswith("e") and base[1:].isdigit():
         return "e", int(base[1:])
@@ -104,6 +106,12 @@ def _family_index(epoch_id: str) -> tuple[str | None, int | None]:
         # settles them — every id <= the recorded position is applied
         return "cdf", int(base[len("cdf-"):])
     return None, None
+
+
+def _epoch_name(family: str, idx: int) -> str:
+    """The id of sequence position ``idx`` in ``family`` (e000042, stream-42,
+    cdf-42) — what :func:`_family_index` parses back."""
+    return f"e{idx:06d}" if family == "e" else f"{family}-{idx}"
 
 
 class SnapshotExpiredError(ValueError):
@@ -120,6 +128,7 @@ class MergeResult:
     rows_upserted: int = 0
     rows_deleted: int = 0
     conflict_count: int = 0
+    rows_merged: int = 0  # batch rows that reached the LWW resolution
     snapshot_id: int | None = None
 
 
@@ -164,9 +173,12 @@ class SnapshotTable:
         files_per_bucket: int = 1,
         stats_cols: list[str] | None = None,
         merge_mode: str = "cow",
+        store=None,
     ) -> "SnapshotTable":
         """Create an empty table (snapshot 0). ``order_cols`` is the LWW total order
         (default ``[ts, _lsn]``) — must be total or replays diverge (SURVEY §7.3).
+        ``store`` (as for ``load`` and ``exists``) is the table's one store,
+        so the root snapshot's PUT-IF-ABSENT already goes through it.
 
         ``stats_cols`` (opt-in) lists columns whose per-bucket [min, max] are
         maintained in every manifest — Iceberg-manifest-style data skipping:
@@ -185,7 +197,7 @@ class SnapshotTable:
         :meth:`compact` folds the deltas back into the base. All other write
         paths (delete_where, expiry, replace, rebucket, overwrite) stay CoW
         and clear the buckets' deltas they rewrite."""
-        tbl = cls(spark, root)
+        tbl = cls(spark, root, store)
         if tbl.current_snapshot_id() is not None:
             raise FileExistsError(f"table already exists at {root}")
         names = [f.name for f in schema]
@@ -230,15 +242,15 @@ class SnapshotTable:
         return tbl
 
     @classmethod
-    def load(cls, spark: SparkSession, root: str) -> "SnapshotTable":
-        tbl = cls(spark, root)
+    def load(cls, spark: SparkSession, root: str, store=None) -> "SnapshotTable":
+        tbl = cls(spark, root, store)
         if tbl.current_snapshot_id() is None:
             raise FileNotFoundError(f"no table at {root}")
         return tbl
 
     @classmethod
-    def exists(cls, root: str) -> bool:
-        return cls(None, root).current_snapshot_id() is not None
+    def exists(cls, root: str, store=None) -> bool:
+        return cls(None, root, store).current_snapshot_id() is not None
 
     # ---------------------------------------------------------------- manifests
 
@@ -320,22 +332,9 @@ class SnapshotTable:
                     or head["order_cols"] != base["order_cols"]
                 ):
                     raise  # concurrent overwrite/re-key: not rebaseable
-                changed = {
-                    b
-                    for b in set(head["files"]) | set(base["files"])
-                    if head["files"].get(b) != base["files"].get(b)
-                }
-                # MoR: a bucket whose DELTA list moved was written too — an
-                # append-append race on one bucket is a conflict (relative
-                # _src order between the two deltas would be ambiguous)
-                changed |= {
-                    b
-                    for b in set(head.get("deltas", {}))
-                    | set(base.get("deltas", {}))
-                    if head.get("deltas", {}).get(b)
-                    != base.get("deltas", {}).get(b)
-                }
-                overlap = changed & touched_s
+                # MoR: an append-append race on one bucket's delta list is a
+                # conflict too (relative _src order would be ambiguous)
+                overlap = self._changed_buckets(base, head) & touched_s
                 if overlap:
                     raise CommitConflict(
                         f"concurrent writers rewrote the same bucket(s) "
@@ -366,6 +365,18 @@ class SnapshotTable:
                     **({"deltas": deltas} if "deltas" in head else {}),
                 )
                 base = head
+
+    @staticmethod
+    def _changed_buckets(ma: dict, mb: dict) -> set[str]:
+        """Buckets whose base file list or MoR delta list differs between
+        manifests ``ma`` and ``mb`` — the overlap a rebase refuses and the
+        scope a snapshot diff scans (a moved delta list is a change even over
+        identical base files)."""
+        out = set()
+        for part in ("files", "deltas"):
+            a, b = ma.get(part, {}), mb.get(part, {})
+            out |= {k for k in a.keys() | b.keys() if a.get(k) != b.get(k)}
+        return out
 
     def _union_schema_json(self, a_json: dict, b_json: dict) -> dict:
         """Additive union of two manifest schemas for rebase: both writers may
@@ -1170,7 +1181,11 @@ class SnapshotTable:
         defeat Parquet column pruning; measured 6x slower at high
         parallelism). Upserts/deletes count winners ``from_batch``; a conflict
         is a key that received >1 change in this batch (LWW losers), the
-        analog of the reference's overwritten delete-then-insert rows."""
+        analog of the reference's overwritten delete-then-insert rows; the
+        sum of ``_n_batch`` is every batch row the merge resolved — the epoch
+        manager derives its skip count from it. This is the one count the
+        epoch path reads: inside ``foreachBatch`` an Observation on the
+        merge's own write fires, where one on a pre-merge frame deadlocks."""
         obs = Observation(f"merge-{epoch_id}")
         winners = winners.observe(
             obs,
@@ -1179,6 +1194,7 @@ class SnapshotTable:
             F.sum(
                 F.when(F.col("_n_batch") > 1, F.col("_n_batch") - 1).otherwise(0)
             ).alias("conf"),
+            F.sum("_n_batch").alias("n"),
         )
         return winners, obs
 
@@ -1191,6 +1207,7 @@ class SnapshotTable:
             res.rows_upserted = int(c["up"] or 0)
             res.rows_deleted = int(c["del"] or 0)
             res.conflict_count = int(c["conf"] or 0)
+            res.rows_merged = int(c["n"] or 0)
         return res
 
     def _merge_mor(
@@ -1561,17 +1578,7 @@ class SnapshotTable:
         if ma["key_cols"] != mb["key_cols"]:
             raise ValueError("snapshots have different key columns")
         key_cols = mb["key_cols"]
-        changed = sorted(
-            int(b)
-            for b in set(ma["files"])
-            | set(mb["files"])
-            | set(ma.get("deltas", {}))
-            | set(mb.get("deltas", {}))
-            if ma["files"].get(str(b)) != mb["files"].get(str(b))
-            # MoR: a bucket whose delta list moved changed even if its base
-            # files are identical
-            or ma.get("deltas", {}).get(str(b)) != mb.get("deltas", {}).get(str(b))
-        )
+        changed = sorted(map(int, self._changed_buckets(ma, mb)))
         payload = [
             f.name
             for f in T.StructType.fromJson(mb["schema"])

@@ -562,11 +562,13 @@ def simhash_buckets(
     )
 
 
+# candidate-table budget of a SimHash plan: with the numpy kernel the table
+# count is a pure cost knob, and wide radii want hundreds of tables
+_SIMHASH_MAX_TABLES = 4096
+
+
 def _simhash_table_plan(
-    max_hamming: int,
-    group_size: int | None,
-    max_tables: int,
-    n_docs: int | None = None,
+    max_hamming: int, n_docs: int
 ) -> tuple[int, list[tuple[int, ...]]]:
     """Choose the Manku-style multi-table candidate construction for radius d:
     split the 64-bit signature into ``k = d + g`` blocks and key one candidate
@@ -577,58 +579,36 @@ def _simhash_table_plan(
     is g blocks ≈ 64·g/k bits wide, so bucket self-joins stay near-linear
     instead of collapsing to ~N²/2^w at narrow widths (VERDICT r03 wrong #1).
 
-    ``group_size=None`` auto-picks the smallest g whose composite key reaches
-    ≥16 bits within the ``max_tables`` budget (d=3 → g=1, 4 tables × 16-bit
-    keys; d=6 → g=2, 28 tables × 16-bit keys); when no g under budget reaches
-    16 bits (d ≥ ~9) it takes the widest affordable key — at those radii the
-    Hamming pre-filter in simhash_pairs is what bounds the verify set."""
+    g is a pure cost knob (every candidate pair ≤ radius d survives regardless
+    of g), chosen against ``n_docs`` under a budget of
+    ``_SIMHASH_MAX_TABLES`` tables: per table the kernel pays ~N·log2 N sort
+    work plus ~N²/2^w_avg collision popcounts (w_avg = g·64/(d+g) composite
+    key bits); the plan minimizes the sum over the feasible g values. A corpus
+    under two docs has no pair, and is planned as N=2."""
     from itertools import combinations
-    from math import comb
+    from math import comb, log2
 
     d = max_hamming
-    if group_size is not None:
-        g = group_size
-        if comb(d + g, g) > max_tables:
-            raise ValueError(
-                f"group_size={g} needs C({d + g},{g})={comb(d + g, g)} candidate "
-                f"tables > max_tables={max_tables}"
-            )
-    else:
-        feasible = [
-            g for g in range(1, 11) if comb(d + g, g) <= max_tables and d + g <= 64
-        ]
-        if not feasible:
-            raise ValueError(
-                f"no block-combination plan fits max_hamming={d}: even g=1 needs "
-                f"C({d + 1},1)={d + 1} candidate tables > max_tables={max_tables}; "
-                "raise max_tables or lower max_hamming"
-            )
-        if n_docs is not None and n_docs >= 2:
-            # r06 cost-based choice (every candidate pair ≤ radius d survives
-            # regardless of g — the plan only trades per-table work against
-            # block-collision volume, so g is a pure cost knob): per table the
-            # kernel pays ~N·log2 N sort work plus ~N²/2^w_avg collision
-            # popcounts (w_avg = g·64/(d+g) composite key bits). Minimize the
-            # sum over the feasible g values.
-            from math import log2
+    feasible = [
+        g
+        for g in range(1, 11)
+        if comb(d + g, g) <= _SIMHASH_MAX_TABLES and d + g <= 64
+    ]
+    if not feasible:
+        raise ValueError(
+            f"no block-combination plan fits max_hamming={d}: even g=1 needs "
+            f"{d + 1} blocks of the 64 signature bits and C({d + 1},1)={d + 1} "
+            f"candidate tables (budget {_SIMHASH_MAX_TABLES}); lower max_hamming"
+        )
+    n = float(max(n_docs, 2))
 
-            n = float(n_docs)
+    def cost(gg: int) -> float:
+        t = comb(d + gg, gg)
+        w = gg * 64.0 / (d + gg)
+        return t * n * (log2(n) + 3.0) + t * n * n / (2.0**w)
 
-            def cost(gg: int) -> float:
-                t = comb(d + gg, gg)
-                w = gg * 64.0 / (d + gg)
-                return t * n * (log2(n) + 3.0) + t * n * n / (2.0**w)
-
-            g = min(feasible, key=cost)
-        else:
-            wide = [g for g in feasible if g * (64 // (d + g)) >= 16]
-            g = wide[0] if wide else max(
-                feasible, key=lambda gg: gg * (64 // (d + gg))
-            )
-    k = d + g
-    if k > 64:
-        raise ValueError(f"max_hamming + group_size = {k} exceeds 64 signature bits")
-    return k, list(combinations(range(k), g))
+    g = min(feasible, key=cost)
+    return d + g, list(combinations(range(d + g), g))
 
 
 def _popcount64(x):
@@ -646,13 +626,7 @@ def _popcount64(x):
     return (x * h) >> np.uint64(56)
 
 
-def _simhash_candidates(
-    sigs: DataFrame,
-    max_hamming: int,
-    group_size: int | None,
-    max_tables: int,
-    n_docs: int | None = None,
-) -> DataFrame:
+def _simhash_candidates(sigs: DataFrame, max_hamming: int) -> DataFrame:
     """Candidate (id1, id2) pairs within Hamming radius ``max_hamming``:
     Manku-style block-combination tables guarantee recall (a pair within
     distance d leaves ≥ g of the d+g blocks untouched, so some whole
@@ -676,11 +650,9 @@ def _simhash_candidates(
 
     spark = sigs.sparkSession
     stage = _stage(sigs.select("doc", "simhash"))
-    if n_docs is None:
-        # parquet footer-count over the just-written stage — metadata-only,
-        # never recomputes the signature pipeline
-        n_docs = spark.read.parquet(stage).count()
-    k, combos = _simhash_table_plan(max_hamming, group_size, max_tables, n_docs)
+    # the plan's N is a parquet footer-count over the just-written stage —
+    # metadata-only, never recomputes the signature pipeline
+    k, combos = _simhash_table_plan(max_hamming, spark.read.parquet(stage).count())
     base, extra = divmod(64, k)
     widths = [base + (1 if i < extra else 0) for i in range(k)]
     offsets = [sum(widths[:i]) for i in range(k)]
@@ -769,15 +741,12 @@ def simhash_candidates(
     text_col: str,
     n: int = 3,
     max_hamming: int = 6,
-    group_size: int | None = None,
-    max_tables: int = 4096,
 ) -> DataFrame:
     """Hamming-filtered simhash candidate pairs (pre-verify) — the probe surface
     for candidate-volume measurement (bench.py compares this count against
-    minhash's candidate count at equal recall). ``max_tables`` default raised
-    in r06: with the kernel execution the table count is a pure cost knob
-    (the output is the exact Hamming ball for ANY plan), and wide radii
-    genuinely want hundreds of tables — the cost model picks.
+    minhash's candidate count at equal recall). The output is the exact
+    Hamming ball for ANY table plan; the cost model picks the plan
+    (:func:`_simhash_table_plan`).
 
     r06: no persist and no localCheckpoint — the signature pipeline runs
     exactly once into the kernel's staged side (the stage IS the
@@ -787,7 +756,7 @@ def simhash_candidates(
     single host (``local[...]`` or ``local-cluster[...]``); any other master
     raises."""
     sigs = simhash_buckets(df, id_col, text_col, n).select("doc", "simhash")
-    return _simhash_candidates(sigs, max_hamming, group_size, max_tables)
+    return _simhash_candidates(sigs, max_hamming)
 
 
 def simhash_pairs(
@@ -797,8 +766,6 @@ def simhash_pairs(
     n: int = 3,
     max_hamming: int = 6,
     verify_threshold: float = 0.5,
-    group_size: int | None = None,
-    max_tables: int = 4096,
 ) -> DataFrame:
     """Near-dup pairs via SimHash candidates + exact Jaccard verify — the
     end-to-end simhash pipeline (simhash_buckets emits the raw signatures).
@@ -818,7 +785,7 @@ def simhash_pairs(
     :func:`simhash_candidates` it needs a single-host session (``local[...]``
     or ``local-cluster[...]``); any other master raises."""
     sigs = simhash_buckets(df, id_col, text_col, n).select("doc", "simhash")
-    cand = _simhash_candidates(sigs, max_hamming, group_size, max_tables)
+    cand = _simhash_candidates(sigs, max_hamming)
     return _verify_pairs(df, id_col, text_col, n, cand, verify_threshold)
 
 

@@ -326,7 +326,9 @@ class AggFeedSync(ChangeFeedSync):
         ).distinct().persist()
         try:
             self.target.merge_replace_keys(
-                self._reaggregate(keys, self._to_snapshot(epoch_id)),
+                # cdf-<to>: re-aggregate AT the diff's `to` snapshot, never
+                # the advancing head, so a replayed sync is bit-identical
+                self._reaggregate(keys, _family_index(epoch_id)[1]),
                 keys,
                 epoch_id=epoch_id,
             )
@@ -352,14 +354,6 @@ class AggFeedSync(ChangeFeedSync):
         deltas = narrowed.groupBy(*self.group_cols).agg(*aggs)
         combine = {"n_rows": "sum", **{k: "sum" for k in self.sum_cols}}
         self.target.merge_agg(deltas, combine, epoch_id=epoch_id)
-
-    @staticmethod
-    def _to_snapshot(epoch_id: str) -> int:
-        """Source snapshot id a ``cdf-<n>`` consumer epoch corresponds to —
-        the re-aggregation must read the source AT this snapshot (never the
-        current head, which may have advanced) so a replayed sync derives
-        bit-identical state."""
-        return int(str(epoch_id).rsplit("-", 1)[1])
 
     def _reaggregate(self, keys, to_snapshot: int):
         """Authoritative per-group aggregates for the groups in ``keys``,

@@ -62,7 +62,6 @@ def stream_feed_into_table(
         rollups=list(rollups or []), projections=list(projections or []),
         cascades=list(cascades or []), compact_every=compact_every,
         expire_every=expire_every, tombstone_retention_sec=tombstone_retention_sec,
-        stream_safe_counts=True,
     )
 
     src = (

@@ -261,6 +261,88 @@ def test_retry_queue_late_references(spark, tmp_path):
     assert ("cZ", 5) not in state  # orphan dropped after max retries
 
 
+def test_retry_queue_lineage_counts_batch_and_stream(spark, tmp_path):
+    """Every epoch's lineage counters under dead letters, a drained late
+    reference and an orphan that expires after max_retries — pinned for the
+    batch engine (CoW target) and for stream_feed_into_table (MoR target):
+    one feed file per epoch, one file per micro-batch, so both paths see the
+    same epoch contents. rows_skipped counts dead letters plus expired rows."""
+    import datetime as dt
+    import os
+
+    from etl_german_fhir_core_spark.streaming import stream_feed_into_table
+
+    TS0 = dt.datetime(2025, 1, 1)
+    epochs = [
+        # cX:3 parks (no anchor); lsn 3 has no text -> dead letter
+        [(1, "I", "cX", 3, "user", "early child"), (2, "I", "cY", 0, "user", "anchor y"),
+         (3, "I", "cY", 1, "user", None)],
+        # cX's anchor lands (cX:3 retried and applied); the cZ:5 orphan parks
+        [(11, "I", "cX", 0, "user", "anchor x"), (12, "I", "cZ", 5, "user", "orphan")],
+        # a keyless row dead-letters; cZ:5 parks again
+        [(21, "I", "cY", 2, "user", "more y"), (22, "I", None, 1, "user", "no key")],
+        [(31, "U", "cY", 2, "user", "edit y")],
+        # cZ:5 reaches max_retries and expires
+        [(41, "D", "cY", 1, None, None)],
+    ]
+    feed_path = str(tmp_path / "feed")
+    for i, rows in enumerate(epochs):
+        spark.createDataFrame(
+            [(*r, None, TS0 + dt.timedelta(seconds=10 * i)) for r in rows],
+            "lsn long, op string, conv_id string, turn_idx int, role string, "
+            "text string, tool string, ts timestamp",
+        ).coalesce(1).write.mode("append").parquet(feed_path)
+    # (rows_in, rows_skipped, retried, parked, expired) per epoch
+    expected = [(3, 1, 0, 1, 0), (2, 0, 1, 1, 0), (2, 1, 1, 1, 0),
+                (1, 0, 1, 1, 0), (1, 1, 1, 0, 1)]
+
+    def counts(results):
+        return [(r.rows_in, r.rows_skipped, r.retried, r.parked, r.expired)
+                for r in results]
+
+    def lineage_totals(path):
+        lin = spark.read.parquet(path).where("partition_id = -1")
+        return sorted((r["epoch_id"], r["rows_in"], r["rows_skipped"],
+                       r["rows_expired"]) for r in lin.collect())
+
+    opts = dict(require_turn0=True, max_retries=3)
+    tbl = SnapshotTable.create(spark, str(tmp_path / "tbl"), TARGET_SCHEMA,
+                               ["conv_id", "turn_idx"], num_buckets=4)
+    eng = CdcEngine(spark, feed_path, tbl, epoch_rows=10,
+                    retry_path=str(tmp_path / "retry"),
+                    dead_letter_path=str(tmp_path / "dlq"),
+                    lineage_path=str(tmp_path / "lin"), **opts)
+    res = eng.run()
+    assert [r.epoch_id for r in res] == [f"e{i:06d}" for i in range(1, 6)]
+    assert counts(res) == expected
+    assert lineage_totals(str(tmp_path / "lin")) == [
+        (r.epoch_id, c[0], c[1], c[4]) for r, c in zip(res, expected)
+    ]
+
+    stbl = SnapshotTable.create(spark, str(tmp_path / "stbl"), TARGET_SCHEMA,
+                                ["conv_id", "turn_idx"], num_buckets=4,
+                                merge_mode="mor")
+    q = stream_feed_into_table(
+        spark, feed_path, stbl, str(tmp_path / "ckpt"), max_files_per_trigger=1,
+        retry_path=str(tmp_path / "sretry"),
+        dead_letter_path=str(tmp_path / "sdlq"),
+        lineage_path=str(tmp_path / "slin"), **opts,
+    )
+    q.awaitTermination()
+    sres = q._cdc_engine.results
+    assert [r.epoch_id for r in sres] == [f"stream-{i}" for i in range(5)]
+    assert counts(sres) == expected
+    assert lineage_totals(str(tmp_path / "slin")) == [
+        (r.epoch_id, c[0], c[1], c[4]) for r, c in zip(sres, expected)
+    ]
+    state = {(r["conv_id"], r["turn_idx"]) for r in tbl.read().collect()}
+    assert state == {("cX", 0), ("cX", 3), ("cY", 0), ("cY", 2)}
+    assert {(r["conv_id"], r["turn_idx"]) for r in stbl.read().collect()} == state
+    assert sorted(os.listdir(str(tmp_path / "sdlq"))) == [
+        f"epoch=stream-{i}" for i in range(5)
+    ]
+
+
 def test_retry_queue_survives_engine_restart(spark, tmp_path):
     """ADVICE r01 (medium): parked rows live in epoch-named queue dirs written
     BEFORE the manifest commit, so a kill after epoch 1 commits cannot lose them —

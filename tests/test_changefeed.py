@@ -35,9 +35,9 @@ def _batch(spark, rows):
     )
 
 
-def _mk(spark, root):
+def _mk(spark, root, store=None):
     return SnapshotTable.create(spark, root, SCHEMA, ["conv_id", "turn_idx"],
-                                num_buckets=4)
+                                num_buckets=4, store=store)
 
 
 def _live(tbl):
@@ -67,13 +67,13 @@ class _FailNthPut(LocalStore):
 
 def test_diff_stream_converges_exactly_once_across_crash(spark, tmp_path):
     src = _mk(spark, str(tmp_path / "src"))
-    tgt = _mk(spark, str(tmp_path / "tgt"))
+    # first put = position 1; second crashes
+    tgt = _mk(spark, str(tmp_path / "tgt"), store=_FailNthPut(fail_on=2))
     src.merge(_batch(spark, [
         ("U", i, f"c{i}", 0, f"v{i}", TS0 + dt.timedelta(seconds=i))
         for i in range(1, 6)
     ]), epoch_id="e000001")
 
-    tgt.store = _FailNthPut(fail_on=2)  # first put = position 1; second crashes
     sync = ChangeFeedSync(src, tgt, str(tmp_path / "state"))
     assert sync.sync_once() == [1]
     import pandas as pd
@@ -221,8 +221,10 @@ def test_agg_feed_delta_maintained_view(spark, tmp_path):
             T.StructField("sum_score", T.LongType(), True),
         ]
     )
+    # 3rd position write crashes
     tgt = SnapshotTable.create(spark, str(tmp_path / "agg"), agg_schema,
-                               ["conv_id"], num_buckets=4)
+                               ["conv_id"], num_buckets=4,
+                               store=_FailNthPut(fail_on=3))
 
     def _b(rows):
         return spark.createDataFrame(
@@ -247,7 +249,6 @@ def test_agg_feed_delta_maintained_view(spark, tmp_path):
             for r in tgt.read().filter(F.col("n_rows") > 0).collect()
         }
 
-    tgt.store = _FailNthPut(fail_on=3)  # 3rd position write crashes
     sync = AggFeedSync(src, tgt, str(tmp_path / "state"),
                        group_cols=["conv_id"],
                        sum_cols={"sum_score": "score"})
@@ -706,13 +707,13 @@ def test_crash_then_source_advance_replays_pinned_window_once(spark, tmp_path):
 
     src = SnapshotTable.create(spark, str(tmp_path / "src"), _SCORED,
                                ["conv_id", "turn_idx"], num_buckets=4)
-    rep = SnapshotTable.create(spark, str(tmp_path / "rep"), _SCORED,
-                               ["conv_id", "turn_idx"], num_buckets=4)
-    agg = SnapshotTable.create(spark, str(tmp_path / "agg"), _VIEW,
-                               ["conv_id"], num_buckets=4)
     # each consumer's second position write is lost
-    rep.store = _FailNthPut(fail_on=2)
-    agg.store = _FailNthPut(fail_on=2)
+    rep = SnapshotTable.create(spark, str(tmp_path / "rep"), _SCORED,
+                               ["conv_id", "turn_idx"], num_buckets=4,
+                               store=_FailNthPut(fail_on=2))
+    agg = SnapshotTable.create(spark, str(tmp_path / "agg"), _VIEW,
+                               ["conv_id"], num_buckets=4,
+                               store=_FailNthPut(fail_on=2))
     syncs = [
         ChangeFeedSync(src, rep, str(tmp_path / "rep_state")),
         _view_sync(src, agg, str(tmp_path / "agg_state")),

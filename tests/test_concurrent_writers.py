@@ -133,10 +133,9 @@ def test_disjoint_concurrent_commits_both_land(spark, tmp_path, write):
         _seed(spark, tbl_b, ka)
     rows_b = [("U", 2, kb, 0, "from-B", TS0)]
 
-    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.store = _LoseFirstRace(
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"), store=_LoseFirstRace(
         lambda: tbl_b.merge(_batch(spark, rows_b), epoch_id="e-live")
-    )
+    ))
     r = loser_write(spark, tbl_a, ka, "e-backfill")
     assert not r.skipped
 
@@ -158,10 +157,9 @@ def test_overlapping_buckets_still_conflict(spark, tmp_path):
     rows_a = [("U", 1, "cX", 0, "from-A", TS0)]
     rows_b = [("U", 2, "cX", 1, "from-B", TS0)]  # same conv -> same bucket
 
-    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.store = _LoseFirstRace(
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"), store=_LoseFirstRace(
         lambda: tbl_b.merge(_batch(spark, rows_b), epoch_id="e-live")
-    )
+    ))
     with pytest.raises(CommitConflict, match="same bucket"):
         tbl_a.merge(_batch(spark, rows_a), epoch_id="e-backfill")
     # the winner's commit is intact; the loser's epoch never landed
@@ -178,10 +176,9 @@ def test_duplicate_epoch_race_is_idempotent(spark, tmp_path, write):
     if seeded:
         _seed(spark, tbl_b, "cY")
 
-    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.store = _LoseFirstRace(
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"), store=_LoseFirstRace(
         lambda: loser_write(spark, tbl_b, "cY", "e1")
-    )
+    ))
     r = loser_write(spark, tbl_a, "cY", "e1")
     assert r.skipped
     # exactly one application of the epoch
@@ -205,8 +202,9 @@ def test_disjoint_concurrent_merge_agg_commits_both_land(spark, tmp_path):
         )
 
     fold(tbl_b, ka, 1, "e-seed")
-    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.store = _LoseFirstRace(lambda: fold(tbl_b, kb, 5, "e-live"))
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"), store=_LoseFirstRace(
+        lambda: fold(tbl_b, kb, 5, "e-live")
+    ))
     r = fold(tbl_a, ka, 2, "e-backfill")
     assert not r.skipped
     assert tbl_b.has_epoch("e-live") and tbl_b.has_epoch("e-backfill")
@@ -228,8 +226,8 @@ def test_disjoint_rebase_with_schema_evolution(spark, tmp_path):
         )
         tbl_b.merge(evolved, epoch_id="e-live")
 
-    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.store = _LoseFirstRace(_rival)
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"),
+                               store=_LoseFirstRace(_rival))
     tbl_a.merge(_batch(spark, [("U", 1, ka, 0, "from-A", TS0)]),
                 epoch_id="e-backfill")
 
@@ -256,9 +254,10 @@ def test_non_rebasing_writes_conflict_on_a_lost_race(spark, tmp_path, write):
     makes the write raise CommitConflict, and the rival stays the head. A
     rebased rename would have committed on top, unioning ``text`` back in."""
     tbl_b = _mk(spark, str(tmp_path / "t"))
-    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"))
-    tbl_a.store = _LoseFirstRace(lambda: tbl_b.merge(
-        _batch(spark, [("U", 2, "cB", 0, "from-B", TS0)]), epoch_id="e-live"))
+    tbl_a = SnapshotTable.load(spark, str(tmp_path / "t"), store=_LoseFirstRace(
+        lambda: tbl_b.merge(_batch(spark, [("U", 2, "cB", 0, "from-B", TS0)]),
+                            epoch_id="e-live")
+    ))
     with pytest.raises(CommitConflict):
         NON_REBASING[write](spark, tbl_a)
     head = tbl_b.manifest()

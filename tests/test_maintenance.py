@@ -282,11 +282,22 @@ def test_conditional_put_committer_race_and_fault(spark, tmp_path):
         SnapshotTable,
     )
 
-    # (1) race: exactly one winner per snapshot id
+    class _Recording(ConditionalPutCommitter):
+        def __init__(self, **kw):
+            super().__init__(**kw)
+            self.cas = []
+
+        def put_if_absent(self, path, data):
+            self.cas.append(os.path.basename(path))
+            super().put_if_absent(path, data)
+
+    # (1) race: exactly one winner per snapshot id. The store is the table's
+    # from create on: the root snapshot's PUT-IF-ABSENT goes through it
     tbl = SnapshotTable.create(
-        spark, str(tmp_path / "cas"), SCHEMA, ["conv_id", "turn_idx"], num_buckets=2
+        spark, str(tmp_path / "cas"), SCHEMA, ["conv_id", "turn_idx"], num_buckets=2,
+        store=_Recording(),
     )
-    tbl.store = ConditionalPutCommitter()
+    assert tbl.store.cas == ["snapshot-00000000.json"]
     base = tbl.manifest()
     winner = {**base, "snapshot_id": base["snapshot_id"] + 1,
               "parent_id": base["snapshot_id"], "epoch_id": "winner"}
@@ -296,18 +307,21 @@ def test_conditional_put_committer_race_and_fault(spark, tmp_path):
     with pytest.raises(CommitConflict):
         _put(tbl, loser)
     assert tbl.manifest()["epoch_id"] == "winner"
+    assert tbl.store.cas == [f"snapshot-0000000{i}.json" for i in (0, 1, 1)]
 
-    # (2) fault injection: first PUT lands but the client sees an error
+    # (2) fault injection: the merge's PUT (the store's second, after
+    # create's) lands but the client sees an error
     root2 = str(tmp_path / "cas_fault")
     tbl2 = SnapshotTable.create(
-        spark, root2, SCHEMA, ["conv_id", "turn_idx"], num_buckets=2
+        spark, root2, SCHEMA, ["conv_id", "turn_idx"], num_buckets=2,
+        store=ConditionalPutCommitter(fail_after_put=2),
     )
-    tbl2.store = ConditionalPutCommitter(fail_after_put=1)
     rows = [("I", i, f"c{i % 3}", i, f"t{i}", TS0) for i in range(20)]
     with pytest.raises(TimeoutError):
         tbl2.merge(_batch(spark, rows), epoch_id="e1")
     # at-least-once retry by a fresh writer: ledger says committed → no-op skip
-    tbl3 = SnapshotTable.load(spark, root2)
+    tbl3 = SnapshotTable.load(spark, root2, store=ConditionalPutCommitter())
+    assert SnapshotTable.exists(root2, store=tbl3.store)
     assert tbl3.merge(_batch(spark, rows), epoch_id="e1").skipped
     assert tbl3.read().count() == 20  # the faulted commit's data is fully live
 

@@ -191,11 +191,13 @@ def test_staged_kernels_refuse_a_multi_host_master(spark, monkeypatch):
 
 
 def test_simhash_table_plan_and_candidate_prefilter(spark):
-    """VERDICT r03 #1: (a) the auto plan picks ≥16-bit composite keys where the
-    table budget allows (d=6 → g=2: 28 tables of two 8-bit blocks; d=3 → g=1:
-    4 tables of 16-bit blocks); (b) the bit_count Hamming pre-filter makes the
-    candidate set EXACTLY the Hamming-ball pairs — guaranteed-recall blocks give
-    ⊇, the pre-filter gives ⊆."""
+    """VERDICT r03 #1: (a) the cost model's plan at a stated corpus size N
+    (d=6: g=1, 7 tables of ~9-bit blocks, at N=1000; g=2, 28 tables of two
+    8-bit blocks, at N=100000, where block collisions dominate; d=3: g=1, 4
+    tables of 16-bit blocks); a corpus under two docs still gets a plan, and
+    a radius no plan fits raises; (b) the bit_count Hamming pre-filter makes
+    the candidate set EXACTLY the Hamming-ball pairs — guaranteed-recall
+    blocks give ⊇, the pre-filter gives ⊆."""
     import itertools
 
     from etl_german_fhir_core_spark.operators.dedup import (
@@ -203,12 +205,15 @@ def test_simhash_table_plan_and_candidate_prefilter(spark):
         simhash_candidates,
     )
 
-    k, combos = _simhash_table_plan(6, None, 64)
+    k, combos = _simhash_table_plan(6, 1000)
+    assert (k, len(combos)) == (7, 7) and all(len(c) == 1 for c in combos)
+    k, combos = _simhash_table_plan(6, 100_000)
     assert (k, len(combos)) == (8, 28) and all(len(c) == 2 for c in combos)
-    k, combos = _simhash_table_plan(3, None, 64)
+    k, combos = _simhash_table_plan(3, 1000)
     assert (k, len(combos)) == (4, 4) and all(len(c) == 1 for c in combos)
+    assert _simhash_table_plan(6, 0) == _simhash_table_plan(6, 2)
     with pytest.raises(ValueError):
-        _simhash_table_plan(6, 4, max_tables=64)  # C(10,4)=210 > budget
+        _simhash_table_plan(64, 1000)  # 65 blocks exceed the 64 signature bits
 
     d = _docs(spark)
     sigs = {r["doc"]: r["simhash"] for r in simhash_buckets(d, "doc_id", "text").collect()}
