@@ -248,10 +248,14 @@ class CdcEngine:
             batch, epoch_id, replay
         )
         if not replay:
-            res.retried, res.parked, res.expired = retried, parked, expired
+            res.retried, res.parked, res.expired = sum(retried.values()), parked, expired
+            # the batch's buckets plus the retried rows': a superset of the
+            # merge input's (parked rows leave it), so under CoW a bucket
+            # whose rows all parked is rewritten unchanged — one bucket's
+            # rewrite, against a job that re-evaluates the anchor join
             mr = self.table.merge(
                 effective, epoch_id=epoch_id,
-                touched=None if self.require_turn0 else list(per_bucket),
+                touched=sorted(set(per_bucket) | set(retried)),
                 # normalization runs POST-resolution on winners only: at a 50%
                 # conflict rate that halves the regex work, and LWW ordering
                 # never depends on payload columns so resolution is unaffected
@@ -259,7 +263,7 @@ class CdcEngine:
             )
             # the merge resolved valid + retried − parked − expired rows, so
             # this is the dead letters plus the expired retries (dropped too)
-            res.rows_skipped = res.rows_in - mr.rows_merged + retried - parked
+            res.rows_skipped = res.rows_in - mr.rows_merged + res.retried - parked
             res.rows_applied = mr.rows_upserted
             res.rows_deleted = mr.rows_deleted
             res.conflict_count = mr.conflict_count
@@ -304,7 +308,8 @@ class CdcEngine:
         retry-queue union/park — shared with every derived table (ADVICE r02
         medium: feeding projections the raw batch silently diverged parent and
         children under dead_letter_path / require_turn0). Returns (frame,
-        retried, parked, expired, queue cleanup) — see _apply_retry_queue.
+        {bucket: retried rows}, parked, expired, queue cleanup) — see
+        _apply_retry_queue.
 
         ``replay=True`` re-derives the frame for an already-committed epoch
         without side effects that could clobber post-commit state (queue files
@@ -475,9 +480,12 @@ class CdcEngine:
         derived tables): the anchor check reads the table's PRE-epoch snapshot —
         the current snapshot already contains this epoch's merge, and a same-batch
         turn-0 delete would otherwise flip the anchor decision — and the existing
-        queue-<epoch_id> dir is left untouched (its content is authoritative)."""
+        queue-<epoch_id> dir is left untouched (its content is authoritative).
+
+        The retried rows come back counted per bucket, {bucket: n}: the merge
+        must cover their buckets too, and one aggregate learns both."""
         if not self.require_turn0:
-            return batch, 0, 0, 0, lambda: None
+            return batch, {}, 0, 0, lambda: None
         from pyspark.sql import types as T
 
         feed_cols = [c for c in batch.columns if c != "_retry_count"]
@@ -485,12 +493,13 @@ class CdcEngine:
             list(batch.schema) + [T.StructField("_retry_count", T.IntegerType(), True)]
         )
         prev_dir = self._prev_queue_dir(epoch_id)
-        retried = 0
+        retried = {}
         if prev_dir and self.table.store.dir_exists(prev_dir):
             # explicit schema: null-fills columns the queue predates (a feed whose
             # schema evolved mid-stream) and prunes ones it no longer carries
             parked_df = self.spark.read.schema(parked_schema).parquet(prev_dir)
-            retried = parked_df.count()
+            bucket = _bucket_expr(self.table.key_cols()[0], self.table.num_buckets())
+            retried = dict(parked_df.groupBy(bucket).count().collect())
             batch = batch.withColumn("_retry_count", F.lit(0)).unionByName(parked_df)
         else:
             batch = batch.withColumn("_retry_count", F.lit(0))
@@ -515,7 +524,7 @@ class CdcEngine:
         if replay:
             # counts are lineage-only (already recorded when the epoch first
             # committed) and the queue dir exists by invariant — no side effects
-            return ok.select(*feed_cols), 0, 0, 0, lambda: None
+            return ok.select(*feed_cols), {}, 0, 0, lambda: None
 
         # park/expire accounting in ONE agg over the missing frame (ADVICE r01 low:
         # rows dropped after max_retries must be counted, not vanish)

@@ -1,12 +1,15 @@
 """The one store behind every durable effect the lake publishes.
 
 A ``SnapshotTable`` reaches storage only through its ``store``: snapshot
-commits, manifest reads and listing, tags, the vacuum watermark and vacuum's
-garbage collection. The engine and the change-feed consumers use their table's
-store for their own restart state (the retry queue's generations, a
-consumer's position blob), and the REST cursor walk takes one directly.
+commits, manifest reads and listing, the listing of a finished stage (every
+write's new files, and vacuum's walk of old ones), tags, the vacuum watermark
+and vacuum's garbage collection. The engine and the change-feed consumers use
+their table's store for their own restart state (the retry queue's
+generations, a consumer's position blob), and the REST cursor walk takes one
+directly.
 Spark-written data (staged parquet, the retry queue's rows, lineage) keeps
-Spark's writer; the store covers what the engine itself publishes.
+Spark's writer; the store covers what the engine itself publishes, and lists
+what a stage write left.
 
 Operations, each with a direct object-store equivalent ("directories" are
 key prefixes there):

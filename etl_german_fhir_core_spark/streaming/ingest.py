@@ -23,61 +23,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_german_fhir_core_spark.cdc.engine import CdcEngine
-from etl_german_fhir_core_spark.lake import SnapshotTable
 
 
 def stream_feed_into_table(
     spark: SparkSession,
-    feed_path: str,
-    table: SnapshotTable,
+    engine: CdcEngine,
     checkpoint_path: str,
     schema=None,
     max_files_per_trigger: int = 4,
-    normalize: bool = True,
-    max_text_len: int | None = 32768,
-    lineage_path: str | None = None,
-    dead_letter_path: str | None = None,
-    retry_path: str | None = None,
-    require_turn0: bool = False,
-    max_retries: int = 3,
-    rollups: list | None = None,
-    projections: list | None = None,
-    cascades: list | None = None,
-    compact_every: int | None = None,
-    expire_every: int | None = None,
-    tombstone_retention_sec: float | None = None,
 ):
-    """Start (and return) the streaming query. Callers drive it with
-    ``q.processAllAvailable(); q.stop()`` for bounded feeds, or leave it running
-    for a live tail. Returns the StreamingQuery; the engine (with per-batch
-    EpochResults in ``.results``) is available as ``q._cdc_engine`` for tests."""
+    """Start (and return) the streaming query that tails ``engine.feed_path``
+    into ``engine.table`` through ``engine``'s full pipeline; its per-batch
+    EpochResults accumulate in ``engine.results``. Callers drive it with
+    ``q.processAllAvailable(); q.stop()`` for bounded feeds, or leave it
+    running for a live tail."""
     if schema is None:
-        schema = spark.read.parquet(feed_path).schema
-
-    engine = CdcEngine(
-        spark, feed_path, table,
-        normalize=normalize, max_text_len=max_text_len,
-        lineage_path=lineage_path, dead_letter_path=dead_letter_path,
-        retry_path=retry_path, require_turn0=require_turn0, max_retries=max_retries,
-        rollups=list(rollups or []), projections=list(projections or []),
-        cascades=list(cascades or []), compact_every=compact_every,
-        expire_every=expire_every, tombstone_retention_sec=tombstone_retention_sec,
-    )
+        schema = spark.read.parquet(engine.feed_path).schema
 
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_path)
+        .parquet(engine.feed_path)
     )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         engine.apply_stream_batch(batch, f"stream-{batch_id}")
 
-    q = (
+    return (
         src.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
     )
-    q._cdc_engine = engine
-    return q

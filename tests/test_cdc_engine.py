@@ -322,14 +322,15 @@ def test_retry_queue_lineage_counts_batch_and_stream(spark, tmp_path):
     stbl = SnapshotTable.create(spark, str(tmp_path / "stbl"), TARGET_SCHEMA,
                                 ["conv_id", "turn_idx"], num_buckets=4,
                                 merge_mode="mor")
+    seng = CdcEngine(spark, feed_path, stbl,
+                     retry_path=str(tmp_path / "sretry"),
+                     dead_letter_path=str(tmp_path / "sdlq"),
+                     lineage_path=str(tmp_path / "slin"), **opts)
     q = stream_feed_into_table(
-        spark, feed_path, stbl, str(tmp_path / "ckpt"), max_files_per_trigger=1,
-        retry_path=str(tmp_path / "sretry"),
-        dead_letter_path=str(tmp_path / "sdlq"),
-        lineage_path=str(tmp_path / "slin"), **opts,
+        spark, seng, str(tmp_path / "ckpt"), max_files_per_trigger=1
     )
     q.awaitTermination()
-    sres = q._cdc_engine.results
+    sres = seng.results
     assert [r.epoch_id for r in sres] == [f"stream-{i}" for i in range(5)]
     assert counts(sres) == expected
     assert lineage_totals(str(tmp_path / "slin")) == [
@@ -341,6 +342,54 @@ def test_retry_queue_lineage_counts_batch_and_stream(spark, tmp_path):
     assert sorted(os.listdir(str(tmp_path / "sdlq"))) == [
         f"epoch=stream-{i}" for i in range(5)
     ]
+
+
+def test_retried_rows_bucket_outside_the_next_batch(spark, tmp_path):
+    """A late reference parks in epoch 1; its anchor reaches the table through
+    another writer, and epoch 2's own batch touches none of its bucket. The
+    retried row still lands: the merge covers the retry queue's buckets as
+    well as the batch's (a staged bucket outside them is refused)."""
+    import datetime as dt
+
+    from etl_german_fhir_core_spark.lake.table import _bucket_expr
+
+    TS0 = dt.datetime(2025, 1, 1)
+    B = 8
+    names = [f"c{i}" for i in range(40)]
+    bucket = {
+        r["conv_id"]: r["b"]
+        for r in spark.createDataFrame([(n,) for n in names], "conv_id string")
+        .select("conv_id", _bucket_expr("conv_id", B).alias("b")).collect()
+    }
+    cx = names[0]
+    ca, cb = [n for n in names if bucket[n] != bucket[cx]][:2]
+    cols = ("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    events = [
+        (1, "I", cx, 3, "user", "late child", None, TS0),  # no anchor yet: parks
+        (2, "I", ca, 0, "user", "anchor a", None, TS0),
+        (3, "I", ca, 1, "user", "more a", None, TS0 + dt.timedelta(seconds=2)),
+        (4, "I", cb, 0, "user", "anchor b", None, TS0 + dt.timedelta(seconds=3)),
+    ]
+    side = (100, "I", cx, 0, "user", "anchor x", None, TS0 + dt.timedelta(seconds=1))
+    ddl = ("lsn long, op string, conv_id string, turn_idx int, role string, "
+           "text string, tool string, ts timestamp")
+    feed_path = str(tmp_path / "feed")
+    spark.createDataFrame(events, ddl).coalesce(1).write.parquet(feed_path)
+
+    tbl = SnapshotTable.create(spark, str(tmp_path / "tbl"), TARGET_SCHEMA,
+                               ["conv_id", "turn_idx"], num_buckets=B)
+    eng = CdcEngine(spark, feed_path, tbl, epoch_rows=2, normalize=False,
+                    require_turn0=True, retry_path=str(tmp_path / "retry"))
+    (r1,) = eng.run(max_epochs=1)
+    assert (r1.epoch_id, r1.parked) == ("e000001", 1)
+    tbl.merge(spark.createDataFrame([side], ddl), epoch_id="side")
+    r2 = eng.run()[-1]
+    assert (r2.epoch_id, r2.retried, r2.parked) == ("e000002", 1, 0)
+
+    expected = replay_oracle(pd.DataFrame([*events, side], columns=cols))
+    got = _final_state(tbl)
+    out = ["conv_id", "turn_idx", "role", "text", "ts"]
+    pd.testing.assert_frame_equal(got[out], expected[out], check_dtype=False)
 
 
 def test_retry_queue_survives_engine_restart(spark, tmp_path):

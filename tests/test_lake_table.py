@@ -169,6 +169,30 @@ def test_untouched_buckets_not_rewritten(spark, tmp_path):
             assert after[b] == fs  # carried forward by reference, not rewritten
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_refuses_staged_bucket_outside_touched(spark, tmp_path, mode):
+    """A caller-supplied ``touched`` that misses a bucket the batch writes is
+    refused before anything commits: the manifest takes only the touched
+    buckets' files, so committing would drop the other bucket's rows."""
+    tbl = SnapshotTable.create(
+        spark, str(tmp_path / "t"), _schema(), ["conv_id", "turn_idx"],
+        num_buckets=8, merge_mode=mode,
+    )
+    rows = [("I", i, f"c{i}", 0, "user", f"t{i}", TS0) for i in range(20)]
+    tbl.merge(_batch(spark, rows), epoch_id="1")
+    sid, state = tbl.current_snapshot_id(), _state(tbl)
+    upd = _batch(spark, [("U", 100 + i, f"c{i}", 0, "user", "upd", TS0 + dt.timedelta(1))
+                         for i in range(20)])
+    from etl_german_fhir_core_spark.lake.table import _touched_buckets
+
+    touched = _touched_buckets(upd, "conv_id", 8)
+    assert len(touched) > 1
+    with pytest.raises(ValueError, match="outside the touched set"):
+        tbl.merge(upd, epoch_id="2", touched=touched[:1])
+    assert tbl.current_snapshot_id() == sid
+    assert _state(tbl) == state and not tbl.has_epoch("2")
+
+
 def test_salted_staging_spreads_hot_bucket(spark, tmp_path):
     """files_per_bucket > 1: a hot conversation's bucket is written as multiple
     files by parallel tasks (north rule: salted repartitioning for hot conv_id),
@@ -681,7 +705,9 @@ def test_snapshot_tags_pin_through_vacuum(spark, tmp_path):
 def test_table_has_no_raw_file_io():
     """lake/table.py reaches storage only through its store: no raw file call
     and no shutil import, so paths the runtime store tripwire
-    (test_retry_queue_side_paths_are_store_clean) never drives stay covered."""
+    (test_retry_queue_side_paths_are_store_clean) never drives stay covered.
+    A stage is listed through the store too: no ``.inputFiles()`` call and no
+    AnalysisException import (the classification that listing needed)."""
     import ast
     import pathlib
 
@@ -694,10 +720,15 @@ def test_table_has_no_raw_file_io():
     for node in ast.walk(tree):
         if isinstance(node, ast.Call) and ast.unparse(node.func) in banned:
             found.append((ast.unparse(node.func), node.lineno))
+        elif isinstance(node, ast.Attribute) and node.attr == "inputFiles":
+            found.append((ast.unparse(node), node.lineno))
         elif isinstance(node, ast.Import):
             found += [(a.name, node.lineno) for a in node.names
                       if a.name.split(".")[0] == "shutil"]
         elif isinstance(node, ast.ImportFrom) and node.module in ("os", "shutil"):
             found += [(f"{node.module}.{a.name}", node.lineno) for a in node.names
                       if node.module == "shutil" or a.name in raw]
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            found += [(a.name, node.lineno) for a in node.names
+                      if a.name.split(".")[-1] == "AnalysisException"]
     assert not found, found

@@ -114,30 +114,31 @@ def test_noop_expiry_commits_ledger_marker(spark, tmp_path):
 
 
 def test_staged_files_narrow_exception_handling(spark, tmp_path):
-    """ADVICE r03 medium: _staged_files maps ONLY genuinely-empty-stage
-    conditions (missing path / schema-inference failure on an empty dir) to {};
-    any transient read failure re-raises — a manifest must never commit empty
-    file lists for touched buckets because of a blip."""
+    """ADVICE r03 medium: _staged_files maps ONLY a genuinely empty stage to
+    {}; a store failure while listing propagates — a manifest must never
+    commit empty file lists for touched buckets because of a blip."""
     import pytest
+
+    from etl_german_fhir_core_spark.lake.store import LocalStore
 
     tbl = SnapshotTable.create(
         spark, str(tmp_path / "t"), SCHEMA, ["conv_id", "turn_idx"], num_buckets=2
     )
     # genuinely missing stage dir → empty mapping
     assert tbl._staged_files("data/no-such-stage") == {}
+    # a stage whose writer left no bucket dir (only _SUCCESS) → empty mapping
+    os.makedirs(str(tmp_path / "t" / "data" / "empty"))
+    open(str(tmp_path / "t" / "data" / "empty" / "_SUCCESS"), "w").close()
+    assert tbl._staged_files("data/empty") == {}
 
-    # transient failure (not an AnalysisException) → re-raised, not swallowed
-    class _BoomReader:
-        def parquet(self, *_a, **_k):
-            raise RuntimeError("transient fs failure")
+    # transient store failure → re-raised, not swallowed
+    class _BoomStore(LocalStore):
+        def list_dirs(self, path):
+            raise OSError("transient store failure")
 
-    class _BoomSpark:
-        read = _BoomReader()
-
-    broken = SnapshotTable(spark, str(tmp_path / "t"))
-    broken.spark = _BoomSpark()
-    with pytest.raises(RuntimeError, match="transient fs failure"):
-        broken._staged_files("data/whatever")
+    broken = SnapshotTable(spark, str(tmp_path / "t"), store=_BoomStore())
+    with pytest.raises(OSError, match="transient store failure"):
+        broken._staged_files("data/empty")
 
 
 def test_crash_mid_merge_leaves_no_corruption(spark, tmp_path):

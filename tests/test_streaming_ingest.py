@@ -5,7 +5,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import types as T
 
-from etl_german_fhir_core_spark.cdc import replay_oracle, synth_feed
+from etl_german_fhir_core_spark.cdc import CdcEngine, replay_oracle, synth_feed
 from etl_german_fhir_core_spark.lake import SnapshotTable
 from etl_german_fhir_core_spark.streaming import stream_feed_into_table
 
@@ -31,7 +31,8 @@ def test_stream_ingest_matches_oracle_and_resumes(spark, tmp_path):
     tbl = SnapshotTable.create(spark, root, SCHEMA, ["conv_id", "turn_idx"], num_buckets=8)
     ckpt = str(tmp_path / "ckpt")
 
-    q = stream_feed_into_table(spark, feed_path, tbl, ckpt, max_files_per_trigger=2)
+    eng = CdcEngine(spark, feed_path, tbl)
+    q = stream_feed_into_table(spark, eng, ckpt, max_files_per_trigger=2)
     q.awaitTermination()
     # several micro-batches; the bounded ledger settles all but the newest
     # batch, so count via watermark + tail (stream batch ids start at 0)
@@ -42,9 +43,11 @@ def test_stream_ingest_matches_oracle_and_resumes(spark, tmp_path):
 
     # restart from checkpoint: no new files → no new commits, state unchanged
     sid = tbl.current_snapshot_id()
-    q2 = stream_feed_into_table(spark, feed_path, tbl, ckpt, max_files_per_trigger=2)
+    eng2 = CdcEngine(spark, feed_path, tbl)
+    q2 = stream_feed_into_table(spark, eng2, ckpt, max_files_per_trigger=2)
     q2.awaitTermination()
     assert tbl.current_snapshot_id() == sid
+    assert eng2.results == []
 
     # state equivalence vs global-LWW oracle (normalization is idempotent on this
     # feed's text except whitespace collapse — apply the same mapping)
@@ -127,15 +130,17 @@ def test_stream_engine_parity_lineage_dlq_rollups(spark, tmp_path):
 
     # streaming engine on the identical feed
     tbl_s, roll_s = _mk("stream")
-    q = stream_feed_into_table(
-        spark, feed_path, tbl_s, str(tmp_path / "ckpt_par"),
-        max_files_per_trigger=1,
+    eng_s = CdcEngine(
+        spark, feed_path, tbl_s,
         lineage_path=str(tmp_path / "lin_stream"),
         dead_letter_path=str(tmp_path / "dlq_stream"),
         rollups=[RollupSpec(table=roll_s, partial=_rollup_partial, mode="state")],
     )
+    q = stream_feed_into_table(
+        spark, eng_s, str(tmp_path / "ckpt_par"), max_files_per_trigger=1
+    )
     q.awaitTermination()
-    assert len(q._cdc_engine.results) >= 2  # several micro-batches ran
+    assert len(eng_s.results) >= 2  # several micro-batches ran
 
     def _sorted(df, cols):
         return df.toPandas().sort_values(cols, kind="mergesort").reset_index(drop=True)
@@ -215,13 +220,14 @@ def test_stream_retry_queue_across_microbatches(spark, tmp_path):
         spark, str(tmp_path / "tbl_retry"), SCHEMA, ["conv_id", "turn_idx"],
         num_buckets=4,
     )
-    q = stream_feed_into_table(
-        spark, feed_path, tbl, str(tmp_path / "ckpt_retry"),
-        max_files_per_trigger=1, require_turn0=True,
+    eng = CdcEngine(
+        spark, feed_path, tbl, require_turn0=True,
         retry_path=str(tmp_path / "retry_q"),
     )
+    q = stream_feed_into_table(
+        spark, eng, str(tmp_path / "ckpt_retry"), max_files_per_trigger=1
+    )
     q.awaitTermination()
-    eng = q._cdc_engine
     assert len(eng.results) >= 2
     keys = sorted(
         (r["conv_id"], r["turn_idx"])
